@@ -17,6 +17,10 @@ runs: round 3's bench showed a uniform ~1.9x sandbox-contention
 multiplier on untouched queries, and a single noisy run must not
 masquerade as a plan regression (or hide one). Override with
 SPARK_GRAFT_BENCH_REPEATS=1 for a quick pass.
+
+BENCH_DETAIL.json also records each query's exact work counters (jobs,
+stages, shuffle-write bytes, task CPU) and where the run happened;
+regressions are gated on those counters, not on wall time.
 """
 
 from __future__ import annotations
@@ -27,7 +31,8 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, REPO)
 
 from mit_map_reduce_spark.catalog import drain_build_events
 from mit_map_reduce_spark.session import get_spark
@@ -218,12 +223,14 @@ HEADLINE = (
 )
 
 
-def bench_mr_facade_wc(spark) -> tuple[float, int]:
+def bench_mr_facade_wc(spark, work: _WorkCounters) -> tuple[float, int, dict]:
     """Reference-surface benchmark: the MapReduce facade running wc
     over an 8-file ~3 MB text corpus — the reference's own flagship
     workload and scale (8 pg-*.txt files, 3.3 MB, bound <= 45 s with 3
     workers; reference src/main/test-mr.sh:51,87-99). Corpus text comes
     from the documents table, doubled to match the reference's bytes.
+
+    Returns (median seconds, row count, median work counters).
     """
     import hashlib
     import tempfile
@@ -260,13 +267,15 @@ def bench_mr_facade_wc(spark) -> tuple[float, int]:
             os.rename(tmp, corpus)
         except OSError:
             shutil.rmtree(tmp, ignore_errors=True)
-    runs = []
+    work.read()  # the corpus build is not the workload
+    runs, counted = [], []
     for _ in range(REPEATS):
         t0 = time.time()
         df = run_job(spark, wc_map, wc_reduce, [os.path.join(corpus, "pg-*.txt")], n_reduce=10)
         n = df.count()
         runs.append(time.time() - t0)
-    return round(sorted(runs)[len(runs) // 2], 3), n
+        counted.append(work.read())
+    return round(sorted(runs)[len(runs) // 2], 3), n, _median_counters(counted)
 
 
 def _round_no(repo: str) -> int:
@@ -283,157 +292,83 @@ def _round_no(repo: str) -> int:
     return (max(rounds) + 1) if rounds else 1
 
 
-#: Accepted regressions: query -> one-line justification. A headline
-#: query >2x slower than the newest round-stamped baseline (and >0.3 s
-#: absolute) FAILS tests/test_bench_gate.py unless it has an entry
-#: here — a HITS-class regression (round 6: 0.22 s -> 3.06 s, caught
-#: only by the judge) can no longer ship silently. Add an entry only
-#: with the reason a slower plan is the right plan (e.g. a scale-unsafe
-#: shortcut was removed); delete it once the baseline absorbs the cost.
-#: The special key "__uniform_drift__" accepts a run whose MEDIAN drift
-#: exceeds what the calibration probe corroborates (see
-#: _report_regressions). Its note MUST start with "<=X.Y" — the max
-#: median ratio the entry accepts — so a stale entry can never silently
-#: normalize a LARGER later regression (an unbounded entry would have
-#: disabled the codebase-wide-slowdown gate forever); follow with the
-#: known environment-wide cause.
-BENCH_ALLOWLIST: dict[str, str] = {
-    # (empty — the round-8 watch-outlier entries for
-    # graph_modularity_report / sim_embedding_gram_matrix were dropped
-    # in round 9: BENCH_DETAIL_r08 was stamped WITH the drifted times,
-    # so per the delete-once-absorbed rule above the entries had become
-    # redundant and would only have masked a future real regression.)
+#: Accepted counter rises: query -> one-line justification. A headline
+#: query whose work counters rose against the newest round-stamped
+#: baseline (see _report_regressions) FAILS tests/test_bench_gate.py
+#: unless it has an entry here — a HITS-class regression (round 6:
+#: 0.22 s -> 3.06 s, caught only by the judge) can no longer ship
+#: silently. Add an entry only with the reason the costlier plan is the
+#: right plan (e.g. a scale-unsafe shortcut was removed); delete it once
+#: the baseline absorbs the cost.
+BENCH_ALLOWLIST: dict[str, str] = {}
+
+#: Status-store retention for the bench session. Spark keeps 1000 jobs
+#: and 1000 stages by default and evicts the oldest; an evicted stage
+#: would make its run's ``stages`` undercount. At sf0.1 on 4 cores one
+#: session submits ~4k jobs (1102 per headline pass, three passes, plus
+#: 31 build runs of at most 62 jobs), so 20000 holds the whole session
+#: and no read depends on when Spark evicts.
+_RETENTION = {
+    "spark.ui.retainedJobs": "20000",
+    "spark.ui.retainedStages": "20000",
 }
 
 
-def _calibration_probe(spark) -> float:
-    """Fixed synthetic shuffle micro-job, independent of every
-    registered query AND of the testdata: 4M-row in-memory range ->
-    hash shuffle on 10k keys -> aggregate. Its cost moves with the
-    machine/JVM environment (CPU contention, GC pressure), not with
-    repo code, so the regression gate uses its ratio vs the stamped
-    baseline to decide how much uniform drift a run may normalize
-    away. A codebase-wide REAL slowdown (a session-factory conf
-    change, AQE accidentally off) leaves the probe flat and now
-    gates instead of reading as environment drift (round-7 verdict
-    item 2)."""
-    from pyspark.sql import functions as F
+class _WorkCounters:
+    """Exact work counters of the Spark jobs submitted since the last
+    ``read()``: jobs, non-skipped stages, shuffle-write bytes and
+    executor task CPU, from the in-process status store (live with the
+    UI disabled). Jobs are attributed by a job-id watermark, not by job
+    group: a stream's micro-batch jobs run under the stream thread's own
+    group, which the caller's group misses. Read outside the timed
+    interval."""
 
-    runs = []
-    for _ in range(3):
-        t0 = time.time()
-        (
-            spark.range(4_000_000)
-            .selectExpr("id % 10000 AS k", "id AS v")
-            .groupBy("k")
-            .agg(F.sum("v").alias("s"))
-            # final 1-row reduction CONSUMES s, so column pruning cannot
-            # drop the per-key sum and quietly shrink the probe to a
-            # distinct-keys count (count() over the groupBy would).
-            .agg(F.sum("s"))
-            .collect()
-        )
-        runs.append(time.time() - t0)
-    return round(sorted(runs)[1], 3)
+    def __init__(self, spark) -> None:
+        self._sc = spark.sparkContext._jsc.sc()
+        self._store = self._sc.statusStore()
+        self._seen = -1
+        self.read()  # jobs submitted before construction belong to no query
 
-
-#: ~256 MB uncompressed (4 x 8-byte columns): big enough that a cold
-#: read is disk-bound and a warm read is memory-bandwidth-bound, small
-#: enough to regenerate in ~2 s and never pressure /tmp.
-_IO_PROBE_ROWS = 8_000_000
-
-
-def _io_probe() -> tuple[float, float] | None:
-    """Cold + warm parquet scan of a fixed ~256 MB probe file — the
-    I/O / page-cache axis the CPU shuffle probe is blind to (r13
-    verdict: a 14% same-code suite swing shipped with a FASTER CPU
-    probe; a CPU-only probe cannot corroborate an I/O-shaped
-    environment change). Cold evicts the file's pages with
-    posix_fadvise(POSIX_FADV_DONTNEED) before each read, so it moves
-    with disk throughput; warm re-reads page-cache-resident bytes, so
-    it moves with memory bandwidth + decode CPU. Median of 3 each,
-    pyarrow reads (no Spark scheduling noise). Deterministic content,
-    regenerated only when missing; uncompressed so bytes-on-disk ==
-    bytes-scanned. Returns (cold_sec, warm_sec), or None where the
-    fadvise/pyarrow machinery is unavailable (non-POSIX)."""
-    try:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        fadvise = os.posix_fadvise
-        dontneed = os.POSIX_FADV_DONTNEED
-    except (ImportError, AttributeError):
-        return None
-    import tempfile
-
-    # Row count in the name versions the probe file: if _IO_PROBE_ROWS
-    # or the schema ever changes, the stale file from an older code
-    # version misses the name and is regenerated instead of silently
-    # skewing the ratio against the stamped baseline (r14 ADVICE). A
-    # size check guards the remaining staleness surface (schema edits
-    # at an unchanged row count) and truncated partial files from a
-    # same-name writer under another uid.
-    path = os.path.join(
-        tempfile.gettempdir(), f"mmrs_io_probe_v1_{_IO_PROBE_ROWS}.parquet"
-    )
-    min_bytes = _IO_PROBE_ROWS * 28  # 4 cols x 8B, minus parquet framing slack
-    if os.path.exists(path) and os.path.getsize(path) < min_bytes:
-        os.remove(path)
-    if not os.path.exists(path):
-        ids = np.arange(_IO_PROBE_ROWS, dtype=np.int64)
-        tbl = pa.table(
-            {
-                "id": ids,
-                "a": ids * 31,
-                "x": ids * 0.5,
-                "y": np.sqrt(ids.astype(np.float64)),
-            }
-        )
-        pq.write_table(tbl, path + ".tmp", compression="none")
-        os.replace(path + ".tmp", path)
-    # freshly written pages are DIRTY and DONTNEED skips them — flush
-    # once so every eviction below actually empties the cache
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-    def evict() -> None:
-        fd = os.open(path, os.O_RDONLY)
-        try:
-            fadvise(fd, 0, 0, dontneed)
-        finally:
-            os.close(fd)
-
-    def scan() -> float:
-        t0 = time.time()
-        pq.read_table(path)
-        return time.time() - t0
-
-    colds, warms = [], []
-    for _ in range(3):
-        evict()
-        colds.append(scan())
-    for _ in range(3):
-        warms.append(scan())
-    return round(sorted(colds)[1], 3), round(sorted(warms)[1], 3)
+    def read(self) -> dict:
+        # stage metrics reach the store on the listener-bus thread
+        self._sc.listenerBus().waitUntilEmpty()
+        jobs, stage_ids, newest = 0, set(), self._seen
+        it = self._store.jobsList(None).iterator()  # newest job first
+        while it.hasNext():
+            job = it.next()
+            if job.jobId() <= self._seen:
+                break
+            jobs += 1
+            newest = max(newest, job.jobId())
+            sids = job.stageIds().iterator()
+            while sids.hasNext():
+                stage_ids.add(sids.next())
+        self._seen = newest
+        stages = shuffle = cpu_ns = 0
+        for sid in stage_ids:
+            s = self._store.lastStageAttempt(sid)
+            if s.status().toString() == "SKIPPED":
+                continue
+            stages += 1
+            shuffle += s.shuffleWriteBytes()
+            cpu_ns += s.executorCpuTime()
+        return {
+            "jobs": jobs,
+            "stages": stages,
+            "shuffle_write_bytes": shuffle,
+            "cpu_s": round(cpu_ns / 1e9, 3),
+        }
 
 
-#: Max uniform drift the gate will normalize away when the stamped
-#: baseline predates the calibration probe and can't corroborate it.
-_UNCORROBORATED_DRIFT_CAP = 1.3
-
-#: Slack multiplied onto the probe ratio: the probe is a single plan
-#: shape, individual queries drift a bit more/less than it does.
-_PROBE_SLACK = 1.25
+def _median_counters(runs: list[dict]) -> dict:
+    """Per-counter median over the runs that make up a timing median."""
+    return {k: sorted(r[k] for r in runs)[len(runs) // 2] for k in runs[0]}
 
 
 def _newest_stamped_detail(repo: str) -> tuple[int, dict] | None:
     """(round, parsed JSON) of the newest BENCH_DETAIL_r{N}.json, or
     None when no stamp exists or it fails to parse."""
-    import glob  # noqa: local to the two stamp scanners
+    import glob
 
     stamped = sorted(
         (int(m.group(1)), p)
@@ -450,207 +385,76 @@ def _newest_stamped_detail(repo: str) -> tuple[int, dict] | None:
         return None
 
 
-def _report_cold_build_drift(repo: str, cold_builds: dict[str, list]) -> None:
-    """Advisory stderr note when a shared-artifact build got >2x slower
-    than the newest stamped sidecar recorded. Build runs are excluded
-    from the gated medians (they are once-per-session costs), so this
-    is the only place a fixpoint/index build regression surfaces in a
-    bench log. Advisory only: build timings carry the full cold-JVM
-    variance, so a gate here would flake."""
-    newest = _newest_stamped_detail(repo)
-    if newest is None:
-        return
-    rnd, detail = newest
-    # stamps are always sf0.1; a run at any other SF would make every
-    # build read as drift (larger SF) or mask real drift (smaller) —
-    # same guard as _report_regressions
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    if str(detail.get("sf")) != sf and str(detail.get("sf")) != str(
-        float(sf) if sf.replace(".", "").isdigit() else sf
-    ):
-        return
-    prev = detail.get("cold_artifact_builds", {})
-    # per-artifact max build-run seconds across queries, both rounds
-    def flat(cb: dict[str, list]) -> dict[str, float]:
-        out: dict[str, float] = {}
-        for evs in cb.values():
-            for e in evs:
-                for a in e["artifacts"]:
-                    out[a] = max(out.get(a, 0.0), e["sec"])
-        return out
+def _report_regressions(repo: str, counters: dict[str, dict], env: dict) -> list[str]:
+    """Diff this run's work counters against the newest round-stamped
+    detail file. The regressions worth gating are plan changes — an
+    extra shuffle, a lost broadcast, an eager second job — and they move
+    jobs, stages and shuffle bytes exactly, while same-code wall time on
+    a shared machine spread up to 2.3x; so wall is reported, never
+    gated. A query regresses when its jobs or non-skipped stages rise at
+    all, its shuffle-write bytes rise by more than 5%, or its task CPU
+    exceeds twice the stamp's by more than 0.3 s (same-code task CPU
+    spread up to 1.75x).
 
-    base, cur = flat(prev), flat(cold_builds)
-    for art, sec in sorted(cur.items()):
-        b = base.get(art)
-        if b and b > 0.5 and sec > 2.0 * b:
-            print(
-                f"# COLD-BUILD DRIFT (advisory) vs r{rnd}: {art} "
-                f"{b:.2f}s -> {sec:.2f}s",
-                file=sys.stderr,
-            )
-    # Long rank: labels hash the full plan text, so a plan-text shift
-    # (column rename, Spark bump) silently renames the artifact and
-    # its drift coverage lapses — surface the lapse instead (r11
-    # advice): any baseline label not built this run gets a note.
-    missing = sorted(set(base) - set(cur))
-    if missing:
-        print(
-            f"# cold-build drift note vs r{rnd}: {len(missing)} baseline "
-            f"artifact label(s) not built this run (plan-text hash shift "
-            f"or retired artifact — per-artifact drift coverage lapsed): "
-            f"{missing}",
-            file=sys.stderr,
-        )
-
-
-def _report_regressions(
-    repo: str,
-    timings: dict[str, float],
-    probe_sec: float | None = None,
-    io_probe: tuple[float, float] | None = None,
-) -> list[str]:
-    """Diff this run against the newest round-stamped detail file and
-    flag queries >1.5x slower (and >0.3 s absolute, so toy-scale noise
-    on 50 ms queries doesn't alarm) — regressions like round 3's
-    environment slowdown or a re-plan cost get caught at the source,
-    not two rounds later in a verdict.
-
-    Returns the GATE list: queries >2x slower with no BENCH_ALLOWLIST
+    Returns the GATE list: regressed queries with no BENCH_ALLOWLIST
     justification. main() records it in BENCH_DETAIL.json where
     tests/test_bench_gate.py fails on any entry."""
     newest = _newest_stamped_detail(repo)
     if newest is None:
         return []
     rnd, prev = newest
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    if str(prev.get("sf")) != sf and str(prev.get("sf")) != str(
-        float(sf) if sf.replace(".", "").isdigit() else sf
-    ):
-        print(
-            f"# regression check skipped: baseline r{rnd} ran at sf={prev.get('sf')}",
-            file=sys.stderr,
-        )
-        return []
-    base = prev.get("queries", {})
-    # Environment normalization: round 3 measured a UNIFORM ~1.9x
-    # sandbox-contention multiplier on untouched queries. A plan
-    # regression is a query slower than its PEERS' drift, so the gate
-    # scales every baseline by the run's median ratio (clamped >= 1 —
-    # a faster environment must not hide absolute regressions). Noisy
-    # sub-50 ms queries are excluded from the median estimate.
-    ratios = sorted(
-        t / base[q]
-        for q, t in timings.items()
-        if q in base and base[q] > 0.05
-    )
-    median = max(1.0, ratios[len(ratios) // 2]) if ratios else 1.0
-    # ... but normalization must be CORROBORATED: a real uniform
-    # regression (session-conf change, AQE off) is also uniform and
-    # would otherwise self-normalize (round-7 verdict item 2). The
-    # calibration probe's drift bounds how much the gate may absorb;
-    # anything beyond it gates as __uniform_drift__ unless explicitly
-    # allowlisted.
-    # Two probe axes (r13 verdict: the CPU probe got FASTER while the
-    # same-code suite got 14% slower — an I/O- or page-cache-shaped
-    # swing is invisible to a shuffle micro-job). The drift the gate
-    # may absorb is bounded by the WORST-drifting axis: an environment
-    # change on either axis corroborates; a flat probe set on both
-    # axes means a uniform slowdown is the code's fault.
-    env_ratios = []
-    base_probe = prev.get("calibration_probe_sec")
-    if probe_sec and base_probe:
-        env_ratios.append(probe_sec / base_probe)
-    if io_probe:
-        base_io_c = prev.get("io_probe_cold_sec")
-        base_io_w = prev.get("io_probe_warm_sec")
-        if base_io_c:
-            env_ratios.append(io_probe[0] / base_io_c)
-        if base_io_w:
-            env_ratios.append(io_probe[1] / base_io_w)
-    if env_ratios:
-        # Floored at the uncorroborated cap: the probes are themselves
-        # noisy measurements, and an unluckily FAST probe must not
-        # shrink the tolerance below what a probe-less baseline gets
-        # (mild ~1.25x drift would otherwise false-fire the gate).
-        cap = max(_UNCORROBORATED_DRIFT_CAP, max(env_ratios) * _PROBE_SLACK)
+    base, base_env = prev.get("counters"), prev.get("environment", {})
+    if not base:
+        skip = "has no work counters"
     else:
-        cap = _UNCORROBORATED_DRIFT_CAP
-    scale = min(median, cap)
-    uniform_drift_gated = False
-    if median > cap:
-        # An allowlist entry accepts uniform drift only up to its
-        # declared "<=X.Y" bound: within it, normalize FULLY by the
-        # median (so per-query gates don't all fire against the capped
-        # baseline, which would demand one entry per query); beyond it
-        # — or with a malformed bound — the entry does not apply, so a
-        # stale entry can never absorb a larger later regression.
-        note = BENCH_ALLOWLIST.get("__uniform_drift__", "")
-        # Strict numeric group: a malformed bound like "<=." or
-        # "<=1.2.3" must mean entry-does-not-apply, not a float()
-        # ValueError crash (round-8 advice).
-        m = re.match(r"<=\s*([0-9]+(?:\.[0-9]+)?)(?![0-9.])", note)
-        if m and median <= float(m.group(1)):
-            scale = median
-            print(
-                f"# uniform drift {median:.2f}x vs r{rnd} accepted via "
-                f"BENCH_ALLOWLIST: {note}",
-                file=sys.stderr,
-            )
-        else:
-            uniform_drift_gated = True
-            print(
-                f"# UNCORROBORATED UNIFORM DRIFT: median ratio {median:.2f}x vs "
-                f"r{rnd} exceeds the calibration-probe cap {cap:.2f}x — "
-                "normalization capped; a codebase-wide slowdown is suspected",
-                file=sys.stderr,
-            )
-    elif scale > 1.2:
-        print(
-            f"# environment drift: median ratio {scale:.2f}x vs r{rnd} "
-            "(probe-corroborated); baselines scaled accordingly",
-            file=sys.stderr,
+        # shuffle widths scale with defaultParallelism and volumes with
+        # the SF, so counters only compare at equal cores and SF
+        skip = ", ".join(
+            f"ran at {k}={base_env.get(k)}"
+            for k in ("cores", "sf")
+            if base_env.get(k) != env[k]
         )
-    flagged = [
-        (q, base[q] * scale, t)
-        for q, t in sorted(timings.items())
-        if q in base
-        and base[q] > 0
-        and t > 1.5 * base[q] * scale
-        and t - base[q] * scale > 0.3
-    ]
-    for q, b, t in flagged:
-        print(f"# REGRESSION vs r{rnd}: {q} {b:.2f}s -> {t:.2f}s", file=sys.stderr)
-    if not flagged:
+    if skip:
+        print(f"# regression check skipped: baseline r{rnd} {skip}", file=sys.stderr)
+        return []
+    gate = []
+    for q, c in sorted(counters.items()):
+        b = base.get(q)
+        if b is None:
+            continue
+        why = [f"{k} {b[k]} -> {c[k]}" for k in ("jobs", "stages") if c[k] > b[k]]
+        if c["shuffle_write_bytes"] > 1.05 * b["shuffle_write_bytes"]:
+            why.append(
+                f"shuffle_write_bytes {b['shuffle_write_bytes']} -> "
+                f"{c['shuffle_write_bytes']}"
+            )
+        if c["cpu_s"] > 2.0 * b["cpu_s"] and c["cpu_s"] - b["cpu_s"] > 0.3:
+            why.append(f"cpu_s {b['cpu_s']} -> {c['cpu_s']}")
+        if not why:
+            continue
+        tag = " (allowlisted)" if q in BENCH_ALLOWLIST else ""
+        print(f"# REGRESSION vs r{rnd}{tag}: {q} {'; '.join(why)}", file=sys.stderr)
+        if not tag:
+            gate.append(q)
+    if not gate:
         print(f"# no regressions vs BENCH_DETAIL_r{rnd:02d}.json", file=sys.stderr)
-    gate = [
-        q
-        for q, b, t in flagged
-        if t > 2.0 * b and q not in BENCH_ALLOWLIST
-    ]
-    if uniform_drift_gated:
-        gate.append("__uniform_drift__")
-    for q in gate:
-        print(f"# REGRESSION-GATE (>2x, unexplained): {q}", file=sys.stderr)
     return gate
 
 
 def _median_excluding_builds(
-    name: str, fn, spark, cold_builds: dict[str, list], retry: bool = False
-) -> tuple[float, list[float], int]:
+    name: str, fn, spark, work: _WorkCounters, cold_builds: dict[str, list]
+) -> tuple[float, list[float], int, dict]:
     """Median of ``REPEATS`` runs with once-per-session shared-artifact
     BUILD runs excluded (an extra run taken in their place, capped at
-    REPEATS+2 attempts; excluded and cap-overflow runs are recorded in
-    ``cold_builds``, the sidecar's ``cold_artifact_builds``).
+    REPEATS+2 attempts; excluded and cap-overflow runs are recorded,
+    with their work counters, in ``cold_builds``, the sidecar's
+    ``cold_artifact_builds``).
 
-    The ONE exclusion protocol, shared by the headline loop and
-    confirm-by-retry — the r11 retry loop lacked it entirely because it
-    was a hand-kept copy (r11 advice); ``retry`` only tags the sidecar
-    entries and stderr lines.
-
-    Returns (median, runs, last row count).
+    Returns (median, runs, last row count, median work counters of the
+    runs in the median).
     """
-    tag = "retry " if retry else ""
     runs: list[float] = []
+    counted: list[dict] = []
     n = 0
     attempts = 0
     while len(runs) < REPEATS:
@@ -658,16 +462,15 @@ def _median_excluding_builds(
         t0 = time.time()
         n = fn(spark, SF_DIR).count()
         dt = time.time() - t0
+        c = work.read()
         built = drain_build_events()
         if built:
-            ev: dict = {"sec": round(dt, 3), "artifacts": [b[0] for b in built]}
-            if retry:
-                ev["retry"] = True
+            ev: dict = {"sec": round(dt, 3), "artifacts": [b[0] for b in built], **c}
             if attempts < REPEATS + 2:
                 cold_builds.setdefault(name, []).append(ev)
                 arts = ", ".join(f"{b[0]} {b[1]:.2f}s" for b in built)
                 print(
-                    f"# {tag}{name}: excluded {dt:.2f}s cold run "
+                    f"# {name}: excluded {dt:.2f}s cold run "
                     f"(built shared artifacts: {arts})",
                     file=sys.stderr,
                 )
@@ -678,20 +481,23 @@ def _median_excluding_builds(
             ev["included_in_median"] = True
             cold_builds.setdefault(name, []).append(ev)
             print(
-                f"# {tag}{name}: attempt cap reached — {dt:.2f}s run "
+                f"# {name}: attempt cap reached — {dt:.2f}s run "
                 f"INCLUDED in median despite building "
                 f"{[b[0] for b in built]}",
                 file=sys.stderr,
             )
         runs.append(dt)
-    return sorted(runs)[len(runs) // 2], runs, n
+        counted.append(c)
+    return sorted(runs)[len(runs) // 2], runs, n, _median_counters(counted)
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
 
+    from mit_map_reduce_spark.streaming import queries as stream_queries
+
     queries = entrymod.queries()
-    spark = get_spark("mmrs_bench")
+    spark = get_spark("mmrs_bench", extra_conf=_RETENTION)
 
     # Warm-up: JVM JIT + parquet reader path, on the 5-row region table
     # (not a headline input), the way a resident query service would be.
@@ -713,17 +519,10 @@ def main() -> None:
         _noop, "id long, x double"
     ).count()
 
-    probe_sec = _calibration_probe(spark)
-    print(f"# calibration probe: {probe_sec:.3f}s", file=sys.stderr)
-    io_probe = _io_probe()
-    if io_probe:
-        print(
-            f"# io probe: cold {io_probe[0]:.3f}s warm {io_probe[1]:.3f}s",
-            file=sys.stderr,
-        )
-
     drain_build_events()  # warmups may have built artifacts; not ours to report
+    work = _WorkCounters(spark)
     timings: dict[str, float] = {}
+    counters: dict[str, dict] = {}
     cold_builds: dict[str, list] = {}
     for name in HEADLINE:
         fn = queries[name]
@@ -734,10 +533,17 @@ def main() -> None:
         # into the r7-r10 dedup_cluster_size_report ±50% oscillation.
         # _median_excluding_builds drops build runs from the median and
         # takes an extra run in their place (bounded; sidecar-labeled).
-        med, runs, n = _median_excluding_builds(name, fn, spark, cold_builds)
+        med, runs, n, counters[name] = _median_excluding_builds(
+            name, fn, spark, work, cold_builds
+        )
         timings[name] = round(med, 3)
         spread = " ".join(f"{r:.2f}" for r in runs)
-        print(f"# {name}: {timings[name]:.2f}s median of [{spread}] ({n} rows)", file=sys.stderr)
+        c = counters[name]
+        print(
+            f"# {name}: {timings[name]:.2f}s median of [{spread}] ({n} rows; "
+            f"{c['jobs']} jobs, {c['stages']} stages)",
+            file=sys.stderr,
+        )
 
     if cold_builds:
         total_cold = sum(e["sec"] for evs in cold_builds.values() for e in evs)
@@ -748,117 +554,54 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    dt, n = bench_mr_facade_wc(spark)
+    dt, n, counters["mr_facade_wordcount_3mb"] = bench_mr_facade_wc(spark, work)
     timings["mr_facade_wordcount_3mb"] = dt
     print(f"# mr_facade_wordcount_3mb: {dt:.2f}s ({n} rows; ref bound 45s)", file=sys.stderr)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
+    env = {
+        "cores": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
+        "spark_version": spark.version,
+        "sf": sf_val,
+        "stream_scratch_root": os.path.dirname(stream_queries._SCRATCH_BASE),
+    }
     full = {
         "metric": "headline_queries_total_wall_clock",
         "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "sf": sf_val,
-        "calibration_probe_sec": probe_sec,
+        "counters": counters,
+        "environment": env,
     }
-    if io_probe:
-        full["io_probe_cold_sec"], full["io_probe_warm_sec"] = io_probe
     if cold_builds:
         # Which timed runs were excluded as once-per-session shared-
-        # artifact builds, and what they built — so the cost stays
-        # visible in the sidecar even though it is outside the medians.
+        # artifact builds, and what they built and cost — so the cost
+        # stays visible in the sidecar even though it is outside the
+        # medians.
         full["cold_artifact_builds"] = cold_builds
-    repo = os.path.dirname(os.path.abspath(__file__))
     # Recorded in the detail sidecar so the pytest gate
     # (tests/test_bench_gate.py) fails the suite on any unexplained
-    # >2x regression; the stdout JSON line and exit code stay stable
-    # for the driver.
-    gate = _report_regressions(repo, timings, probe_sec, io_probe)
-    # Confirm-by-retry: a transient contention spike during ONE
-    # query's three runs inflates its median 2-4x while the
-    # calibration probe (measured at a different moment) stays flat,
-    # so neither the uniform-drift cap nor the median normalization
-    # catches it — a round-10 run gated mm_decode_assets /
-    # rel_q8_market_share / text_fingerprint, all UNTOUCHED that
-    # round, with within-query spreads like [3.73 2.63 1.62]. Before
-    # letting a flag stand, re-measure just the gated queries (the
-    # list is small by construction) and keep the better median: a
-    # real plan regression reproduces; noise does not.
-    retryable = [q for q in gate if q != "__uniform_drift__"]
-    if retryable:
-        print(
-            f"# re-measuring {len(retryable)} gated queries to rule out "
-            "transient contention",
-            file=sys.stderr,
-        )
-        # Both medians go in the sidecar so an intermittent-but-real
-        # regression that only sometimes reproduces stays visible
-        # across rounds even when min() clears the gate (r10 advice).
-        retried: dict[str, dict[str, float]] = {}
-        # Shared artifacts are normally warm by now, but an evicted or
-        # cache-cleared artifact would otherwise put a build run INSIDE
-        # the retry median — the exact noise the headline loop excludes
-        # (r11 advice). Same drain/exclude/attempt-cap protocol here.
-        drain_build_events()
-        for name in retryable:
-            orig = timings[name]
-            if name == "mr_facade_wordcount_3mb":
-                dt, _ = bench_mr_facade_wc(spark)
-                drain_build_events()
-                remeasured = dt
-            else:
-                fn = queries.get(name)
-                if fn is None:
-                    continue
-                remeasured, _, _ = _median_excluding_builds(
-                    name, fn, spark, cold_builds, retry=True
-                )
-            timings[name] = round(min(orig, remeasured), 3)
-            retried[name] = {"orig": orig, "remeasured": round(remeasured, 3)}
-            print(
-                f"# retry {name}: median {remeasured:.2f}s "
-                f"(kept {timings[name]:.2f}s)",
-                file=sys.stderr,
-            )
-        full["value"] = round(sum(timings.values()), 3)
-        full["retried"] = retried
-        if cold_builds:
-            # retry runs may have added build events after the sidecar
-            # key was (conditionally) set above
-            full["cold_artifact_builds"] = cold_builds
-        gate = _report_regressions(repo, timings, probe_sec, io_probe)
-    full["unexplained_regressions"] = gate
-    # Cold-build drift advisory AFTER confirm-by-retry, so a build that
-    # only happened during a retry (evicted artifact) is compared too —
-    # this advisory is the only place a fixpoint/index BUILD regression
-    # surfaces (r12 review: it previously ran before the retry section
-    # and missed retry-run builds entirely).
-    if cold_builds:
-        _report_cold_build_drift(repo, cold_builds)
-    # Full per-query detail: stderr + the sidecar file, printed AFTER
-    # confirm-by-retry so every artifact of one run agrees (r10
-    # advice). The driver's tail capture keeps only the last ~2000
-    # bytes of stdout, so the one stdout JSON line must stay short
-    # (round-4 verdict #2: the full ~5 kB line clipped the headline
-    # and BENCH_r04 parsed as null).
+    # counter regression; the stdout JSON line and exit code stay
+    # stable for the driver.
+    full["unexplained_regressions"] = _report_regressions(REPO, counters, env)
+    # The driver's tail capture keeps only the last ~2000 bytes of
+    # stdout, so the one stdout JSON line must stay short (round-4
+    # verdict #2: the full ~5 kB line clipped the headline and
+    # BENCH_r04 parsed as null); the full detail goes to stderr and
+    # the sidecar file.
     print(json.dumps(full), file=sys.stderr)
-    detail_path = os.path.join(repo, "BENCH_DETAIL.json")
-    with open(detail_path, "w") as f:
+    with open(os.path.join(REPO, "BENCH_DETAIL.json"), "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
-    # Round-stamped copy so the NEXT round has this round's numbers to
+    # Round-stamped copy so the NEXT round has this round's counters to
     # diff against (the unstamped file is overwritten every run). Only
     # the official SF stamps — a quick sf0.001 pass must not become a
-    # future round's baseline. SPARK_GRAFT_NO_STAMP suppresses the
-    # stamp for the runs tools/stamp_bench.py aggregates: the committed
-    # round stamp is a median-of-3 selected there (r13 verdict #3 —
-    # one run's stamp carried double-digit same-code environment
-    # spread into the next round's baseline).
-    if SF_DIR.rstrip("/").endswith("sf0.1") and not os.environ.get(
-        "SPARK_GRAFT_NO_STAMP"
-    ):
+    # future round's baseline.
+    if SF_DIR.rstrip("/").endswith("sf0.1"):
         with open(
-            os.path.join(repo, f"BENCH_DETAIL_r{_round_no(repo):02d}.json"), "w"
+            os.path.join(REPO, f"BENCH_DETAIL_r{_round_no(REPO):02d}.json"), "w"
         ) as f:
             json.dump(full, f, indent=1, sort_keys=True)
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])

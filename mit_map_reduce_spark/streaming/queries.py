@@ -48,6 +48,16 @@ from mit_map_reduce_spark.catalog import (
     table_path,
 )
 
+#: Free space /dev/shm must have before stream scratch goes there.
+#: Scratch is swept only at interpreter exit, so it grows with every
+#: drain a process runs: the 12 headline stream queries at sf0.1, three
+#: runs each in one process (one bench pass), peaked at 81 MB of
+#: allocated tmpfs blocks (61 MB of file bytes; 4 cores, Spark 4.1.2).
+#: 1 GiB is ~13x that peak; Docker's default 64 MB /dev/shm would not
+#: even hold one bench pass.
+_SHM_MIN_FREE_BYTES = 1 << 30
+
+
 def _stream_scratch_root() -> str:
     """Base dir for the per-run streaming scratch. Everything under it
     is process-unique and swept at interpreter exit, so DURABILITY has
@@ -62,12 +72,15 @@ def _stream_scratch_root() -> str:
     SPARK_GRAFT_SCRATCH_DIR first — a multi-node cluster MUST route
     scratch through shared storage (catalog.scratch_base contract) and
     a deployment that wants disk-backed checkpoints sets it explicitly;
-    the fast default only applies single-machine."""
+    the fast default only applies single-machine, and only while
+    /dev/shm has ``_SHM_MIN_FREE_BYTES`` free."""
     explicit = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
     if explicit:
         return explicit
     if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        return "/dev/shm"
+        st = os.statvfs("/dev/shm")
+        if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
+            return "/dev/shm"
     return scratch_base()
 
 

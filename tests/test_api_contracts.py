@@ -56,7 +56,7 @@ def test_bench_headline_names_are_registered():
     assert missing == [], missing
 
 
-def test_rotate_priority_orders_red_then_stalest(tmp_path, monkeypatch):
+def test_rotate_priority_orders_red_then_stalest(tmp_path, monkeypatch, capsys):
     # tools/rotate_priority.py encodes the standing per-round rule:
     # red-latest-driver-row queries first, then stalest vintage first,
     # ties keeping their current relative order; --check reports
@@ -121,6 +121,13 @@ def test_rotate_priority_orders_red_then_stalest(tmp_path, monkeypatch):
     assert names == ["q_red", "q_new", "q_never", "q_old_a", "q_old_b"]
     pin.write_text("q_typo\n")
     assert rotate_priority.main() == 2
+    # a missing value or an unreadable pin file is a usage error with a
+    # nonzero exit, not a traceback
+    capsys.readouterr()
+    for args in (["--pin-file"], ["--pin-file", str(tmp_path / "absent.txt")]):
+        monkeypatch.setattr(sys, "argv", ["rotate_priority.py", *args])
+        assert rotate_priority.main() == 2
+        assert "usage:" in capsys.readouterr().err
 
 
 def test_plan_snapshot_diff_flags_only_scale_regressions():

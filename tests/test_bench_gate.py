@@ -1,20 +1,23 @@
 """Bench-regression gate.
 
-bench.py diffs every run against the newest round-stamped
-BENCH_DETAIL_r{N}.json and records queries >2x slower with no
+bench.py reads each headline query's exact work counters (jobs,
+non-skipped stages, shuffle-write bytes, task CPU) from the status
+store, diffs them against the newest round-stamped
+BENCH_DETAIL_r{N}.json and records regressed queries with no
 BENCH_ALLOWLIST justification under ``unexplained_regressions`` in
 BENCH_DETAIL.json. Round 6 shipped a 13.8x regression
 (graph_hits_scores) that only the judge caught; this test makes that
 class of silent regression fail the suite instead.
 
-The test reads the LAST bench run's sidecar — it does not run the
-bench itself (the full sf0.1 pass takes ~2 min and belongs to the
-bench CLI, not the unit suite). It skips when no sidecar exists yet
-or when the sidecar predates the newest stamped baseline (there is
-nothing fresh to grade).
+test_no_unexplained_bench_regressions reads the LAST bench run's
+sidecar — it does not run the bench itself (the full sf0.1 pass takes
+minutes and belongs to the bench CLI, not the unit suite). It skips
+when no sidecar exists yet or when the sidecar predates the newest
+stamped baseline (there is nothing fresh to grade). The other tests run
+bench.main() at sf0.001 on one query in a tmp repo dir, or feed the
+gate synthetic sidecars.
 """
 
-import contextlib
 import glob
 import json
 import os
@@ -24,32 +27,10 @@ import shutil
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-@contextlib.contextmanager
-def _preserve_detail():
-    """Save/restore BENCH_DETAIL.json around a bench.main() call.
-
-    The sidecar is an untracked bench output — on a fresh checkout it
-    does not exist yet, so 'restore' means 'remove whatever the test's
-    bench run wrote' (the original shutil.copy-then-move pair crashed
-    with FileNotFoundError before the test body even ran). Yields the
-    sidecar path.
-    """
-    import bench
-
-    detail = os.path.join(os.path.dirname(bench.__file__), "BENCH_DETAIL.json")
-    saved = detail + ".test_saved"
-    existed = os.path.exists(detail)
-    if existed:
-        shutil.copy(detail, saved)
-    try:
-        yield detail
-    finally:
-        if existed:
-            shutil.move(saved, detail)
-        elif os.path.exists(detail):
-            os.remove(detail)
+COUNTERS = {"jobs", "stages", "shuffle_write_bytes", "cpu_s"}
+#: One grouped aggregation: a shuffle whose counters an injected
+#: repartition visibly moves.
+QUERY = "rel_q1_pricing_summary"
 
 
 def _newest_stamped() -> str | None:
@@ -77,8 +58,8 @@ def test_no_unexplained_bench_regressions():
     if "unexplained_regressions" not in d:
         pytest.skip("sidecar written by a pre-gate bench.py; rerun bench")
     assert d["unexplained_regressions"] == [], (
-        "headline queries regressed >2x vs the stamped baseline with no "
-        "BENCH_ALLOWLIST entry (see bench.py): "
+        "headline queries' work counters rose vs the stamped baseline with "
+        "no BENCH_ALLOWLIST entry (see bench.py): "
         f"{d['unexplained_regressions']}"
     )
 
@@ -88,227 +69,147 @@ def test_allowlist_entries_are_registered_queries():
 
     import __spark_entry__ as entrymod
 
-    unknown = (
-        set(bench.BENCH_ALLOWLIST) - set(entrymod.queries()) - {"__uniform_drift__"}
-    )
+    unknown = set(bench.BENCH_ALLOWLIST) - set(entrymod.queries())
     assert not unknown, f"BENCH_ALLOWLIST names unknown queries: {unknown}"
 
 
-def _write_baseline(tmp_path, probe=1.0):
-    import json
-
-    base = {f"q{i}": 1.0 for i in range(20)}
-    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
-        json.dumps({"queries": base, "sf": 0.1, "calibration_probe_sec": probe})
-    )
-
-
-def test_gate_normalizes_corroborated_uniform_drift(tmp_path, monkeypatch):
-    """Round 3 measured a uniform ~1.9x sandbox-contention multiplier;
-    when the calibration probe drifts WITH the queries, that must read
-    as environment drift (no flags), while an isolated regression on
-    top of the same drift must still gate."""
+def _quick_bench(mp, repo, headline=(QUERY,), repeats=1):
+    """Point bench.main() at a tmp repo dir, sf0.001 and a short
+    headline, so its sidecar and stamps land in ``repo``."""
     import bench
 
-    _write_baseline(tmp_path, probe=1.0)
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    uniform = {f"q{i}": 1.9 for i in range(20)}
-    # probe drifted 1.9x too -> corroborated, normalized away
-    assert bench._report_regressions(str(tmp_path), uniform, probe_sec=1.9) == []
-    mixed = dict(uniform)
-    mixed["q3"] = 5.0
-    assert bench._report_regressions(str(tmp_path), mixed, probe_sec=1.9) == ["q3"]
-    # a faster environment must not hide an absolute regression: clamp
-    # keeps the baseline at 1x, so q7 at 2.4x its baseline still gates.
-    fast = {f"q{i}": 0.5 for i in range(20)}
-    fast["q7"] = 2.4
-    assert bench._report_regressions(str(tmp_path), fast, probe_sec=0.5) == ["q7"]
+    mp.setattr(bench, "REPO", str(repo))
+    mp.setattr(bench, "SF_DIR", "/root/testdata/sf0.001")
+    mp.setattr(bench, "REPEATS", repeats)
+    mp.setattr(bench, "HEADLINE", list(headline))
 
 
-def test_gate_rejects_uncorroborated_uniform_drift(tmp_path, monkeypatch):
-    """A REAL codebase-wide slowdown (session-conf change, AQE off) is
-    also uniform — but the engine-independent calibration probe stays
-    flat, so the gate must NOT self-normalize it away (round-7 verdict
-    item 2): it caps the scale and emits __uniform_drift__."""
+def _detail(repo) -> dict:
+    return json.loads((repo / "BENCH_DETAIL.json").read_text())
+
+
+@pytest.fixture(scope="module")
+def bench_baseline(tmp_path_factory):
+    """One bench.main() pass over QUERY in a tmp repo dir, stamped as
+    that dir's round-1 baseline. Returns (repo dir, sidecar)."""
     import bench
 
-    _write_baseline(tmp_path, probe=1.0)
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    uniform = {f"q{i}": 1.9 for i in range(20)}
-    gate = bench._report_regressions(str(tmp_path), uniform, probe_sec=1.0)
-    assert "__uniform_drift__" in gate
-    # ... unless explicitly allowlisted with a "<=X.Y"-bounded cause —
-    # which must accept the drift FULLY: even a 2.8x uniform run (far
-    # above the per-query 2x threshold against a capped baseline)
-    # produces no per-query gates, and an isolated regression on top
-    # of the accepted drift still gates.
-    monkeypatch.setattr(
-        bench, "BENCH_ALLOWLIST", {"__uniform_drift__": "<=3.0 test: known cause"}
-    )
-    assert (
-        bench._report_regressions(str(tmp_path), uniform, probe_sec=1.0) == []
-    )
-    big = {f"q{i}": 2.8 for i in range(20)}
-    assert bench._report_regressions(str(tmp_path), big, probe_sec=1.0) == []
-    big["q3"] = 9.0
-    assert bench._report_regressions(str(tmp_path), big, probe_sec=1.0) == ["q3"]
-    # the entry is MAGNITUDE-BOUND: drift beyond its declared ratio
-    # still gates (a stale entry cannot absorb a larger regression),
-    # and an unbounded/malformed note never applies.
-    huge = {f"q{i}": 5.0 for i in range(20)}
-    assert "__uniform_drift__" in bench._report_regressions(
-        str(tmp_path), huge, probe_sec=1.0
-    )
-    monkeypatch.setattr(
-        bench, "BENCH_ALLOWLIST", {"__uniform_drift__": "no bound given"}
-    )
-    assert "__uniform_drift__" in bench._report_regressions(
-        str(tmp_path), uniform, probe_sec=1.0
-    )
-    # Malformed bounds ("<=." / "<=1.2.3") must mean does-not-apply,
-    # never a float() crash (round-8 advice).
-    for bad in ("<=. broken", "<=1.2.3 broken"):
-        monkeypatch.setattr(
-            bench, "BENCH_ALLOWLIST", {"__uniform_drift__": bad}
-        )
-        assert "__uniform_drift__" in bench._report_regressions(
-            str(tmp_path), uniform, probe_sec=1.0
-        )
-
-
-def test_gate_caps_drift_without_probe_baseline(tmp_path, monkeypatch):
-    """Stamped baselines that predate the probe can't corroborate
-    drift: normalization is capped at _UNCORROBORATED_DRIFT_CAP and a
-    1.9x uniform run gates rather than self-normalizing."""
-    import json
-
-    import bench
-
-    base = {f"q{i}": 1.0 for i in range(20)}
-    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
-        json.dumps({"queries": base, "sf": 0.1})  # no calibration_probe_sec
-    )
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    uniform = {f"q{i}": 1.9 for i in range(20)}
-    assert "__uniform_drift__" in bench._report_regressions(
-        str(tmp_path), uniform, probe_sec=1.9
-    )
-    # mild drift within the cap still normalizes fine
-    mild = {f"q{i}": 1.25 for i in range(20)}
-    assert bench._report_regressions(str(tmp_path), mild, probe_sec=1.25) == []
-
-
-def test_gate_io_probe_corroborates_io_shaped_drift(tmp_path, monkeypatch):
-    """r13 verdict: the CPU probe moved OPPOSITE to a 14% same-code
-    suite swing — an I/O- or page-cache-shaped environment change is
-    invisible to a shuffle micro-job. With the I/O probe stamped in
-    the baseline, uniform drift that the I/O axis corroborates (cold
-    scans slowed with the suite) must normalize even when the CPU
-    probe is flat; with BOTH axes flat it must still gate."""
-    import bench
-
-    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
-        json.dumps(
-            {
-                "queries": {f"q{i}": 1.0 for i in range(20)},
-                "sf": 0.1,
-                "calibration_probe_sec": 1.0,
-                "io_probe_cold_sec": 0.4,
-                "io_probe_warm_sec": 0.1,
-            }
-        )
-    )
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    uniform = {f"q{i}": 1.9 for i in range(20)}
-    # CPU probe flat (even slightly fast), but cold I/O slowed 1.9x
-    # with the suite -> corroborated, normalized away
-    assert (
-        bench._report_regressions(
-            str(tmp_path), uniform, probe_sec=0.95, io_probe=(0.76, 0.1)
-        )
-        == []
-    )
-    # ... and an isolated regression on top still gates
-    mixed = dict(uniform)
-    mixed["q3"] = 5.0
-    assert bench._report_regressions(
-        str(tmp_path), mixed, probe_sec=0.95, io_probe=(0.76, 0.1)
-    ) == ["q3"]
-    # the warm (page-cache/memory-bandwidth) axis corroborates too
-    assert (
-        bench._report_regressions(
-            str(tmp_path), uniform, probe_sec=0.95, io_probe=(0.4, 0.19)
-        )
-        == []
-    )
-    # all three axes flat -> a uniform slowdown is the code's fault
-    assert "__uniform_drift__" in bench._report_regressions(
-        str(tmp_path), uniform, probe_sec=1.0, io_probe=(0.4, 0.1)
-    )
-    # baseline without io keys: io_probe passed but ignored, CPU-only
-    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
-        json.dumps(
-            {
-                "queries": {f"q{i}": 1.0 for i in range(20)},
-                "sf": 0.1,
-                "calibration_probe_sec": 1.0,
-            }
-        )
-    )
-    assert "__uniform_drift__" in bench._report_regressions(
-        str(tmp_path), uniform, probe_sec=1.0, io_probe=(99.0, 99.0)
-    )
-
-
-def test_gate_probe_noise_cannot_shrink_tolerance(tmp_path, monkeypatch):
-    """An unluckily FAST probe must not tighten the cap below the
-    probe-less fallback: mild ~1.25x drift with a flat-or-fast probe
-    stays ungated."""
-    import bench
-
-    _write_baseline(tmp_path, probe=1.0)
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    mild = {f"q{i}": 1.25 for i in range(20)}
-    assert bench._report_regressions(str(tmp_path), mild, probe_sec=0.9) == []
-
-
-def test_gated_queries_are_confirmed_by_retry(monkeypatch, capsys):
-    """main()'s confirm-by-retry: a gate produced by transient
-    contention must not stand — flagged queries are re-measured and
-    the gate recomputed with the better medians (round 10: three
-    UNTOUCHED queries gated at 2-4x with consistent probe; the
-    re-run was clean). __uniform_drift__ is never retryable."""
-    import bench
-
-    calls = {"n": 0}
-
-    def fake_report(repo, timings, probe_sec=None, io_probe=None):
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return ["mr_wordcount", "__uniform_drift__"]
-        return []
-
-    with _preserve_detail() as detail:
-        monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.001")
-        monkeypatch.setattr(bench, "REPEATS", 1)
-        monkeypatch.setattr(bench, "HEADLINE", ["mr_wordcount"])
-        monkeypatch.setattr(bench, "_report_regressions", fake_report)
+    repo = tmp_path_factory.mktemp("bench_repo")
+    with pytest.MonkeyPatch.context() as mp:
+        _quick_bench(mp, repo)
         bench.main()
-        err = capsys.readouterr().err
-        assert "re-measuring 1 gated queries" in err
-        assert "retry mr_wordcount" in err
-        assert calls["n"] == 2  # gate recomputed after the retry
-        with open(detail) as f:
-            assert json.load(f)["unexplained_regressions"] == []
+    shutil.copy(repo / "BENCH_DETAIL.json", repo / "BENCH_DETAIL_r01.json")
+    return repo, _detail(repo)
 
 
-def test_cold_artifact_build_runs_excluded_from_median(monkeypatch, capsys):
+def test_bench_records_counters_and_environment(bench_baseline):
+    _, side = bench_baseline
+    assert set(side["counters"]) == {QUERY, "mr_facade_wordcount_3mb"}
+    for c in side["counters"].values():
+        assert set(c) == COUNTERS
+        assert c["jobs"] >= 1 and c["stages"] >= 1
+    assert side["counters"][QUERY]["shuffle_write_bytes"] > 0
+    env = side["environment"]
+    assert set(env) == {"cores", "master", "spark_version", "sf", "stream_scratch_root"}
+    assert env["sf"] == 0.001 and env["cores"] >= 1
+    # the baseline had no counters-bearing stamp to diff against
+    assert side["unexplained_regressions"] == []
+
+
+def test_unchanged_rerun_lists_nothing(bench_baseline, monkeypatch):
+    import bench
+
+    repo, base = bench_baseline
+    _quick_bench(monkeypatch, repo)
+    bench.main()
+    side = _detail(repo)
+    assert side["unexplained_regressions"] == []
+    for q in (QUERY, "mr_facade_wordcount_3mb"):
+        for k in ("jobs", "stages"):
+            assert side["counters"][q][k] == base["counters"][q][k], (q, k)
+
+
+def test_injected_shuffle_is_gated(bench_baseline, monkeypatch):
+    import bench
+
+    import __spark_entry__ as entrymod
+
+    repo, _ = bench_baseline
+    real_queries = entrymod.queries
+
+    def with_extra_shuffle():
+        qs = real_queries()
+        inner = qs[QUERY]
+        qs[QUERY] = lambda spark, sf_dir: inner(spark, sf_dir).repartition(7)
+        return qs
+
+    _quick_bench(monkeypatch, repo)
+    monkeypatch.setattr(entrymod, "queries", with_extra_shuffle)
+    bench.main()
+    assert _detail(repo)["unexplained_regressions"] == [QUERY]
+
+
+ENV = {"cores": 4, "sf": 0.1}
+BASE = {"jobs": 5, "stages": 9, "shuffle_write_bytes": 100_000, "cpu_s": 1.0}
+
+
+def _gate(tmp_path, cur: dict, base: dict | None = BASE, env: dict = ENV) -> list:
+    """Gate one query's counters ``cur`` against a synthetic stamp."""
+    import bench
+
+    stamp = {"environment": ENV, "counters": {"q": base} if base else None}
+    (tmp_path / "BENCH_DETAIL_r01.json").write_text(json.dumps(stamp))
+    return bench._report_regressions(str(tmp_path), {"q": dict(BASE, **cur)}, env)
+
+
+def test_gate_counter_bounds(tmp_path, monkeypatch):
+    """Any rise in jobs or stages gates; falls never do. Shuffle-write
+    bytes may rise by 5% and no more. An allowlisted query is reported
+    but not gated."""
+    import bench
+
+    assert _gate(tmp_path, {}) == []
+    assert _gate(tmp_path, {"jobs": 6}) == ["q"]
+    assert _gate(tmp_path, {"stages": 10}) == ["q"]
+    assert _gate(tmp_path, {"jobs": 4, "stages": 8, "shuffle_write_bytes": 0}) == []
+    assert _gate(tmp_path, {"shuffle_write_bytes": 105_000}) == []
+    assert _gate(tmp_path, {"shuffle_write_bytes": 105_001}) == ["q"]
+    monkeypatch.setattr(bench, "BENCH_ALLOWLIST", {"q": "test: extra shuffle justified"})
+    assert _gate(tmp_path, {"stages": 10}) == []
+
+
+def test_gate_cpu_bound_has_absolute_floor(tmp_path):
+    """Task CPU gates above twice the stamp's, but only when the excess
+    over the stamp is also above 0.3 s: same-code task CPU spread up to
+    1.75x, and sub-second queries would otherwise flake."""
+    assert _gate(tmp_path, {"cpu_s": 2.0}) == []
+    assert _gate(tmp_path, {"cpu_s": 2.01}) == ["q"]
+    small = dict(BASE, cpu_s=0.2)
+    assert _gate(tmp_path, {"cpu_s": 0.49}, base=small) == []  # 2.45x, +0.29 s
+    assert _gate(tmp_path, {"cpu_s": 0.51}, base=small) == ["q"]
+
+
+def test_gate_skips_incomparable_baseline(tmp_path, capsys):
+    """Counters compare only at equal cores and SF (shuffle widths scale
+    with defaultParallelism); a stamp without counters — every stamp up
+    to r17 — cannot be compared at all. Each skip leaves a stderr note."""
+    worse = {"jobs": 50, "stages": 90}
+    assert _gate(tmp_path, worse) == ["q"]
+    assert _gate(tmp_path, worse, env={"cores": 32, "sf": 0.1}) == []
+    assert "baseline r1 ran at cores=4" in capsys.readouterr().err
+    assert _gate(tmp_path, worse, env={"cores": 4, "sf": 0.01}) == []
+    assert "ran at sf=0.1" in capsys.readouterr().err
+    assert _gate(tmp_path, worse, base=None) == []
+    assert "has no work counters" in capsys.readouterr().err
+
+
+def test_cold_artifact_build_runs_excluded_from_median(tmp_path, monkeypatch, capsys):
     """A timed run that materializes a session-shared artifact is the
     once-per-session build, not the query: bench must exclude it from
     the median, take an extra run in its place, and record the event
-    (r10 verdict: the dedup CC fixpoint landing in run 1 of
-    dedup_cluster_size_report turned its median into max(two
-    post-build runs) — four rounds of ±50% oscillation)."""
+    with its work counters (r10 verdict: the dedup CC fixpoint landing
+    in run 1 of dedup_cluster_size_report turned its median into
+    max(two post-build runs) — four rounds of ±50% oscillation)."""
     import bench
     from mit_map_reduce_spark import catalog
 
@@ -331,24 +232,21 @@ def test_cold_artifact_build_runs_excluded_from_median(monkeypatch, capsys):
     import __spark_entry__ as entrymod
 
     real_queries = entrymod.queries
-    with _preserve_detail() as detail:
-        monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.001")
-        monkeypatch.setattr(bench, "REPEATS", 2)
-        monkeypatch.setattr(bench, "HEADLINE", ["mr_wordcount"])
-        monkeypatch.setattr(bench, "_report_regressions", lambda *a, **k: [])
-        monkeypatch.setattr(entrymod, "queries", wrapped_queries)
-        bench.main()
-        err = capsys.readouterr().err
-        assert "excluded" in err and "fake_artifact" in err
-        with open(detail) as f:
-            side = json.load(f)
-        builds = side["cold_artifact_builds"]["mr_wordcount"]
-        assert builds[0]["artifacts"] == ["fake_artifact"]
-        # median came from REPEATS clean runs: 3 total calls were made
-        # (1 cold excluded + 2 timed)
+    _quick_bench(monkeypatch, tmp_path, headline=["mr_wordcount"], repeats=2)
+    monkeypatch.setattr(bench, "_report_regressions", lambda *a, **k: [])
+    monkeypatch.setattr(entrymod, "queries", wrapped_queries)
+    bench.main()
+    err = capsys.readouterr().err
+    assert "excluded" in err and "fake_artifact" in err
+    side = _detail(tmp_path)
+    builds = side["cold_artifact_builds"]["mr_wordcount"]
+    assert builds[0]["artifacts"] == ["fake_artifact"]
+    # the excluded run carries the same counters as the timed ones
+    assert COUNTERS <= set(builds[0]) and builds[0]["jobs"] >= 1
+    assert builds[0]["jobs"] == side["counters"]["mr_wordcount"]["jobs"]
 
 
-def test_every_run_builds_falls_back_to_including_runs(monkeypatch, capsys):
+def test_every_run_builds_falls_back_to_including_runs(tmp_path, monkeypatch, capsys):
     """Attempt-cap fallback: a query that reports an artifact build on
     EVERY run (no registry hit — pathological, but the loop must
     terminate) still produces a median after REPEATS + 2 attempts,
@@ -382,123 +280,25 @@ def test_every_run_builds_falls_back_to_including_runs(monkeypatch, capsys):
         seen.update(calls=qs.pop("__calls__"))
         return qs
 
-    with _preserve_detail() as detail:
-        monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.001")
-        monkeypatch.setattr(bench, "REPEATS", 2)
-        monkeypatch.setattr(bench, "HEADLINE", ["mr_wordcount"])
-        monkeypatch.setattr(bench, "_report_regressions", lambda *a, **k: [])
-        monkeypatch.setattr(entrymod, "queries", capture_queries)
-        bench.main()
-        with open(detail) as f:
-            side = json.load(f)
-        assert side["queries"]["mr_wordcount"] > 0  # a median was produced
-        # at most REPEATS+1 runs can be excluded (attempts < REPEATS+2),
-        # then REPEATS more are included regardless: 3 excluded + 2
-        # included = 5 calls total, bounded — never an infinite loop
-        assert seen["calls"]["n"] == 5
-        evs = side["cold_artifact_builds"]["mr_wordcount"]
-        # ALL 5 build runs are recorded; the 2 past the cap are marked
-        # included_in_median so the sidecar never silently hides a
-        # build inside a median
-        assert len(evs) == 5
-        assert [e.get("included_in_median", False) for e in evs] == [
-            False,
-            False,
-            False,
-            True,
-            True,
-        ]
-
-
-def test_cold_build_drift_advisory(tmp_path, capsys, monkeypatch):
-    """_report_cold_build_drift prints (advisory, never gates) when an
-    artifact's max build-run seconds exceed 2x the newest stamped
-    sidecar's record — the one visibility hook for build regressions
-    now that build runs live outside the gated medians. Baselines at a
-    different SF never apply (same guard as the timing gate)."""
-    import bench
-
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.1")
-    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
-        json.dumps(
-            {
-                "sf": 0.1,
-                "cold_artifact_builds": {
-                    "q1": [{"sec": 4.0, "artifacts": ["dedup_cc_labels"]}],
-                    "q2": [{"sec": 0.2, "artifacts": ["tiny_artifact"]}],
-                },
-            }
-        )
-    )
-    cur = {
-        "q1": [{"sec": 9.5, "artifacts": ["dedup_cc_labels"]}],
-        # tiny baselines (<0.5s) never alarm, whatever the ratio
-        "q2": [{"sec": 1.9, "artifacts": ["tiny_artifact"]}],
-        # unknown artifacts never alarm
-        "q3": [{"sec": 30.0, "artifacts": ["brand_new"]}],
-    }
-    bench._report_cold_build_drift(str(tmp_path), cur)
-    err = capsys.readouterr().err
-    assert "COLD-BUILD DRIFT" in err and "dedup_cc_labels" in err
-    assert "tiny_artifact" not in err and "brand_new" not in err
-    # an sf-mismatched baseline never applies
-    monkeypatch.setattr(bench, "SF_DIR", "/root/testdata/sf0.001")
-    bench._report_cold_build_drift(str(tmp_path), cur)
-    assert "COLD-BUILD DRIFT" not in capsys.readouterr().err
-
-
-def test_newest_stamp_carries_all_three_probe_axes():
-    """The worst-of-three-axes drift rule (SURVEY section 8, active
-    from r15) only engages when the committed baseline stamp carries
-    ALL THREE probe readings — the r14 run corroborated against CPU
-    alone because its r13 baseline predated the I/O pair. Pin the
-    newest committed BENCH_DETAIL so the axes can't silently lapse
-    from a stamp again."""
-    import bench
-
-    newest = bench._newest_stamped_detail("/root/repo")
-    assert newest is not None
-    rnd, prev = newest
-    assert rnd >= 14
-    for key in (
-        "calibration_probe_sec",
-        "io_probe_cold_sec",
-        "io_probe_warm_sec",
-    ):
-        assert prev.get(key), f"BENCH_DETAIL_r{rnd:02d}.json missing {key}"
-
-
-def test_stamp_guard_detects_contention_wave(tmp_path):
-    """tools/stamp_bench.py stamp discipline (r15 verdict #8): the
-    quiet envelope is the MIN probe reading across committed stamps
-    (never the newest stamp, which can itself be wave-inflated), and a
-    run whose calibration or cold-I/O probe exceeds 1.5x that envelope
-    is flagged as a contention wave."""
-    import importlib
-    import sys
-
-    sys.path.insert(0, os.path.join(REPO, "tools"))
-    try:
-        sb = importlib.import_module("stamp_bench")
-    finally:
-        sys.path.pop(0)
-
-    (tmp_path / "BENCH_DETAIL_r01.json").write_text(
-        json.dumps({"calibration_probe_sec": 0.6, "io_probe_cold_sec": 0.7})
-    )
-    # a newer, wave-inflated stamp must NOT loosen the envelope
-    (tmp_path / "BENCH_DETAIL_r02.json").write_text(
-        json.dumps({"calibration_probe_sec": 1.35, "io_probe_cold_sec": 2.0})
-    )
-    env = sb._quiet_envelope(str(tmp_path))
-    # CPU-only by design: the cold-I/O quiet floor shifts between
-    # rounds (r15 0.145s vs r16 quiet ~0.66s), so a historical-min
-    # I/O gate would refuse every honest stamp.
-    assert env == {"calibration_probe_sec": 0.6}
-    # quiet run: probe within 1.5x the envelope
-    assert sb._probes_quiet({"calibration_probe_sec": 0.65}, env) == []
-    # wave: calibration probe 2x the quiet floor
-    noisy = sb._probes_quiet({"calibration_probe_sec": 1.2}, env)
-    assert len(noisy) == 1 and "calibration_probe_sec" in noisy[0]
-    # missing probe keys never flag (pre-probe sidecars)
-    assert sb._probes_quiet({}, env) == []
+    _quick_bench(monkeypatch, tmp_path, headline=["mr_wordcount"], repeats=2)
+    monkeypatch.setattr(bench, "_report_regressions", lambda *a, **k: [])
+    monkeypatch.setattr(entrymod, "queries", capture_queries)
+    bench.main()
+    side = _detail(tmp_path)
+    assert side["queries"]["mr_wordcount"] > 0  # a median was produced
+    # at most REPEATS+1 runs can be excluded (attempts < REPEATS+2),
+    # then REPEATS more are included regardless: 3 excluded + 2
+    # included = 5 calls total, bounded — never an infinite loop
+    assert seen["calls"]["n"] == 5
+    evs = side["cold_artifact_builds"]["mr_wordcount"]
+    # ALL 5 build runs are recorded; the 2 past the cap are marked
+    # included_in_median so the sidecar never silently hides a
+    # build inside a median
+    assert len(evs) == 5
+    assert [e.get("included_in_median", False) for e in evs] == [
+        False,
+        False,
+        False,
+        True,
+        True,
+    ]

@@ -293,3 +293,22 @@ def test_multi_grain_cube_labels_null_data_rows_as_data(spark):
     # day and grand-total rollups absorb both rows
     assert {r["n_events"] for r in by_grain["by_day"]} == {8}
     assert {r["n_events"] for r in by_grain["total"]} == {8}
+
+
+@pytest.mark.parametrize("free_mb, expect_shm", [(64, False), (16 * 1024, True)])
+def test_stream_scratch_needs_free_dev_shm(monkeypatch, free_mb, expect_shm):
+    """Stream scratch goes to /dev/shm only when it has room: with
+    Docker's default 64 MB free it falls back to scratch_base(), where a
+    small tmpfs would otherwise fail writes mid-query."""
+    import os
+
+    from mit_map_reduce_spark.catalog import scratch_base
+    from mit_map_reduce_spark.streaming import queries as sq
+
+    if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
+        pytest.skip("no writable /dev/shm")
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH_DIR", raising=False)
+    # (bsize, frsize, blocks, bfree, bavail, files, ffree, favail, flag, namemax)
+    fake = os.statvfs_result((4096, 4096, 0, 0, free_mb * 256, 0, 0, 0, 0, 255))
+    monkeypatch.setattr(os, "statvfs", lambda path: fake)
+    assert sq._stream_scratch_root() == ("/dev/shm" if expect_shm else scratch_base())

@@ -37,6 +37,7 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENTRY = os.path.join(REPO, "__spark_entry__.py")
+USAGE = "python tools/rotate_priority.py [--check] [--pin-file FILE]"
 
 
 def _vintages() -> tuple[dict[str, int], dict[str, bool], int]:
@@ -137,13 +138,20 @@ def main() -> int:
     check = "--check" in argv
     pinned: frozenset[str] = frozenset()
     if "--pin-file" in argv:
-        pf = argv[argv.index("--pin-file") + 1]
-        with open(pf) as fh:
-            pinned = frozenset(
-                line.strip()
-                for line in fh
-                if line.strip() and not line.lstrip().startswith("#")
-            )
+        i = argv.index("--pin-file") + 1
+        if i == len(argv):
+            print(f"usage: {USAGE}\n--pin-file needs a file argument", file=sys.stderr)
+            return 2
+        try:
+            with open(argv[i]) as fh:
+                pinned = frozenset(
+                    line.strip()
+                    for line in fh
+                    if line.strip() and not line.lstrip().startswith("#")
+                )
+        except OSError as e:
+            print(f"usage: {USAGE}\ncannot read pin file: {e}", file=sys.stderr)
+            return 2
     src = open(ENTRY).read()
     m = re.search(r"_PRIORITY = \[.*?\n\]", src, re.S)
     if not m:

@@ -107,16 +107,21 @@ def arrow_stage_width(
     partitioning (guide §2: scale-adaptive partitioning; §4: the
     JVM<->Python boundary is the cost).
 
-    Measured (r15): every Python task pays a fixed ~0.25-0.35 CPU-s
-    JVM<->worker round-trip in this environment — payload-independent,
-    even on REUSED workers (a 32-task mapInPandas stage burns ~10 CPU-s
-    on a 2000-row input whether the function is a no-op or the IVF
-    assignment; syscall-heavy sandbox). Tiny inputs must therefore not
-    ride a cores-wide cache layout into a Python stage; the width
-    grows linearly with input volume up to the cap (the same
-    volume-law as emb_lsh_pair_width). Callers ``coalesce()`` cached
-    inputs to this width (narrow, never exceeds the cache's own
-    one-task-wave width) or ``repartition()`` scan-rooted ones.
+    Every Python task pays a payload-independent fixed cost, even on
+    reused workers. r15 measured ~0.25-0.35 CPU-s per task, and tuned
+    these widths against it. Nearly all of it was
+    ``importlib.invalidate_caches()``, which pyspark calls every task
+    and which made each of ~50 zipimporters re-read pyspark.zip's
+    directory. ``get_spark`` sessions run workers under
+    ``pyworker_daemon``, which re-reads only a changed archive; a no-op
+    task then costs ~0.04 CPU-s (RDD) and ~0.08 CPU-s (mapInPandas):
+    process-tree CPU from ``/proc`` over 200 warm no-op tasks on
+    ``local[4]``, 4 cores. Tiny inputs should still not ride a
+    cores-wide cache layout into a Python stage; the width grows
+    linearly with input volume up to the cap (the same volume-law as
+    emb_lsh_pair_width). Callers ``coalesce()`` cached inputs to this
+    width (narrow, never exceeds the cache's own one-task-wave width)
+    or ``repartition()`` scan-rooted ones.
 
     ``floor`` is a small LATENCY floor (not a cores constant): a
     width-1 stage serializes its upstream narrow chain into one task;

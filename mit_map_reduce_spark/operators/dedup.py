@@ -710,8 +710,8 @@ def embedding_dup_pairs_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Volume-derived Python-stage width (r15, guide §2/§4): per-task
     # work is rows x corpus x dim flops (one BLAS matmul per batch),
     # so width follows the PAIR volume (~3M dots/task ≈ 200 Mflop) —
-    # not a fixed cores-wide spread, whose per-task ~0.3 CPU-s
-    # boundary cost dominated at audit SFs.
+    # not a fixed cores-wide spread, which at audit SFs buys mostly the
+    # fixed per-task Python cost (catalog.arrow_stage_width).
     from mit_map_reduce_spark.catalog import arrow_stage_width
 
     n_vec = len(rows)

@@ -43,8 +43,8 @@ def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Volume-derived width (r15, guide §2/§4): every mm_* consumer
     # feeds this frame straight into a mapInPandas decode whose
-    # per-task Python-boundary cost is a fixed ~0.3 CPU-s (measured,
-    # payload-independent — catalog.arrow_stage_width), so the width
+    # per-task Python cost is fixed (payload-independent, ~0.08 CPU-s
+    # per mapInPandas task; catalog.arrow_stage_width), so the width
     # follows the asset count instead of a fixed cores-wide spread.
     # The stub decode is vectorized and cheap; a real codec deployment
     # lowers MM_ASSETS_PER_TASK to its measured decode throughput.

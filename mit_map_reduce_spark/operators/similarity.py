@@ -102,8 +102,9 @@ def ann_bruteforce_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # volume-derived Python-stage width (r15, guide §2/§4): per-task
     # work is rows x |queries| x dim flops; ~3M candidate dots per
-    # task keeps tasks ~200 Mflop, far above the fixed ~0.3 CPU-s
-    # per-task boundary cost. coalesce is narrow: never exceeds the
+    # task keeps tasks ~200 Mflop, far above the fixed per-task
+    # Python cost (catalog.arrow_stage_width: ~0.08 CPU-s per
+    # mapInPandas task). coalesce is narrow: never exceeds the
     # cached corpus's one-task-wave width.
     n_vec = table_footer_count(sf_dir, "embeddings")
     width = arrow_stage_width(n_vec * max(1, n_vec // 100), 3_000_000)
@@ -258,7 +259,8 @@ TRAIN_SAMPLE_MOD = 4
 
 #: IVF-assignment rows per Python task: k(16) x dim(64) multiply-adds
 #: per row -> ~200 Mflop per task, far above the measured fixed
-#: ~0.3 CPU-s/task Python-boundary cost (catalog.arrow_stage_width).
+#: per-task Python cost (~0.08 CPU-s per mapInPandas task, see
+#: catalog.arrow_stage_width).
 ASSIGN_ROWS_PER_TASK = 200_000
 
 

@@ -47,12 +47,13 @@ def get_spark(
     session in their process (the fresh-subprocess tools are).
     """
     # Python workers must be able to import this package (RDD closures
-    # in the MapReduce facade pickle functions by reference). The env
+    # in the MapReduce facade pickle functions by reference), and so
+    # must the Python daemon they fork from (pyworker_daemon, below):
+    # --py-files archives join sys.path only inside each worker. The env
     # var covers every local[...] deployment, where workers fork on
-    # this machine; on a multi-node cluster ship the package instead —
-    # `--py-files mit_map_reduce_spark.zip` / spark.submit.pyFiles, or
-    # install it on the executor images — since executor processes do
-    # not inherit this driver-side env.
+    # this machine; a cluster-manager master gets the same path as
+    # spark.executorEnv.PYTHONPATH below, so a multi-node cluster needs
+    # the package installed on the executor images or on a shared path.
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(":"):
@@ -84,6 +85,10 @@ def get_spark(
         # nanosecond timestamp type, so read as long and convert in the
         # catalog (lossless: the data is microsecond-precision).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # pyspark's own worker daemon, with each zip import archive's
+        # directory re-read only when the archive changes instead of on
+        # every task (~0.2 CPU-s per Python task; see pyworker_daemon).
+        .config("spark.python.daemon.module", "mit_map_reduce_spark.pyworker_daemon")
         # --- local-mode-only knobs ---
         # Small-SF testdata files are single-digit MB, far below the
         # 128 MB production default for maxPartitionBytes — which would

@@ -1,7 +1,8 @@
 """Volume-derived Python-boundary stage widths (r15 optimization).
 
-Every Python (Arrow) task pays a fixed JVM<->worker round-trip cost
-(measured ~0.3 CPU-s in this environment, payload-independent), so the
+Every Python (Arrow) task pays a fixed, payload-independent cost
+(~0.08 CPU-s for a no-op mapInPandas task under ``pyworker_daemon``;
+``catalog.arrow_stage_width`` gives its cause and measurement), so the
 width of a mapInPandas/mapInArrow stage must follow the stage's INPUT
 VOLUME, never the parent frame's cores-wide cache layout — and must
 keep growing with volume so the law is scale-correct, not local-tuned.

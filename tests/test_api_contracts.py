@@ -164,3 +164,34 @@ def test_plan_snapshot_diff_flags_only_scale_regressions():
     assert "q_gone: REMOVED" in text
     assert "q_new: NEW" in text
     assert "q_better" not in text and "q_same: " not in text
+
+
+def test_no_tool_or_test_puts_an_absolute_path_on_sys_path():
+    # A literal absolute path on sys.path makes a script import the
+    # package of whatever tree sits there, so a gate run from another
+    # checkout grades the wrong code. Derive the root from __file__.
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    bad = []
+    for sub in ("tools", "tests"):
+        for path in glob.glob(os.path.join(root, sub, "**", "*.py"), recursive=True):
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("insert", "append")
+                    and ast.unparse(node.func.value) == "sys.path"
+                    and any(
+                        isinstance(a, ast.Constant)
+                        and isinstance(a.value, str)
+                        and os.path.isabs(a.value)
+                        for a in node.args
+                    )
+                ):
+                    bad.append(f"{os.path.relpath(path, root)}:{node.lineno}")
+    assert bad == [], bad

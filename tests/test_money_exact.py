@@ -14,6 +14,7 @@ summed as decimal(38,0) — and these tests pin the contract:
 """
 
 import math
+import os
 import random
 import sys
 
@@ -27,7 +28,7 @@ from mit_map_reduce_spark.functions.columns import (
     sql_money_sum,
 )
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
 from check_correctness import norm_cell  # noqa: E402
 
 

@@ -36,8 +36,8 @@ from mit_map_reduce_spark.catalog import load_table
 from mit_map_reduce_spark.streaming.queries import (
     _attribution_join,
     _dedup_within_watermark_agg,
+    _drain,
     _profile_update_out,
-    _run_to_upsert_sink,
     _session_windows_agg,
     _stage_single_parquet,
 )
@@ -54,38 +54,6 @@ def _halves(spark, sf_dir):
 
 def _stream(spark, feed, schema):
     return spark.readStream.schema(schema).parquet(feed)
-
-
-def _drain_append(agg, sink, ckpt):
-    """One drain of an append-mode query into a parquet file sink —
-    processAllAvailable + stop, the production runners' choreography
-    (availableNow can terminate before the post-watermark no-data
-    flush batch, which would skew the interrupted/clean comparison)."""
-    spark = agg.sparkSession
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def _read_sink(spark, sink, schema):
-    if not os.path.isdir(sink) or not any(
-        f.endswith(".parquet") for f in os.listdir(sink) if not f.startswith("_")
-    ):
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(sink)
 
 
 def _sorted_rows(df):
@@ -112,23 +80,19 @@ def _append_family_recovery(spark, sf_dir, tmp_path, build, dup_feed=False):
     stage(h1, feed_i, 0)
     schema = spark.read.parquet(os.path.join(feed_i, "b0.parquet")).schema
 
-    sink_i, ckpt_i = str(tmp_path / "sink_i"), str(tmp_path / "ckpt_i")
+    run_i = str(tmp_path / "run_i")
     # run 1: first half only, then STOP — the kill point
-    _drain_append(build(lambda: _stream(spark, feed_i, schema)), sink_i, ckpt_i)
+    _drain(build(lambda: _stream(spark, feed_i, schema)), run_dir=run_i)
     # run 2: new query instance, same checkpoint+sink, rest of the data
     stage(h2, feed_i, 1)
-    _drain_append(build(lambda: _stream(spark, feed_i, schema)), sink_i, ckpt_i)
+    interrupted = _drain(build(lambda: _stream(spark, feed_i, schema)), run_dir=run_i)
 
     stage(h1, feed_c, 0)
     stage(h2, feed_c, 1)
-    sink_c, ckpt_c = str(tmp_path / "sink_c"), str(tmp_path / "ckpt_c")
-    _drain_append(build(lambda: _stream(spark, feed_c, schema)), sink_c, ckpt_c)
-
-    out_schema = build(lambda: _stream(spark, feed_c, schema)).schema
-    return (
-        _sorted_rows(_read_sink(spark, sink_i, out_schema)),
-        _sorted_rows(_read_sink(spark, sink_c, out_schema)),
+    clean = _drain(
+        build(lambda: _stream(spark, feed_c, schema)), run_dir=str(tmp_path / "run_c")
     )
+    return _sorted_rows(interrupted), _sorted_rows(clean)
 
 
 def test_session_windows_recovery(spark, sf_dir, tmp_path):
@@ -175,12 +139,11 @@ def test_stateful_profile_recovery_with_torn_commit(spark, sf_dir, tmp_path, sta
     _stage_single_parquet(h1, os.path.join(feed, "b0.parquet"))
     schema = spark.read.parquet(os.path.join(feed, "b0.parquet")).schema
     run_dir = str(tmp_path / "upsert_run")
-    os.makedirs(run_dir)
 
     def profile(hook=None):
         out = _profile_update_out(_stream(spark, feed, schema))
         kw = {"pre_commit_hook": hook} if stage == "pre_swap" else {"post_commit_hook": hook}
-        return _run_to_upsert_sink(out, keys=["user_id"], run_dir=run_dir, **kw)
+        return _drain(out, keys=["user_id"], run_dir=run_dir, **kw)
 
     profile()  # run 1: half 1 committed, then stopped
     _stage_single_parquet(h2, os.path.join(feed, "b1.parquet"))
@@ -203,7 +166,7 @@ def test_stateful_profile_recovery_with_torn_commit(spark, sf_dir, tmp_path, sta
     os.makedirs(feed_c)
     _stage_single_parquet(h1, os.path.join(feed_c, "b0.parquet"))
     _stage_single_parquet(h2, os.path.join(feed_c, "b1.parquet"))
-    clean = _run_to_upsert_sink(
+    clean = _drain(
         _profile_update_out(_stream(spark, feed_c, schema)),
         keys=["user_id"],
         run_dir=str(tmp_path / "upsert_clean"),

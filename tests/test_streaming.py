@@ -312,3 +312,70 @@ def test_stream_scratch_needs_free_dev_shm(monkeypatch, free_mb, expect_shm):
     fake = os.statvfs_result((4096, 4096, 0, 0, free_mb * 256, 0, 0, 0, 0, 255))
     monkeypatch.setattr(os, "statvfs", lambda path: fake)
     assert sq._stream_scratch_root() == ("/dev/shm" if expect_shm else scratch_base())
+
+
+def _windowed_counts(spark, landing):
+    # 15-minute window counts under a 30-minute watermark over a feed
+    # written by _write_batch
+    stream = spark.readStream.schema("ts timestamp, user_id int").parquet(landing)
+    return (
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "15 minutes").alias("w"))
+        .agg(F.count("*").alias("n"))
+        .select(F.col("w.start").alias("ws"), "n")
+    )
+
+
+def test_append_drain_closing_no_window_is_empty(spark, landing):
+    # one event: the watermark (event - 30 min) never passes its
+    # window's end, so the file sink commits no data file and the
+    # runner returns an empty frame with the query's schema
+    from datetime import datetime
+
+    from mit_map_reduce_spark.streaming.queries import _drain
+
+    _write_batch(spark, landing, [Row(ts=datetime(2024, 1, 1, 9, 0), user_id=1)])
+    agg = _windowed_counts(spark, landing)
+    out = _drain(agg)
+    assert out.collect() == []
+    assert out.schema == agg.schema
+
+
+def test_keyed_drain_without_batches_is_empty(spark, landing):
+    # an empty landing dir yields no micro-batch, so the upsert never
+    # swaps a CURRENT pointer in
+    import os
+
+    from mit_map_reduce_spark.streaming.queries import _drain
+
+    os.makedirs(landing)
+    counts = (
+        spark.readStream.schema("ts timestamp, user_id int")
+        .parquet(landing)
+        .groupBy("user_id")
+        .count()
+    )
+    out = _drain(counts, keys=["user_id"])
+    assert out.collect() == []
+    assert out.schema == counts.schema
+
+
+def test_drain_scopes_shuffle_partitions_to_start(spark, landing, tmp_path):
+    # the stream runs with 8 shuffle partitions (recorded in the first
+    # offset log entry's conf), and the session gets its own value back
+    import json
+
+    from mit_map_reduce_spark.streaming.queries import _drain
+
+    _write_batch(spark, landing, [Row(ts=None, user_id=1)])
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        _drain(_windowed_counts(spark, landing), run_dir=str(tmp_path / "run"))
+        assert spark.conf.get(key) == "3"
+    finally:
+        spark.conf.set(key, before)
+    with open(tmp_path / "run" / "ckpt" / "offsets" / "0") as fh:
+        lines = fh.read().splitlines()
+    assert json.loads(lines[1])["conf"][key] == "8"

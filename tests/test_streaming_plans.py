@@ -2,8 +2,9 @@
 
 The 17 streaming queries are correctness-verified against batch
 oracles, but a StreamingQuery's physical plan only exists while the
-query runs — so the sink runners capture the last micro-batch's
-executed plan (``streaming.queries.LAST_STREAM_PLAN``, via
+query runs — so the one stream runner (``streaming.queries._drain``)
+captures the last micro-batch's executed plan
+(``streaming.queries.LAST_STREAM_PLAN``, via
 ``plans.streaming_plan_report``) and these tests grade it with the
 same anti-pattern bar the 47 batch plan pins apply: no unpartitioned
 windows, the static dimension joins as a broadcast, stateful
@@ -59,7 +60,7 @@ def test_expectation_table_covers_registry():
 
 @pytest.mark.parametrize("qname", sorted(sq.QUERIES))
 def test_streaming_micro_batch_plan(spark, sf_dir, qname):
-    # Reset the capture slot first: a sink runner that forgot
+    # Reset the capture slot first: a query that skipped the runner's
     # _capture_stream_plan must fail here, not inherit the previous
     # parametrization's captured plan.
     sq.LAST_STREAM_PLAN = {}

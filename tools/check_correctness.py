@@ -12,6 +12,7 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 from collections import Counter
@@ -19,7 +20,7 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mit_map_reduce_spark.catalog import TABLES, table_path
 from mit_map_reduce_spark.session import get_spark

@@ -31,7 +31,7 @@ plan change.
 
 ``stream_*`` queries are covered too (r10 verdict #5): each runs its
 availableNow drain once and the entry records the LAST micro-batch's
-executed-plan facts captured by the sink runners
+executed-plan facts captured by the stream runner ``_drain``
 (``streaming.queries.LAST_STREAM_PLAN`` — shuffles, broadcast joins,
 sort-merge joins, state stores, unpartitioned windows) instead of the
 batch probes; the returned frame is just a sink read whose plan says

@@ -78,8 +78,8 @@ def scan_repo(spark, sf_dir: str) -> list[str]:
     for name, fn in entrymod.queries().items():
         try:
             if name.startswith("stream_"):
-                # Reset the capture slot so a sink runner that forgot
-                # _capture_stream_plan cannot pass on the PREVIOUS
+                # Reset the capture slot so a query that skipped the
+                # runner's _capture_stream_plan cannot pass on the PREVIOUS
                 # query's plan.
                 sq.LAST_STREAM_PLAN = {}
             df = fn(spark, sf_dir)

@@ -10,6 +10,7 @@ whole file — ``src/mr/worker.go:137``).
 
 from __future__ import annotations
 
+import contextlib
 import os
 import time
 
@@ -83,6 +84,194 @@ def scratch_base() -> str:
     return os.environ.get("SPARK_GRAFT_SCRATCH_DIR", tempfile.gettempdir())
 
 
+#: Revision of the publish protocol, folded into the keys of artifacts
+#: that were once published under another signal (the bucketed tables
+#: used Spark's ``_SUCCESS``, the IVF centroids a bare rename), so a
+#: marker-less dir written by older code is never moved aside under a
+#: session that still reads it.
+PUBLISH_REV = "m1"
+
+#: Dropped INSIDE the temp dir before the atomic rename: its presence
+#: under the final path proves a complete, atomically-published
+#: artifact (Spark's own _SUCCESS is absent for multi-subdir writers).
+_PUBLISH_MARKER = "_MMRS_PUBLISHED"
+
+#: A lock this old with nothing published belongs to a crashed writer;
+#: expire it so the shared path heals instead of every later session
+#: timing out and paying a private rewrite. A live writer touches its
+#: lock and temp dir every ``_TOUCH_S``, well inside the TTL.
+_LOCK_TTL_S = 300.0
+_TOUCH_S = 60.0
+
+#: Lock-wait poll interval; patched down in tests.
+_LOCK_POLL_S = 0.5
+
+#: Longest a loser waits for a live (lock kept fresh) writer before it
+#: writes a session-private copy; patched down in tests.
+_LOCK_WAIT_S = 900.0
+
+
+def _is_published(out_dir: str) -> bool:
+    return os.path.exists(os.path.join(out_dir, _PUBLISH_MARKER))
+
+
+def _write_and_publish(write_fn, out_dir: str) -> None:
+    """Run ``write_fn`` into a unique ``.tmp*`` sibling, drop the marker
+    inside it and rename it into place — the reference's temp file +
+    atomic rename commit (``src/mr/worker.go:219-224``) for a dir."""
+    import shutil
+    import threading
+    import uuid
+
+    tmp = out_dir + ".tmp" + uuid.uuid4().hex[:8]
+    # Keep the temp dir AND the lock visibly fresh while the write runs:
+    # lock expiry and the leftover sweep both key off mtime, a write can
+    # legitimately outlast the TTL at large SF, and a dir's own mtime
+    # does not advance while a part file streams INTO it. So a stale
+    # mtime proves the writer stopped touching: crashed, not slow.
+    stop = threading.Event()
+
+    def _keep_fresh() -> None:
+        while not stop.wait(_TOUCH_S):
+            for p in (tmp, out_dir + ".lock"):  # no lock on private copies
+                with contextlib.suppress(OSError):
+                    os.utime(p)
+
+    threading.Thread(target=_keep_fresh, daemon=True).start()
+    try:
+        write_fn(tmp)
+    finally:
+        stop.set()
+    with open(os.path.join(tmp, _PUBLISH_MARKER), "w") as fh:
+        fh.write("ok\n")
+    # Last-moment re-check: if a concurrent writer published while we
+    # were writing (possible only if lock expiry mis-fired on a live
+    # writer), KEEP the published artifact — never delete data a
+    # reader may already be scanning — and discard our copy.
+    if _is_published(out_dir):
+        shutil.rmtree(tmp, ignore_errors=True)
+        return
+    # Move unpublished leftovers aside ATOMICALLY rather than rmtree on
+    # the live path: rmtree is not atomic, so a racer publishing between
+    # the check above and the delete could be left half-deleted with the
+    # marker still present. A rename either moves the whole dir or
+    # nothing.
+    trash = out_dir + ".trash" + uuid.uuid4().hex[:8]
+    with contextlib.suppress(OSError):  # ENOENT when out_dir absent — fine
+        os.rename(out_dir, trash)
+    if _is_published(trash):
+        # The racer won between the check and the rename: restore their
+        # complete artifact and discard ours.
+        with contextlib.suppress(OSError):
+            os.rename(trash, out_dir)
+    else:
+        with contextlib.suppress(OSError):  # concurrent writer won the rename
+            os.rename(tmp, out_dir)
+    shutil.rmtree(tmp, ignore_errors=True)  # no-op when renamed in
+    shutil.rmtree(trash, ignore_errors=True)  # no-op when restored
+
+
+def _take_lock(lock: str, out_dir: str) -> bool:
+    """Atomic ``os.mkdir`` lock: exactly one session wins. A stale lock
+    (older than ``_LOCK_TTL_S`` with nothing published — the writer
+    died between mkdir and its finally) is expired ATOMICALLY and
+    retaken: renamed to a unique tombstone first, so only one expirer
+    can win (a plain rmdir could instead delete a FRESH lock re-created
+    by a faster expirer — the two-winners race)."""
+    import uuid
+
+    try:
+        os.mkdir(lock)
+        return True
+    except FileExistsError:
+        pass
+    try:
+        stale = (time.time() - os.stat(lock).st_mtime) > _LOCK_TTL_S
+    except OSError:  # lock vanished between mkdir attempt and stat
+        stale = False
+    if not stale or _is_published(out_dir):
+        return False
+    tomb = f"{lock}.expired-{uuid.uuid4().hex[:8]}"
+    with contextlib.suppress(OSError):
+        os.rename(lock, tomb)
+        os.rmdir(tomb)
+    try:
+        os.mkdir(lock)
+        return True
+    except FileExistsError:
+        return False
+
+
+def _await_publish(out_dir: str, lock: str) -> None:
+    """Loser side: wait for the marker as long as the writer keeps its
+    lock FRESH (a legitimately slow large-SF write keeps us waiting
+    instead of forcing a duplicate private rewrite), at most
+    ``_LOCK_WAIT_S``. A lock gone stale or removed without a publish
+    means the writer crashed — stop waiting."""
+    deadline = time.time() + _LOCK_WAIT_S
+    while time.time() < deadline:
+        time.sleep(_LOCK_POLL_S)
+        if _is_published(out_dir):
+            return
+        try:
+            if time.time() - os.stat(lock).st_mtime >= _LOCK_TTL_S / 2:
+                return
+        except OSError:  # lock gone and still no marker
+            return
+
+
+def publish_once(write_fn, out_dir: str) -> str:
+    """Write-once publish of a cross-session scratch artifact. Returns
+    the directory to READ — normally ``out_dir``, a session-private
+    ``out_dir.pid<N>`` copy only if a concurrent writer is wedged.
+
+    ``write_fn(d)`` writes the artifact into the (not yet existing) dir
+    ``d``. Writers serialize on an atomic ``os.mkdir`` lock; the winner
+    writes to a ``.tmp*`` temp dir, drops ``_PUBLISH_MARKER`` inside it,
+    and ``os.rename``s the whole dir into place, so the marker's
+    presence under the final path proves a complete artifact and a
+    reader can never observe partial state. Losers wait for the marker
+    (``_await_publish``); a stale lock is expired and retaken
+    (``_take_lock``); a writer that stays wedged makes the loser fall
+    back to a private copy — correctness intact, cross-session reuse
+    lost.
+    """
+    import glob
+    import shutil
+
+    if _is_published(out_dir):
+        return out_dir
+    os.makedirs(os.path.dirname(out_dir), exist_ok=True)
+    lock = out_dir + ".lock"
+    if _take_lock(lock, out_dir):
+        try:
+            if not _is_published(out_dir):  # not published while racing
+                # Under the lock: sweep .tmp*/.trash* siblings left by
+                # writers that crashed between their rename steps —
+                # nothing else reclaims them. Live writers touch their
+                # temp dir every _TOUCH_S, so a leftover older than the
+                # 4x-TTL gate provably stopped touching.
+                now = time.time()
+                for left in glob.glob(out_dir + ".tmp*") + glob.glob(out_dir + ".trash*"):
+                    with contextlib.suppress(OSError):
+                        if now - os.stat(left).st_mtime > 4 * _LOCK_TTL_S:
+                            shutil.rmtree(left, ignore_errors=True)
+                _write_and_publish(write_fn, out_dir)
+        finally:
+            with contextlib.suppress(OSError):
+                os.rmdir(lock)
+    else:
+        _await_publish(out_dir, lock)
+    # One final check: a writer that published and removed its lock
+    # between the loser's last probe and its stat must still be reused.
+    if _is_published(out_dir):
+        return out_dir
+    priv = f"{out_dir}.pid{os.getpid()}"  # wedged writer: go private
+    if not _is_published(priv):
+        _write_and_publish(write_fn, priv)
+    return priv
+
+
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     """Fan a small input out across the cluster before compute-heavy
     derivation (shingling, hashing, pair joins).
@@ -154,6 +343,45 @@ def bounded_shuffle_width(spark: SparkSession, floor: int = 16) -> int:
     shuffles coalesce to fewer tasks than any honest pin).
     """
     return max(spark.sparkContext.defaultParallelism, floor)
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, settings: dict | None = None):
+    """Set session conf keys for the duration of a ``with`` block and
+    put back the CALLER's values on exit — not hard-coded session
+    defaults, which would e.g. silently re-enable AQE coalescing for a
+    session that deliberately disabled it. Each key's value is captured
+    before its first set in this scope and restored in ``finally`` (a
+    key the caller never set is unset again), so nested scopes compose.
+    Yields a setter taking a settings dict, for keys whose value is
+    known only inside the block (the graph fixpoint width needs
+    ``edges.count()`` first); it obeys the same capture/restore rule.
+
+    SINGLE-THREADED ASSUMPTION: this mutates session-global conf for
+    the block's duration — any query planning concurrently in the same
+    session would see the scoped values, and interleaved scopes could
+    restore a stale value. Fine for the one-query-at-a-time
+    driver/bench/pytest harnesses this repo targets; revisit with a
+    lock or ``SparkSession.newSession()`` if a concurrent caller ever
+    appears.
+    """
+    saved: dict[str, str | None] = {}
+
+    def set_(more: dict) -> None:
+        for key, value in more.items():
+            if key not in saved:
+                saved[key] = spark.conf.get(key, None)
+            spark.conf.set(key, str(value))
+
+    try:
+        set_(settings or {})
+        yield set_
+    finally:
+        for key, old in reversed(saved.items()):
+            if old is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, old)
 
 
 def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:

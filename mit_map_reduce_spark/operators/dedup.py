@@ -40,6 +40,7 @@ from pyspark.sql import Window as W
 from mit_map_reduce_spark.catalog import (
     bounded_shuffle_width,
     load_table,
+    scoped_conf,
     shared_persist,
     spread,
 )
@@ -1040,22 +1041,9 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (measured 21.9 s total keep-list build at sf0.01, ~all
         # scheduling). The upstream LSH-pair artifact builds lazily,
         # so its first materialization lands in this scope too.
-        # SINGLE-THREADED ASSUMPTION (shared with the graph loops):
-        # this mutates session-global spark.sql.shuffle.partitions for
-        # the build's duration — any query planning concurrently in the
-        # same session would see the pinned width, and interleaved
-        # scoped builds could restore a stale value. Fine for the
-        # one-query-at-a-time driver/bench/pytest harnesses this repo
-        # targets; revisit with a lock or SparkSession.newSession() if
-        # a concurrent caller ever appears.
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(bounded_shuffle_width(spark))
-        )
-        try:
+        width = bounded_shuffle_width(spark)
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": width}):
             return _cc_fixpoint()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
 
     def _cc_fixpoint():
         pairs = minhash_lsh_pairs(spark, sf_dir)

@@ -31,7 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from mit_map_reduce_spark.catalog import bounded_shuffle_width, load_table, shared_persist
+from mit_map_reduce_spark.catalog import (
+    bounded_shuffle_width,
+    load_table,
+    scoped_conf,
+    shared_persist,
+)
 from mit_map_reduce_spark.functions.columns import round_half_up
 
 DAMPING = 0.85
@@ -62,22 +67,14 @@ def _fixpoint_width(edge_count: int) -> int:
     )
 
 
-def _saved_fixpoint_conf(spark: SparkSession) -> tuple[str, str]:
-    """Capture (shuffle width, coalescePartitions.enabled) before a
-    fixpoint scope so _restore_fixpoint_conf can put back the CALLER's
-    values — not a hard-coded session default, which would silently
-    re-enable coalescing for a session that deliberately disabled it
-    and breaks under nested scopes (r14 ADVICE). Pure caller-side
-    capture: no module state, so nesting composes by construction."""
-    return (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-    )
+#: Scope-entry conf of every fixpoint build: the graph-suite width
+#: until the build knows its edge count (then ``_fixpoint_conf``).
+_FLOOR_CONF = {"spark.sql.shuffle.partitions": GRAPH_SHUFFLE_PARTITIONS}
 
 
-def _set_fixpoint_width(spark: SparkSession, edge_count: int) -> int:
-    """Apply the volume-derived width as the scoped shuffle conf for an
-    iterative build. Past the committed-SF floor it ALSO disables AQE
+def _fixpoint_conf(edge_count: int) -> dict:
+    """Scoped conf for an iterative build: the volume-derived width as
+    the shuffle width. Past the committed-SF floor it ALSO disables AQE
     partition coalescing within the scope: the advisory sizes reducers
     by COMPRESSED map-output bytes, and at the x30 corpus it re-fused
     LPA's 141-task derived width for the per-iteration (dst, label)
@@ -88,22 +85,13 @@ def _set_fixpoint_width(spark: SparkSession, edge_count: int) -> int:
     construction — at scale, trust it over the compressed-bytes
     heuristic. Committed SFs take width == floor and the coalescing
     conf is untouched, so the pinned plans and task counts are
-    unchanged. Paired with _restore_fixpoint_conf in the build's
-    ``finally``."""
+    unchanged. Applied through ``catalog.scoped_conf``'s setter, which
+    restores the caller's values when the build's scope exits."""
     width = _fixpoint_width(edge_count)
-    spark.conf.set("spark.sql.shuffle.partitions", str(width))
+    conf = {"spark.sql.shuffle.partitions": width}
     if width > GRAPH_SHUFFLE_PARTITIONS:
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    return width
-
-
-def _restore_fixpoint_conf(spark: SparkSession, saved: tuple[str, str]) -> None:
-    """Undo _set_fixpoint_width: restore the width and coalescing
-    values captured by _saved_fixpoint_conf at scope entry (the
-    caller's actual pre-scope conf, whatever it was)."""
-    old_width, old_coalesce = saved
-    spark.conf.set("spark.sql.shuffle.partitions", old_width)
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", old_coalesce)
+        conf["spark.sql.adaptive.coalescePartitions.enabled"] = "false"
+    return conf
 
 
 def _edge_build_width(spark: SparkSession, sf_dir: str) -> int:
@@ -256,13 +244,11 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     and let AQE coalesce).
     """
     def build():
-        old = _saved_fixpoint_conf(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(GRAPH_SHUFFLE_PARTITIONS))
-        try:
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
             edges = _trade_edges(spark, sf_dir)
             # volume-derived width: 32-floor at committed SFs (plans
             # unchanged), scales with the persisted edge count past it
-            _set_fixpoint_width(spark, edges.count())
+            set_conf(_fixpoint_conf(edges.count()))
             deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
             nodes = edges.select(F.col("src").alias("node")).distinct()
             n_total = nodes.agg(F.count("*").alias("n"))
@@ -301,8 +287,6 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
                 superseded = new_pr
                 pr = new_pr
             return pr  # persisted + materialized; registry adopts it
-        finally:
-            _restore_fixpoint_conf(spark, old)
 
     ranks = shared_persist(spark, "graph_pagerank_ranks", sf_dir, build)
     return ranks.select(
@@ -380,11 +364,9 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     def build():
-        old = _saved_fixpoint_conf(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(GRAPH_SHUFFLE_PARTITIONS))
-        try:
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
             edges = _trade_edges(spark, sf_dir)
-            _set_fixpoint_width(spark, edges.count())
+            set_conf(_fixpoint_conf(edges.count()))
             deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
             nodes = edges.select(F.col("src").alias("node")).distinct()
             supp = load_table(spark, sf_dir, "supplier").filter(
@@ -435,8 +417,6 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 superseded = new_pr
                 pr = new_pr
             return pr
-        finally:
-            _restore_fixpoint_conf(spark, old)
 
     ranks = shared_persist(spark, "graph_ppr_ranks", sf_dir, build)
     return ranks.filter(F.col("rank") > 0).select(
@@ -527,11 +507,9 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     round, shuffles scoped to the graph's partition count.
     """
     def build():
-        old = _saved_fixpoint_conf(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(GRAPH_SHUFFLE_PARTITIONS))
-        try:
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
             edges = _trade_edges(spark, sf_dir)
-            _set_fixpoint_width(spark, edges.count())
+            set_conf(_fixpoint_conf(edges.count()))
             alive = edges.select(F.col("src").alias("node")).distinct()
             superseded = None
             for _ in range(KCORE_ROUNDS):
@@ -552,8 +530,6 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
                 superseded = new_alive
                 alive = new_alive
             return alive  # persisted + materialized; registry adopts it
-        finally:
-            _restore_fixpoint_conf(spark, old)
 
     alive = shared_persist(spark, "graph_kcore_alive", sf_dir, build)
     edges = _trade_edges(spark, sf_dir)
@@ -712,11 +688,9 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     copy per (session, corpus)."""
 
     def build():
-        old = _saved_fixpoint_conf(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(GRAPH_SHUFFLE_PARTITIONS))
-        try:
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
             edges = _trade_edges(spark, sf_dir)
-            _set_fixpoint_width(spark, edges.count())
+            set_conf(_fixpoint_conf(edges.count()))
             # The encoded argmax silently corrupts once ids reach
             # LPA_ENC (negative tie-break term) — fail loudly instead.
             max_node = edges.agg(F.max("src")).first()[0]
@@ -755,8 +729,6 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 superseded = new_labels
                 labels = new_labels
             return labels
-        finally:
-            _restore_fixpoint_conf(spark, old)
 
     return shared_persist(spark, "graph_lpa_labels", sf_dir, build)
 
@@ -1266,11 +1238,9 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
 
     def build():
-        old = _saved_fixpoint_conf(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(GRAPH_SHUFFLE_PARTITIONS))
-        try:
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
             edges = _knn_copurchase_edges(spark, sf_dir)
-            _set_fixpoint_width(spark, edges.count())
+            set_conf(_fixpoint_conf(edges.count()))
             und = (
                 edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
                 .union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
@@ -1303,8 +1273,6 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).localCheckpoint()
             und.unpersist()
             return visited
-        finally:
-            _restore_fixpoint_conf(spark, old)
 
     out = shared_persist(spark, "graph_bfs_dist", sf_dir, build)
     return out.select("node", F.col("dist").cast("int").alias("dist"))
@@ -1373,9 +1341,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain = float(10**RANK_DIGITS)
 
     def build():
-        old = _saved_fixpoint_conf(spark)
-        spark.conf.set("spark.sql.shuffle.partitions", str(GRAPH_SHUFFLE_PARTITIONS))
-        try:
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
             # customer -> supplier direction only (the bipartite HITS).
             # The working copy coalesces to the graph-suite partition
             # sizing (the shared artifact keeps the session default):
@@ -1385,7 +1351,9 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             # edge count (_fixpoint_width), same as every other loop
             # in this module.
             base = _trade_edges(spark, sf_dir).filter(F.col("src") >= NODE_OFFSET)
-            width = _set_fixpoint_width(spark, base.count())
+            conf = _fixpoint_conf(base.count())
+            set_conf(conf)
+            width = conf["spark.sql.shuffle.partitions"]
             # coalesce can only NARROW; when the derived width exceeds
             # the edge frame's current partitioning (possible once the
             # edge count outgrows the x1 floor faster than the
@@ -1491,8 +1459,6 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 s.unpersist()
             edges.unpersist()
             return out
-        finally:
-            _restore_fixpoint_conf(spark, old)
 
     return shared_persist(spark, "graph_hits_scores", sf_dir, build)
 

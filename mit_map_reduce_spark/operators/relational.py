@@ -17,8 +17,6 @@ Scale notes baked into every query:
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -904,16 +902,18 @@ BUCKET_JOIN_MIN_QTY = 150
 def bucketed_scratch_base(sf_dir: str) -> str:
     """Shared scratch warehouse path for the bucketed lineitem/orders
     copies — keyed by corpus CONTENT, not just path, so regenerated
-    testdata invalidates the layout (catalog.corpus_fingerprint).
+    testdata invalidates the layout (catalog.corpus_fingerprint), and
+    by the publish protocol's revision (catalog.PUBLISH_REV).
     Exposed as a helper so tests assert against the code's actual key
     recipe instead of re-deriving it."""
     import hashlib
     import os
 
-    from mit_map_reduce_spark.catalog import corpus_fingerprint, scratch_base
+    from mit_map_reduce_spark.catalog import PUBLISH_REV, corpus_fingerprint, scratch_base
 
     fp = corpus_fingerprint(sf_dir, "lineitem", "orders")
-    tag = hashlib.md5(f"{os.path.abspath(sf_dir)}|{fp}".encode()).hexdigest()[:8]
+    key = f"{os.path.abspath(sf_dir)}|{fp}|{PUBLISH_REV}"
+    tag = hashlib.md5(key.encode()).hexdigest()[:8]
     return os.path.join(scratch_base(), "mmrs_bucketed", tag)
 
 
@@ -926,187 +926,45 @@ def rel_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the join key at write time pre-shuffles them ONCE (the ingest-
     time cost a warehouse pays), after which this join AND the
     same-key aggregation plan with no exchange at all. The bucketed
-    copies are written once per (session, corpus) into a scratch
-    warehouse path; repeated queries reuse the registered tables.
-    Values are identical to the plain-layout join, which is exactly
-    what the oracle checks — bucketing must change the plan, never
-    the answer.
+    copies are written once per corpus into a shared scratch warehouse
+    path through ``catalog.publish_once``; every session (this one on
+    later calls, or a later one) registers an external ``CLUSTERED BY``
+    table over the published files instead of rewriting them. Values
+    are identical to the plain-layout join, which is exactly what the
+    oracle checks — bucketing must change the plan, never the answer.
     """
     import os
+
+    from mit_map_reduce_spark.catalog import publish_once
+    from mit_map_reduce_spark.sources.io import write_parquet
 
     base = bucketed_scratch_base(sf_dir)
     tag = os.path.basename(base)
     t_li, t_ord = f"b_lineitem_{tag}", f"b_orders_{tag}"
 
-    def _register_existing(name: str, path: str, df: DataFrame, key: str) -> bool:
-        # Another session already wrote this corpus's bucketed copy:
-        # register an external bucketed table over the finished files
-        # instead of rewriting them out from under concurrent readers
-        # (the cross-session stomp that flaked the suite once). The
-        # files carry bucket ids in their names, so the CLUSTERED BY
-        # metadata reattaches losslessly.
-        if not os.path.exists(os.path.join(path, "_SUCCESS")):
-            return False
+    def _ensure(name: str, sub: str, df: DataFrame, key: str) -> None:
+        # Each table is published and registered INDEPENDENTLY: a
+        # writer that died between the pair must not force a rewrite of
+        # the complete half a concurrent session may be registered over.
+        if spark.catalog.tableExists(name):
+            return
+
+        def write(d: str) -> None:
+            # bucketBy needs saveAsTable; the temp table is external, so
+            # dropping it leaves the files for publish_once to rename.
+            tmp_table = f"{name}_{os.path.basename(d).replace('.', '_')}"
+            write_parquet(df, d, bucket_by=(8, [key]), table_name=tmp_table)
+            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
+
+        path = publish_once(write, os.path.join(base, sub))
+        # The files carry bucket ids in their names, so the CLUSTERED BY
+        # metadata reattaches losslessly over the published dir.
         ddl = df._jdf.schema().toDDL()
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {name} ({ddl}) USING parquet "
             f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO 8 BUCKETS "
             f"LOCATION '{path}'"
         )
-        return True
-
-    def _ensure(name: str, sub: str, df: DataFrame, key: str) -> None:
-        # Each table is registered/written INDEPENDENTLY (a writer that
-        # died between the pair must not force a rewrite of the
-        # complete half a concurrent session may be registered over),
-        # and the shared-path write is guarded by an atomic mkdir lock
-        # so two fresh sessions racing on an absent artifact never
-        # overwrite each other. Lost race -> wait briefly for the
-        # winner's _SUCCESS; winner crashed (stale lock, no _SUCCESS)
-        # -> fall back to a session-private path, correctness intact.
-        import time
-
-        from mit_map_reduce_spark.sources.io import write_parquet
-
-        if spark.catalog.tableExists(name):
-            return
-        path = os.path.join(base, sub)
-        if _register_existing(name, path, df, key):
-            return
-        lock = f"{path}.lock"
-        os.makedirs(base, exist_ok=True)
-
-        def _acquire() -> bool:
-            try:
-                os.mkdir(lock)  # atomic: exactly one session wins
-                return True
-            except FileExistsError:
-                return False
-
-        won = _acquire()
-        if not won:
-            # A writer that died between mkdir and its finally leaves
-            # the lock forever; expire by mtime (no _SUCCESS after
-            # 5 min = crashed, not slow) so the shared path heals
-            # instead of every later session paying a private rewrite.
-            # Expiry renames the lock to a unique tombstone first —
-            # atomic, so two losers can never both "win" the expiry
-            # (a blind rmdir could delete the faster expirer's FRESH
-            # lock and admit two concurrent writers to one path).
-            try:
-                stale = (time.time() - os.stat(lock).st_mtime) > 300.0
-            except OSError:
-                stale = False
-            if stale and not os.path.exists(os.path.join(path, "_SUCCESS")):
-                import uuid
-
-                tomb = f"{lock}.expired-{uuid.uuid4().hex[:8]}"
-                with contextlib.suppress(OSError):
-                    os.rename(lock, tomb)
-                    os.rmdir(tomb)
-                won = _acquire()
-        if not won:
-            # Writer in flight: wait for _SUCCESS as long as the lock
-            # stays FRESH (a live writer touches it every 60 s, so a
-            # legitimately slow large-SF write keeps us waiting instead
-            # of forcing every loser into a full duplicate private
-            # rewrite). A lock gone stale (>150 s untouched) or removed
-            # without a publish means the writer crashed — stop waiting.
-            deadline = time.time() + 900.0
-            while time.time() < deadline:
-                time.sleep(0.5)
-                if _register_existing(name, path, df, key):
-                    return
-                try:
-                    fresh = (time.time() - os.stat(lock).st_mtime) < 150.0
-                except OSError:
-                    fresh = False  # lock gone and still no _SUCCESS
-                if not fresh:
-                    break
-            # One FINAL register check: a writer that published and
-            # removed its lock between this loop's register probe and
-            # its stat sees fresh=False — without this re-check the
-            # loser would pay a needless full private rewrite.
-            if _register_existing(name, path, df, key):
-                return
-            # crashed/wedged writer: private path, never contended
-            path = os.path.join(base, f"{sub}_{os.getpid()}")
-            write_parquet(df, path, bucket_by=(8, [key]), table_name=name)
-            return
-        try:
-            # Re-check under the lock: a writer that finished while we
-            # raced for (or expired) the lock must be reused, never
-            # overwritten out from under sessions registered over it.
-            if _register_existing(name, path, df, key):
-                return
-            # Keep the lock visibly fresh while the write runs: expiry
-            # keys off lock mtime, and a bucketed write can legitimately
-            # exceed the TTL at large SF — a live writer must never look
-            # crashed (round-7 advice).
-            import glob
-            import shutil
-            import threading
-            import uuid
-
-            # Under the lock: sweep wip/trash leftovers from CRASHED
-            # writers (nothing else reclaims them — locks have TTL
-            # expiry, these didn't). A LIVE writer's toucher thread
-            # keeps its wip dir's mtime fresh (below) — a dir's own
-            # mtime does not advance while file contents stream into
-            # existing files — so the age gate only ever matches dirs
-            # whose writer stopped touching: crashed, not slow.
-            now = time.time()
-            for leftover in glob.glob(f"{path}.wip*") + glob.glob(f"{path}.trash*"):
-                with contextlib.suppress(OSError):
-                    if now - os.stat(leftover).st_mtime > 300.0:
-                        shutil.rmtree(leftover, ignore_errors=True)
-
-            # Write to a unique temp dir and os.rename into place
-            # (mirrors sources_queries._write_and_publish): even if a
-            # misfired expiry admits a second writer, each writes its
-            # own temp dir and exactly one rename wins — the shared
-            # path is never written in place, so it can never hold a
-            # torn mix of two writers' files.
-            tmp = f"{path}.wip{uuid.uuid4().hex[:8]}"
-            tmp_table = f"{name}_wip_{uuid.uuid4().hex[:8]}"
-            stop = threading.Event()
-
-            def _keep_fresh() -> None:
-                while not stop.wait(60.0):
-                    with contextlib.suppress(OSError):
-                        os.utime(lock)
-                    with contextlib.suppress(OSError):
-                        os.utime(tmp)  # exists once Spark starts writing
-
-            threading.Thread(target=_keep_fresh, daemon=True).start()
-            try:
-                write_parquet(df, tmp, bucket_by=(8, [key]), table_name=tmp_table)
-            finally:
-                stop.set()
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")  # external: files stay
-            if _register_existing(name, path, df, key):
-                shutil.rmtree(tmp, ignore_errors=True)  # racer published first
-                return
-            trash = f"{path}.trash{uuid.uuid4().hex[:8]}"
-            with contextlib.suppress(OSError):  # atomic move-aside of leftovers
-                os.rename(path, trash)
-            if os.path.exists(os.path.join(trash, "_SUCCESS")):
-                # A racer published between the check and the rename:
-                # restore their complete artifact, discard ours.
-                with contextlib.suppress(OSError):
-                    os.rename(trash, path)
-            with contextlib.suppress(OSError):  # lost rename -> reuse theirs
-                os.rename(tmp, path)
-            shutil.rmtree(trash, ignore_errors=True)
-            shutil.rmtree(tmp, ignore_errors=True)  # no-op when renamed in
-            if not _register_existing(name, path, df, key):
-                # Shared path unusable despite the write (pathological
-                # FS race): session-private fallback, never contended.
-                path = os.path.join(base, f"{sub}_{os.getpid()}")
-                write_parquet(df, path, bucket_by=(8, [key]), table_name=name)
-        finally:
-            with contextlib.suppress(OSError):
-                os.rmdir(lock)
 
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_extendedprice", "l_discount"

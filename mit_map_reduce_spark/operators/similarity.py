@@ -23,8 +23,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from mit_map_reduce_spark.catalog import (
+    PUBLISH_REV,
     arrow_stage_width,
+    corpus_fingerprint,
     load_table,
+    publish_once,
+    scoped_conf,
+    scratch_base,
     shared_persist,
     spread,
     table_footer_count,
@@ -353,16 +358,13 @@ def _centroids_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     side-output; every later search (same process or a later one on the
     same machine) reads the 16-row artifact instead of re-running the
     Lloyd iterations inside the query — the faiss ``train()`` /
-    ``search()`` split. Keyed by the corpus path; written to a temp dir
-    and atomically renamed so a crashed writer can never leave a
-    half-artifact that later runs silently trust.
+    ``search()`` split. Trained and published through
+    ``catalog.publish_once`` (lock, temp dir + marker, atomic rename),
+    so concurrent first calls train once and a crashed trainer can
+    never leave a half-artifact that later runs silently trust.
     """
     import hashlib
     import os
-    import shutil
-    import uuid
-
-    from mit_map_reduce_spark.catalog import corpus_fingerprint, scratch_base
 
     # The key includes every training parameter: a code change that
     # alters training must never silently reuse an artifact trained by
@@ -370,23 +372,19 @@ def _centroids_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle, which always reflects current parameters). It also
     # includes the embeddings table's content fingerprint — the driver
     # regenerates testdata in place, and centroids trained on the OLD
-    # corpus would silently misassign cells on the new one.
+    # corpus would silently misassign cells on the new one — and the
+    # publish protocol's revision.
     fp = corpus_fingerprint(sf_dir, "embeddings")
-    params = f"{os.path.abspath(sf_dir)}|{fp}|k={K_CELLS}|it={KMEANS_ITERS}|dp={MEAN_DIGITS}|mod={TRAIN_SAMPLE_MOD}"
+    params = f"{os.path.abspath(sf_dir)}|{fp}|k={K_CELLS}|it={KMEANS_ITERS}|dp={MEAN_DIGITS}|mod={TRAIN_SAMPLE_MOD}|{PUBLISH_REV}"
     tag = hashlib.md5(params.encode()).hexdigest()[:12]
-    art = os.path.join(scratch_base(), "mmrs_ivf_centroids", tag)
-    if not os.path.isdir(art):
+
+    def train(d: str) -> None:
         cents = _trained_centroids(_emb_with_norm(spark, sf_dir))
-        tmp = art + "." + uuid.uuid4().hex[:8]
-        cents.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(os.path.dirname(art), exist_ok=True)
-        try:
-            os.rename(tmp, art)
-        except OSError:
-            # lost the race to a concurrent trainer; its artifact is
-            # identical (training is deterministic) — keep it
-            shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(art)
+        cents.coalesce(1).write.parquet(d)
+
+    return spark.read.parquet(
+        publish_once(train, os.path.join(scratch_base(), "mmrs_ivf_centroids", tag))
+    )
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,12 +524,8 @@ def ann_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The greedy rounds shuffle kilobytes; at the session's stock
         # partition count each round schedules hundreds of near-empty
         # tasks (the graph-loop lesson — scope the setting down).
-        old = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        try:
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": 8}):
             return _mmr_build(spark, sf_dir)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", old)
 
     sel = shared_persist(spark, "mmr_topk", sf_dir, build)
     return sel.select(

@@ -11,28 +11,30 @@ aggregate straight from the parquet. A lossless round trip is exactly
 Scratch copies are written once per (corpus, format) under
 ``catalog.scratch_base()`` (tempdir locally; SPARK_GRAFT_SCRATCH_DIR
 on a shared filesystem for multi-node clusters) and reused across
-sessions (same keyed-artifact discipline as the IVF centroids; atomic
-rename so a crashed writer cannot publish a partial copy). The one exception is ``src_csv_malformed_quarantine``, which
-exercises the PERMISSIVE parser over in-memory-built lines and touches
-no filesystem at all (round-9 rewrite; the no-filesystem property is
-pytest-pinned).
+sessions through ``catalog.publish_once`` (the one write-once
+publisher the IVF centroids and bucketed tables use too: a mkdir lock,
+a temp dir with a marker, an atomic rename), so a crashed writer cannot
+publish a partial copy. The one exception is
+``src_csv_malformed_quarantine``, which exercises the PERMISSIVE parser
+over in-memory-built lines and touches no filesystem at all (round-9
+rewrite; the no-filesystem property is pytest-pinned).
 """
 
 from __future__ import annotations
 
-import contextlib
-import glob
 import hashlib
 import os
-import shutil
-import threading
-import time
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mit_map_reduce_spark.catalog import corpus_fingerprint, load_table, scratch_base
+from mit_map_reduce_spark.catalog import (
+    corpus_fingerprint,
+    load_table,
+    publish_once,
+    scoped_conf,
+    scratch_base,
+)
 from mit_map_reduce_spark.functions.columns import money_sum, sql_money_sum
 from mit_map_reduce_spark.sources.io import (
     read_csv,
@@ -64,19 +66,6 @@ ORDERS_SCHEMA = (
 #: artifact under the old check-by-listing protocol).
 _ARTIFACT_REV = "r7"
 
-#: Dropped INSIDE the temp dir before the atomic rename: its presence
-#: under the final path proves a complete, atomically-published
-#: artifact (Spark's own _SUCCESS is absent for multi-subdir writers).
-_PUBLISH_MARKER = "_MMRS_PUBLISHED"
-
-#: A lock this old with nothing published belongs to a crashed writer;
-#: expire it so the shared path heals instead of every later session
-#: timing out and paying a private rewrite.
-_LOCK_TTL_S = 300.0
-
-#: Lock-wait poll interval; patched down in tests.
-_LOCK_POLL_S = 0.5
-
 
 def _artifact_dir(sf_dir: str, fmt: str, table: str) -> str:
     # fmt doubles as a params/version key: changing the serialization
@@ -92,149 +81,6 @@ def _artifact_dir(sf_dir: str, fmt: str, table: str) -> str:
     return os.path.join(scratch_base(), "mmrs_source_rt", tag)
 
 
-def _is_published(out_dir: str) -> bool:
-    return os.path.exists(os.path.join(out_dir, _PUBLISH_MARKER))
-
-
-def _write_and_publish(write_fn, out_dir: str) -> None:
-    tmp = out_dir + ".tmp" + uuid.uuid4().hex[:8]
-    shutil.rmtree(tmp, ignore_errors=True)
-    # Keep the temp dir's mtime visibly fresh while the write runs
-    # (same toucher pattern as the bucketed-table writer in
-    # relational.py): the under-lock sweep in _ensure_written reclaims
-    # crashed writers' leftovers by dir mtime, and a dir's own mtime
-    # does not advance while one long part file streams INTO it — so
-    # without the toucher a live writer admitted by a misfired lock
-    # expiry could have its in-flight dir swept out from under it
-    # (round-9 advice). With it, a stale mtime proves the writer
-    # stopped touching: crashed, not slow.
-    stop = threading.Event()
-
-    def _keep_fresh() -> None:
-        while not stop.wait(60.0):
-            with contextlib.suppress(OSError):
-                os.utime(tmp)  # exists once the writer creates it
-
-    threading.Thread(target=_keep_fresh, daemon=True).start()
-    try:
-        write_fn(tmp)
-    finally:
-        stop.set()
-    with open(os.path.join(tmp, _PUBLISH_MARKER), "w") as fh:
-        fh.write("ok\n")
-    # Last-moment re-check: if a concurrent writer published while we
-    # were writing (possible only if lock expiry mis-fired on a live
-    # writer), KEEP the published artifact — never delete data a
-    # reader may already be scanning — and discard our copy.
-    if _is_published(out_dir):
-        shutil.rmtree(tmp, ignore_errors=True)
-        return
-    # Move unpublished leftovers aside ATOMICALLY rather than rmtree on
-    # the live path: rmtree is not atomic, so a racer publishing between
-    # the check above and the delete could be left half-deleted with the
-    # marker still present (round-7 advice). A rename either moves the
-    # whole dir or nothing.
-    trash = out_dir + ".trash" + uuid.uuid4().hex[:8]
-    with contextlib.suppress(OSError):  # ENOENT when out_dir absent — fine
-        os.rename(out_dir, trash)
-    if _is_published(trash):
-        # The racer won between the check and the rename: restore their
-        # complete artifact and discard ours.
-        with contextlib.suppress(OSError):
-            os.rename(trash, out_dir)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)  # no-op if restored
-        return
-    try:
-        os.rename(tmp, out_dir)
-    except OSError:  # concurrent writer won the rename
-        shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def _expire_stale_lock(lock: str) -> None:
-    """Expire a crashed writer's lock ATOMICALLY: rename it to a
-    unique tombstone first (only one expirer can win the rename; a
-    plain rmdir could instead delete a FRESH lock re-created by a
-    faster expirer — the two-winners race), then remove the
-    tombstone."""
-    tomb = f"{lock}.expired-{uuid.uuid4().hex[:8]}"
-    with contextlib.suppress(OSError):
-        os.rename(lock, tomb)
-        os.rmdir(tomb)
-
-
-def _ensure_written(write_fn, out_dir: str) -> str:
-    """Write-once publish of a shared scratch artifact. Returns the
-    directory to READ — normally ``out_dir``, a session-private copy
-    only if a concurrent writer is wedged.
-
-    Protocol (same as the bucketed-table artifact in
-    relational.rel_bucketed_join_revenue): writers serialize on an
-    atomic ``os.mkdir`` lock; the winner writes to a temp dir, drops
-    ``_PUBLISH_MARKER`` inside it, and ``os.rename``s the whole dir
-    into place, so the marker's presence under the final path proves a
-    complete artifact and a reader can never observe partial state.
-    Losers wait for the marker; a stale lock (older than
-    ``_LOCK_TTL_S`` with nothing published — the writer died between
-    mkdir and its finally) is expired and retaken; a writer that is
-    merely slow makes the loser fall back to a session-private copy —
-    correctness intact, cross-session reuse lost.
-    """
-    if _is_published(out_dir):
-        return out_dir
-    os.makedirs(os.path.dirname(out_dir), exist_ok=True)
-    lock = out_dir + ".lock"
-
-    def _acquire() -> bool:
-        try:
-            os.mkdir(lock)  # atomic: exactly one session wins
-            return True
-        except FileExistsError:
-            return False
-
-    won = _acquire()
-    if not won:
-        try:
-            stale = (time.time() - os.stat(lock).st_mtime) > _LOCK_TTL_S
-        except OSError:  # lock vanished between mkdir attempt and stat
-            stale = False
-        if stale and not _is_published(out_dir):
-            _expire_stale_lock(lock)
-            won = _acquire()
-    if not won:
-        for _ in range(60):  # writer in flight: wait for its publish
-            time.sleep(_LOCK_POLL_S)
-            if _is_published(out_dir):
-                return out_dir
-        priv = f"{out_dir}.pid{os.getpid()}"  # wedged writer: go private
-        if not _is_published(priv):
-            _write_and_publish(write_fn, priv)
-        return priv
-    try:
-        if _is_published(out_dir):  # published while racing for the lock
-            return out_dir
-        # Under the lock: sweep .tmp*/.trash* siblings left by writers
-        # that crashed between their rename steps (mirrors the bucketed-
-        # table sweep in relational.py — nothing else reclaims these, so
-        # crashed runs would otherwise accumulate orders-sized scratch).
-        # Live writers keep their temp dir's mtime fresh via the
-        # toucher thread in _write_and_publish (60 s cadence), so a
-        # leftover older than the 4x-TTL gate provably stopped
-        # touching: crashed, not slow. The wide gate is belt-and-
-        # braces on top of the toucher.
-        now = time.time()
-        for leftover in glob.glob(out_dir + ".tmp*") + glob.glob(out_dir + ".trash*"):
-            with contextlib.suppress(OSError):
-                if now - os.stat(leftover).st_mtime > 4 * _LOCK_TTL_S:
-                    shutil.rmtree(leftover, ignore_errors=True)
-        _write_and_publish(write_fn, out_dir)
-        return out_dir
-    finally:
-        with contextlib.suppress(OSError):
-            os.rmdir(lock)
-
-
 def src_csv_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders -> CSV -> explicit-schema read -> per-priority rollup.
 
@@ -244,7 +90,7 @@ def src_csv_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     quoting, nulls) breaks the hash.
     """
     out = _artifact_dir(sf_dir, f"csv|ntz|{CSV_TS_FORMAT}", "orders")
-    out = _ensure_written(
+    out = publish_once(
         lambda d: write_csv(
             load_table(spark, sf_dir, "orders"), d, options=CSV_TS_OPTS
         ),
@@ -266,7 +112,7 @@ def src_orc_roundtrip_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks predicate evaluation over the round-tripped columns.
     """
     out = _artifact_dir(sf_dir, "orc", "lineitem")
-    out = _ensure_written(
+    out = publish_once(
         lambda d: write_orc(load_table(spark, sf_dir, "lineitem"), d), out
     )
     back = read_orc(spark, out)
@@ -301,7 +147,7 @@ def src_json_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-exact.
     """
     out = _artifact_dir(sf_dir, f"json|{JSON_TS_OPTS['timestampFormat']}", "events")
-    out = _ensure_written(
+    out = publish_once(
         lambda d: write_json(
             load_table(spark, sf_dir, "events"), d, options=JSON_TS_OPTS
         ),
@@ -334,7 +180,7 @@ def src_partitioned_pruning_events(spark: SparkSession, sf_dir: str) -> DataFram
     changes I/O, never values.
     """
     out = _artifact_dir(sf_dir, "parquet|partition_by=event_type", "events")
-    out = _ensure_written(
+    out = publish_once(
         lambda d: load_table(spark, sf_dir, "events")
         .write.mode("overwrite")
         .partitionBy("event_type")
@@ -375,7 +221,7 @@ def src_text_kv_roundtrip_wc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         write_text_kv(wc, d, n_partitions=4)
 
-    out = _ensure_written(write, out)
+    out = publish_once(write, out)
     lines = read_text_lines(spark, out)
     parsed = lines.select(
         F.regexp_extract("line", r"^(.*) (\S+)$", 1).alias("word"),
@@ -416,7 +262,7 @@ def src_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         legacy.write.parquet(os.path.join(d, "batch=1"))
         current.write.parquet(os.path.join(d, "batch=2"))
 
-    out = _ensure_written(write, out)
+    out = publish_once(write, out)
     back = spark.read.option("mergeSchema", "true").parquet(out)
     return back.groupBy(
         "batch",
@@ -461,7 +307,7 @@ def src_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(d, "compacted")
         )
 
-    out = _ensure_written(write, out)
+    out = publish_once(write, out)
     compact_dir = os.path.join(out, "compacted")
     n_files = sum(
         1
@@ -496,7 +342,7 @@ def src_gzip_jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame
     anywhere in the corpus flips the hash.
     """
     out = _artifact_dir(sf_dir, "jsonl|gzip|v1", "documents")
-    out = _ensure_written(
+    out = publish_once(
         lambda d: write_json(
             load_table(spark, sf_dir, "documents").repartition(4),
             d,
@@ -612,18 +458,14 @@ def src_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
             "event_id", "user_id", "value", "event_type"
         )
         ev.write.partitionBy("event_type").parquet(d)
-        old = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
+        with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
             cleaned = ev.filter(
                 (F.col("event_type") == OVERWRITE_TYPE)
                 & (F.col("value") > OVERWRITE_MIN_VALUE)
             )
             cleaned.write.mode("overwrite").partitionBy("event_type").parquet(d)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", old)
 
-    out = _ensure_written(write, out)
+    out = publish_once(write, out)
     back = spark.read.parquet(out)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
@@ -675,7 +517,7 @@ def src_fixed_width_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         orders.select(line.alias("value")).repartition(4).write.text(d)
 
-    out = _ensure_written(write, out)
+    out = publish_once(write, out)
     lines = read_text_lines(spark, out)
     pos, cols = 1, []
     for name, width in FW_LAYOUT:

@@ -45,6 +45,7 @@ from mit_map_reduce_spark.functions.columns import (
 from mit_map_reduce_spark.catalog import (
     ensure_nanos_flag,
     load_table,
+    scoped_conf,
     scratch_base,
     table_path,
 )
@@ -271,12 +272,8 @@ def _drain(
         writer = out.writeStream.outputMode("append").format("parquet").option("path", sink)
     else:
         writer = out.writeStream.outputMode("update").foreachBatch(upsert)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": 8}):
         q = writer.option("checkpointLocation", os.path.join(run_dir, "ckpt")).start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
     try:
         q.processAllAvailable()
         _capture_stream_plan(q)

@@ -195,3 +195,55 @@ def test_no_tool_or_test_puts_an_absolute_path_on_sys_path():
                 ):
                     bad.append(f"{os.path.relpath(path, root)}:{node.lineno}")
     assert bad == [], bad
+
+
+def _package_nodes(*parts):
+    """(relative path, ast node) for every node of every .py file under
+    the package directory ``parts``."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for path in sorted(glob.glob(os.path.join(root, *parts, "**", "*.py"), recursive=True)):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            yield os.path.relpath(path, root), node
+
+
+def test_operators_publish_only_through_catalog():
+    # The lock/rename commit of shared scratch artifacts lives in ONE
+    # place, catalog.publish_once; an operator that takes a mkdir lock,
+    # renames dirs or starts a toucher thread is growing a second copy.
+    import ast
+
+    bad = []
+    for rel, node in _package_nodes("mit_map_reduce_spark", "operators"):
+        if isinstance(node, ast.Attribute) and ast.unparse(node) in ("os.mkdir", "os.rename"):
+            bad.append(f"{rel}:{node.lineno} {ast.unparse(node)}")
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            mods = [a.name for a in node.names] if isinstance(node, ast.Import) else [node.module]
+            if "threading" in mods:
+                bad.append(f"{rel}:{node.lineno} imports threading")
+        elif isinstance(node, ast.Name) and node.id == "threading":
+            bad.append(f"{rel}:{node.lineno} threading")
+    assert bad == [], bad
+
+
+def test_session_conf_is_set_only_in_catalog():
+    # Session-global conf changes go through catalog.scoped_conf (which
+    # restores the caller's values) or the one nanos-flag setter there.
+    import ast
+
+    bad = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes("mit_map_reduce_spark")
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "set"
+        and isinstance(node.func.value, ast.Attribute)
+        and node.func.value.attr == "conf"
+        and rel != "mit_map_reduce_spark/catalog.py"
+    ]
+    assert bad == [], bad

@@ -68,10 +68,10 @@ def test_publish_protocol_write_once_and_marker(tmp_path):
     """The winner writes once, publishes atomically (marker inside the
     renamed dir), and every later call reuses without re-invoking the
     writer."""
-    from mit_map_reduce_spark.operators.sources_queries import (
+    from mit_map_reduce_spark.catalog import (
         _PUBLISH_MARKER,
-        _ensure_written,
         _is_published,
+        publish_once,
     )
 
     out = str(tmp_path / "art")
@@ -85,8 +85,8 @@ def test_publish_protocol_write_once_and_marker(tmp_path):
         with open(os.path.join(d, "data.txt"), "w") as fh:
             fh.write("x")
 
-    got1 = _ensure_written(write, out)
-    got2 = _ensure_written(write, out)
+    got1 = publish_once(write, out)
+    got2 = publish_once(write, out)
     assert got1 == got2 == out
     assert len(calls) == 1
     assert _is_published(out)
@@ -99,16 +99,16 @@ def test_publish_protocol_write_once_and_marker(tmp_path):
 def test_publish_sweeps_aged_crash_leftovers(tmp_path):
     """A writer that crashed between its rename steps leaves orphan
     .tmp*/.trash* siblings nothing else reclaims (round-8 advice): the
-    next lock-winning writer sweeps AGED ones (beyond 4x the lock TTL
-    — sources writers have no mtime toucher) and keeps FRESH ones (a
+    next lock-winning writer sweeps AGED ones (beyond 4x the lock TTL;
+    a live writer touches its temp dir) and keeps FRESH ones (a
     concurrent live writer's in-flight dir must survive)."""
     import os
     import time
 
-    from mit_map_reduce_spark.operators.sources_queries import (
+    from mit_map_reduce_spark.catalog import (
         _LOCK_TTL_S,
-        _ensure_written,
         _is_published,
+        publish_once,
     )
 
     out = str(tmp_path / "art")
@@ -127,7 +127,7 @@ def test_publish_sweeps_aged_crash_leftovers(tmp_path):
         with open(os.path.join(d, "data.txt"), "w") as fh:
             fh.write("x")
 
-    got = _ensure_written(write, out)
+    got = publish_once(write, out)
     assert got == out and _is_published(out)
     assert not os.path.exists(aged_tmp)
     assert not os.path.exists(aged_trash)
@@ -136,15 +136,15 @@ def test_publish_sweeps_aged_crash_leftovers(tmp_path):
 
 def test_publish_protocol_expires_stale_lock(tmp_path):
     """A lock left by a crashed writer (old mtime, nothing published)
-    is expired so the SHARED path heals — no 30s wait, no pid-private
+    is expired so the SHARED path heals — no lock wait, no pid-private
     copy (round-6 ADVICE)."""
     import os
     import time
 
-    from mit_map_reduce_spark.operators.sources_queries import (
+    from mit_map_reduce_spark.catalog import (
         _LOCK_TTL_S,
-        _ensure_written,
         _is_published,
+        publish_once,
     )
 
     out = str(tmp_path / "art")
@@ -159,7 +159,7 @@ def test_publish_protocol_expires_stale_lock(tmp_path):
             fh.write("x")
 
     t0 = time.monotonic()
-    got = _ensure_written(write, out)
+    got = publish_once(write, out)
     assert time.monotonic() - t0 < 5.0  # healed, did not wait out the loop
     assert got == out
     assert _is_published(out)
@@ -172,13 +172,11 @@ def test_publish_protocol_fresh_lock_falls_back_private(tmp_path, monkeypatch):
     its path — correctness before reuse."""
     import os
 
-    from mit_map_reduce_spark.operators import sources_queries as sq
-    from mit_map_reduce_spark.operators.sources_queries import (
-        _ensure_written,
-        _is_published,
-    )
+    from mit_map_reduce_spark import catalog
+    from mit_map_reduce_spark.catalog import _is_published, publish_once
 
-    monkeypatch.setattr(sq, "_LOCK_POLL_S", 0.001)
+    monkeypatch.setattr(catalog, "_LOCK_POLL_S", 0.001)
+    monkeypatch.setattr(catalog, "_LOCK_WAIT_S", 0.05)
     out = str(tmp_path / "art")
     os.makedirs(out + ".lock")  # fresh mtime: looks in-flight
 
@@ -187,10 +185,82 @@ def test_publish_protocol_fresh_lock_falls_back_private(tmp_path, monkeypatch):
         with open(os.path.join(d, "data.txt"), "w") as fh:
             fh.write("x")
 
-    got = _ensure_written(write, out)
+    got = publish_once(write, out)
     assert got != out and got.startswith(out + ".pid")
     assert _is_published(got)
     assert not _is_published(out)
+
+
+def test_publish_loser_waits_only_while_the_lock_is_fresh(tmp_path, monkeypatch):
+    """A loser keeps waiting while the writer's lock stays fresh and
+    reuses its publish (no private rewrite); a lock gone stale (older
+    than half the TTL, not yet expirable) ends the wait at once."""
+    import os
+    import threading
+    import time
+
+    from mit_map_reduce_spark import catalog
+
+    monkeypatch.setattr(catalog, "_LOCK_POLL_S", 0.01)
+    calls = []
+
+    def write(d):
+        calls.append(d)
+        os.makedirs(d, exist_ok=True)
+
+    out = str(tmp_path / "live")
+    os.makedirs(out + ".lock")
+
+    def writer_publishes():
+        time.sleep(0.3)
+        os.makedirs(out)
+        with open(os.path.join(out, catalog._PUBLISH_MARKER), "w") as fh:
+            fh.write("ok\n")
+        os.rmdir(out + ".lock")
+
+    t = threading.Thread(target=writer_publishes)
+    t.start()
+    try:
+        assert catalog.publish_once(write, out) == out
+    finally:
+        t.join(timeout=10)
+    assert not t.is_alive()
+    assert calls == []
+
+    out = str(tmp_path / "dead")
+    os.makedirs(out + ".lock")
+    old = time.time() - (catalog._LOCK_TTL_S / 2 + 10)
+    os.utime(out + ".lock", (old, old))
+    t0 = time.monotonic()
+    got = catalog.publish_once(write, out)
+    assert time.monotonic() - t0 < 5.0  # not the 900 s wait bound
+    assert got == out + f".pid{os.getpid()}" and catalog._is_published(got)
+
+
+def test_publish_writer_keeps_lock_and_temp_dir_fresh(tmp_path, monkeypatch):
+    """While write_fn runs, the toucher refreshes BOTH the lock (so
+    losers keep waiting and nobody expires it) and the temp dir (so
+    the leftover sweep never takes a live writer's dir)."""
+    import os
+    import time
+
+    from mit_map_reduce_spark import catalog
+
+    monkeypatch.setattr(catalog, "_TOUCH_S", 0.01)
+    out = str(tmp_path / "art")
+    lock = out + ".lock"
+    ages = {}
+
+    def write(d):
+        os.makedirs(d)
+        old = time.time() - 1000
+        for p in (d, lock):
+            os.utime(p, (old, old))
+        time.sleep(0.3)
+        ages.update({p: time.time() - os.stat(p).st_mtime for p in (d, lock)})
+
+    assert catalog.publish_once(write, out) == out
+    assert len(ages) == 2 and all(a < 100 for a in ages.values()), ages
 
 
 def test_publish_protocol_restores_racer_artifact(tmp_path, monkeypatch):
@@ -201,17 +271,17 @@ def test_publish_protocol_restores_racer_artifact(tmp_path, monkeypatch):
     path in between."""
     import os
 
-    from mit_map_reduce_spark.operators import sources_queries as sq
+    from mit_map_reduce_spark import catalog
 
     out = str(tmp_path / "art")
     # The racer's complete published artifact is already in place ...
     os.makedirs(out)
-    with open(os.path.join(out, sq._PUBLISH_MARKER), "w") as fh:
+    with open(os.path.join(out, catalog._PUBLISH_MARKER), "w") as fh:
         fh.write("ok\n")
     with open(os.path.join(out, "racer.txt"), "w") as fh:
         fh.write("theirs")
     # ... but the first marker check misses it (the TOCTOU window).
-    real = sq._is_published
+    real = catalog._is_published
     seen = {"n": 0}
 
     def late_publish_view(d):
@@ -220,20 +290,47 @@ def test_publish_protocol_restores_racer_artifact(tmp_path, monkeypatch):
             return False
         return real(d)
 
-    monkeypatch.setattr(sq, "_is_published", late_publish_view)
+    monkeypatch.setattr(catalog, "_is_published", late_publish_view)
 
     def write(d):
         os.makedirs(d, exist_ok=True)
         with open(os.path.join(d, "mine.txt"), "w") as fh:
             fh.write("mine")
 
-    sq._write_and_publish(write, out)
+    catalog._write_and_publish(write, out)
     # racer's artifact survived intact; ours was discarded; no scratch left
     assert real(out)
     assert os.path.exists(os.path.join(out, "racer.txt"))
     assert not os.path.exists(os.path.join(out, "mine.txt"))
     leftovers = [p for p in os.listdir(tmp_path) if p != "art"]
     assert leftovers == [], leftovers
+
+
+def test_ivf_centroids_publish_once_and_reuse(spark, sf_dir, tmp_path, monkeypatch):
+    """The IVF centroid artifact is published through
+    catalog.publish_once: its dir carries the marker, nothing is left
+    beside it, and a second call reads it back without re-training."""
+    import os
+
+    from mit_map_reduce_spark.catalog import _PUBLISH_MARKER
+    from mit_map_reduce_spark.operators import similarity
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    trained = []
+    real = similarity._trained_centroids
+
+    def counting(emb):
+        trained.append(1)
+        return real(emb)
+
+    monkeypatch.setattr(similarity, "_trained_centroids", counting)
+    first = sorted(map(tuple, similarity._centroids_artifact(spark, sf_dir).collect()))
+    second = sorted(map(tuple, similarity._centroids_artifact(spark, sf_dir).collect()))
+    assert trained == [1]
+    assert first == second and len(first) == similarity.K_CELLS
+    root = tmp_path / "mmrs_ivf_centroids"
+    (tag,) = os.listdir(root)  # one published dir, no .lock/.tmp*/.trash*
+    assert os.path.exists(root / tag / _PUBLISH_MARKER)
 
 
 def test_truncated_artifact_probe_passthrough_and_cleanup(spark):

@@ -62,22 +62,26 @@ def test_bucketed_join_query_zero_exchange(spark, sf_dir, no_broadcast):
 
 
 def test_bucketed_scratch_publishes_atomically(spark, sf_dir):
-    """The shared bucketed artifact is published via temp-dir +
-    os.rename (round-7 advice): after a fresh write the scratch base
-    holds only the final table dirs — no .wip/.trash leftovers — and
-    each published dir carries Spark's _SUCCESS marker."""
+    """The shared bucketed artifact is published through
+    catalog.publish_once (temp dir + marker + os.rename): after a write
+    the scratch base holds only the final table dirs — no .tmp/.trash/
+    .lock leftovers — and each published dir carries the publish
+    marker (and Spark's _SUCCESS from the bucketed write inside it)."""
     import os
 
-    from mit_map_reduce_spark.operators.relational import rel_bucketed_join_revenue
+    from mit_map_reduce_spark.catalog import _PUBLISH_MARKER
+    from mit_map_reduce_spark.operators.relational import (
+        bucketed_scratch_base,
+        rel_bucketed_join_revenue,
+    )
 
     rel_bucketed_join_revenue(spark, sf_dir).count()
-    from mit_map_reduce_spark.operators.relational import bucketed_scratch_base
-
     base = bucketed_scratch_base(sf_dir)
     entries = sorted(os.listdir(base))
-    strays = [e for e in entries if ".wip" in e or ".trash" in e or ".lock" in e]
+    strays = [e for e in entries if any(m in e for m in (".tmp", ".wip", ".trash", ".lock"))]
     assert strays == [], strays
     for sub in ("li", "ord"):
+        assert os.path.exists(os.path.join(base, sub, _PUBLISH_MARKER))
         assert os.path.exists(os.path.join(base, sub, "_SUCCESS"))
 
 

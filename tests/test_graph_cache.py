@@ -9,7 +9,7 @@ query is a pure registry hit (zero new cached RDDs).
 
 from pyspark.sql import functions as F  # noqa: F401
 
-from mit_map_reduce_spark.catalog import _SHARED_CACHE
+from mit_map_reduce_spark.catalog import _CHECKPOINT_RDDS, _SHARED_CACHE
 from mit_map_reduce_spark.operators.graph import (
     PR_ITERS,
     graph_degree_distribution,
@@ -18,8 +18,11 @@ from mit_map_reduce_spark.operators.graph import (
 )
 
 
-def _cached_rdd_count(spark):
-    return spark.sparkContext._jsc.getPersistentRDDs().size()
+def _cached_rdd_ids(spark):
+    # The SET of persisted RDD ids, not their count: a test diffs the
+    # ids before and after a call, so an earlier test's RDD released
+    # mid-call (GC, async unpersist) cannot shift the result.
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
 def _registry_keys(spark, sf_dir):
@@ -31,22 +34,24 @@ def test_graph_queries_share_one_edge_list(spark, sf_dir):
     # Order-robust: if another test in this session already ran
     # PageRank, its ranks are a registry hit and add ZERO frames.
     already = "graph_pagerank_ranks" in _registry_keys(spark, sf_dir)
-    before = _cached_rdd_count(spark)
+    before = _cached_rdd_ids(spark)
     graph_pagerank_trade(spark, sf_dir).collect()
-    after = _cached_rdd_count(spark)
+    new = _cached_rdd_ids(spark) - before
     keys = _registry_keys(spark, sf_dir)
     assert "trade_edges" in keys and "graph_pagerank_ranks" in keys
-    # PageRank adds exactly ONE resident frame (its final ranks): the
-    # edge list was a registry hit and all superseded per-iteration
-    # frames were released (round 3 kept all PR_ITERS of them).
-    assert after - before == (0 if already else 1), (before, after, PR_ITERS)
+    # PageRank adds exactly ONE resident frame, its final ranks (the
+    # registry's checkpointed copy): the edge list was a registry hit
+    # and all superseded per-iteration frames were released (round 3
+    # kept all PR_ITERS of them).
+    ranks = _CHECKPOINT_RDDS[(id(spark), "graph_pagerank_ranks", sf_dir)]
+    assert new == (set() if already else {ranks.id()}), (new, PR_ITERS)
 
 
 def test_second_invocation_is_registry_hit(spark, sf_dir):
     first = graph_kcore_prune(spark, sf_dir).collect()
-    before = _cached_rdd_count(spark)
+    before = _cached_rdd_ids(spark)
     second = graph_kcore_prune(spark, sf_dir).collect()
-    assert _cached_rdd_count(spark) == before  # zero new cached frames
+    assert _cached_rdd_ids(spark) - before == set()  # zero new cached frames
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
@@ -60,9 +65,9 @@ def test_cc_fixpoint_is_registry_backed(spark, sf_dir):
 
     first = dedup_connected_components(spark, sf_dir).collect()
     assert "dedup_cc_labels" in _registry_keys(spark, sf_dir)
-    before = _cached_rdd_count(spark)
+    before = _cached_rdd_ids(spark)
     second = dedup_connected_components(spark, sf_dir).collect()
-    assert _cached_rdd_count(spark) == before
+    assert _cached_rdd_ids(spark) - before == set()
     assert sorted(map(tuple, first)) == sorted(map(tuple, second))
 
 
@@ -87,29 +92,54 @@ def test_hits_degrades_to_empty_frame_on_empty_edges(spark, sf_dir, tmp_path):
 
 
 def test_fixpoint_conf_restore_preserves_caller_coalescing(spark):
-    """_restore_fixpoint_conf must put back the CAPTURED pre-scope
-    coalescing value, not a hard-coded "true": a session that
-    deliberately disabled AQE coalescing stays disabled after a
-    fixpoint scope (r14 ADVICE)."""
+    """A fixpoint scope must put back the CAPTURED pre-scope coalescing
+    value, not a hard-coded "true": a session that deliberately
+    disabled AQE coalescing stays disabled after a fixpoint scope
+    (r14 ADVICE). The width set later in the block is restored too."""
+    from mit_map_reduce_spark.catalog import scoped_conf
     from mit_map_reduce_spark.operators.graph import (
+        _FLOOR_CONF,
         GRAPH_SHUFFLE_PARTITIONS,
-        _restore_fixpoint_conf,
-        _saved_fixpoint_conf,
-        _set_fixpoint_width,
+        _fixpoint_conf,
     )
 
     key = "spark.sql.adaptive.coalescePartitions.enabled"
-    before = spark.conf.get(key, "true")
+    width_key = "spark.sql.shuffle.partitions"
+    # committed SFs stay at the floor and leave coalescing alone
+    assert _fixpoint_conf(1_173_742) == {width_key: GRAPH_SHUFFLE_PARTITIONS}
+    before = spark.conf.get(key, None)
+    width_before = spark.conf.get(width_key)
     try:
         spark.conf.set(key, "false")
-        saved = _saved_fixpoint_conf(spark)
-        # Width past the floor flips coalescing off inside the scope...
-        width = _set_fixpoint_width(spark, 250_000 * 64)
-        assert width > GRAPH_SHUFFLE_PARTITIONS
-        assert spark.conf.get(key) == "false"
-        _restore_fixpoint_conf(spark, saved)
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
+            assert spark.conf.get(width_key) == str(GRAPH_SHUFFLE_PARTITIONS)
+            # Width past the floor flips coalescing off inside the scope...
+            conf = _fixpoint_conf(250_000 * 64)
+            assert conf[width_key] > GRAPH_SHUFFLE_PARTITIONS
+            set_conf(conf)
+            assert spark.conf.get(width_key) == str(conf[width_key])
+            assert spark.conf.get(key) == "false"
         # ...and restore yields the caller's "false", not "true".
         assert spark.conf.get(key) == "false"
-        assert spark.conf.get("spark.sql.shuffle.partitions") == saved[0]
+        assert spark.conf.get(width_key) == width_before
     finally:
-        spark.conf.set(key, before)
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
+def test_scoped_conf_nests_and_unsets_keys_the_caller_never_set(spark):
+    from mit_map_reduce_spark.catalog import scoped_conf
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    width_key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key, None) is None
+    width_before = spark.conf.get(width_key)
+    with scoped_conf(spark, {width_key: 7}):
+        with scoped_conf(spark, {width_key: 5, key: "dynamic"}) as set_conf:
+            set_conf({width_key: 3})
+            assert spark.conf.get(width_key) == "3"
+        assert spark.conf.get(width_key) == "7"
+        assert spark.conf.get(key, None) is None
+    assert spark.conf.get(width_key) == width_before

@@ -141,7 +141,7 @@ FINDINGS:
   class, both zero at x10 — AQE's coalescing advisory sizes reducers
   by COMPRESSED map-output bytes and re-fused the 141-task derived
   width into tasks whose decompressed hash-agg footprint sort-spills.
-  Fix (graph._set_fixpoint_width): past the committed-SF floor the
+  Fix (graph._fixpoint_conf): past the committed-SF floor the
   scoped build also disables AQE partition coalescing, trusting the
   GRAPH_EDGES_PER_TASK width law over the compressed-bytes heuristic.
   Re-audit x30: LPA 1934 -> **0 MB** (max_task_sr 11.2 -> 2.9 MB),

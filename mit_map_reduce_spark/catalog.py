@@ -235,12 +235,23 @@ def publish_once(write_fn, out_dir: str) -> str:
     (``_take_lock``); a writer that stays wedged makes the loser fall
     back to a private copy — correctness intact, cross-session reuse
     lost.
+
+    A write made by THIS process is a cold build: it appends one
+    ``_BUILD_EVENTS`` entry labelled with the artifact kind (see
+    ``_publish_label``), so bench excludes the run that paid it; a
+    reused artifact records none.
     """
     import glob
     import shutil
 
     if _is_published(out_dir):
         return out_dir
+
+    def build(d: str) -> None:
+        t0 = time.monotonic()
+        _write_and_publish(write_fn, d)
+        _BUILD_EVENTS.append((_publish_label(out_dir), round(time.monotonic() - t0, 3)))
+
     os.makedirs(os.path.dirname(out_dir), exist_ok=True)
     lock = out_dir + ".lock"
     if _take_lock(lock, out_dir):
@@ -256,7 +267,7 @@ def publish_once(write_fn, out_dir: str) -> str:
                     with contextlib.suppress(OSError):
                         if now - os.stat(left).st_mtime > 4 * _LOCK_TTL_S:
                             shutil.rmtree(left, ignore_errors=True)
-                _write_and_publish(write_fn, out_dir)
+                build(out_dir)
         finally:
             with contextlib.suppress(OSError):
                 os.rmdir(lock)
@@ -268,8 +279,21 @@ def publish_once(write_fn, out_dir: str) -> str:
         return out_dir
     priv = f"{out_dir}.pid{os.getpid()}"  # wedged writer: go private
     if not _is_published(priv):
-        _write_and_publish(write_fn, priv)
+        build(priv)
     return priv
+
+
+def _publish_label(out_dir: str) -> str:
+    """Build-event label of a published artifact: its path under the
+    scratch root (last two components elsewhere) minus the content-key
+    components, e.g. ``mmrs_bucketed/li`` or
+    ``mmrs_ivf_centroids`` — one label per artifact kind, the same in
+    every session and for every corpus."""
+    import re
+
+    rel = os.path.relpath(out_dir, scratch_base())
+    parts = [p for p in rel.split(os.sep) if p != ".." and not re.fullmatch(r"[0-9a-f]{8,}", p)]
+    return "/".join(parts[-2:] if rel.startswith("..") else parts)
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -288,13 +312,14 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df.repartition(n)
 
 
-def arrow_stage_width(
-    n_rows: int, rows_per_task: int, cap: int = 4096, floor: int = 1
-) -> int:
-    """Partition count for a Python-boundary (Arrow) stage, derived
-    from the stage's input VOLUME instead of the parent frame's
-    partitioning (guide §2: scale-adaptive partitioning; §4: the
-    JVM<->Python boundary is the cost).
+def volume_width(volume: float, per_task: int, cap: int = 4096, floor: int = 1) -> int:
+    """The one volume-width law: a partition count derived from a
+    stage's input VOLUME instead of the parent frame's partitioning
+    (guide §2: scale-adaptive partitioning) — one task per
+    ``per_task`` units of volume, between ``floor`` and ``cap``. The
+    Python (Arrow) stage widths and the graph and dedup shuffle widths
+    (fixpoint, edge build, pair streams, shingle stream, LSH pairs)
+    all call it with their own measured per-task volume.
 
     Every Python task pays a payload-independent fixed cost, even on
     reused workers. r15 measured ~0.25-0.35 CPU-s per task, and tuned
@@ -307,19 +332,20 @@ def arrow_stage_width(
     process-tree CPU from ``/proc`` over 200 warm no-op tasks on
     ``local[4]``, 4 cores. Tiny inputs should still not ride a
     cores-wide cache layout into a Python stage; the width grows
-    linearly with input volume up to the cap (the same volume-law as
-    emb_lsh_pair_width). Callers ``coalesce()`` cached inputs to this
-    width (narrow, never exceeds the cache's own one-task-wave width)
-    or ``repartition()`` scan-rooted ones.
+    linearly with input volume up to the cap. Callers ``coalesce()``
+    cached inputs to this width (narrow, never exceeds the cache's own
+    one-task-wave width) or ``repartition()`` scan-rooted ones.
 
     ``floor`` is a small LATENCY floor (not a cores constant): a
     width-1 stage serializes its upstream narrow chain into one task;
     callers whose input rides a wider cached layout pass a few tasks'
     worth of overlap (measured r15: the IVF assign at width 1 ran
-    1.6 s wall vs 0.9 s at width 4, at a quarter of width-32's CPU)."""
+    1.6 s wall vs 0.9 s at width 4, at a quarter of width-32's CPU).
+    Shuffle-width callers pass the session's one-wave width as the
+    floor, so committed SFs keep their pinned plans."""
     import math
 
-    return max(floor, min(cap, math.ceil(n_rows / max(1, rows_per_task))))
+    return max(floor, min(cap, math.ceil(volume / max(1, per_task))))
 
 
 def bounded_shuffle_width(spark: SparkSession, floor: int = 16) -> int:
@@ -641,11 +667,10 @@ def ensure_nanos_flag(spark: SparkSession) -> None:
 
 def table_footer_count(sf_dir: str, name: str) -> int:
     """Row count from parquet FOOTER metadata only — no Spark job, no
-    data pages read. The bounded driver decision that sizes
-    volume-derived shuffle widths (dedup.emb_lsh_pair_width, the graph
-    edge-build width): at any scale this is a metadata read over file
-    footers (pyarrow dataset handles both a single file and a
-    directory of part files)."""
+    data pages read. The bounded driver decision that sizes the
+    volume-derived widths (``volume_width``): at any scale this is a
+    metadata read over file footers (pyarrow dataset handles both a
+    single file and a directory of part files)."""
     import pyarrow.dataset as pads
 
     dataset = pads.dataset(table_path(sf_dir, name), format="parquet")

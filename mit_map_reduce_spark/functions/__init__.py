@@ -4,5 +4,4 @@ from mit_map_reduce_spark.functions.columns import (  # noqa: F401
     word_kgrams,
     cosine_similarity,
     vec_norm,
-    hex_digit_val,
 )

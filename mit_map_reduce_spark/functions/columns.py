@@ -5,7 +5,10 @@ so whole-stage codegen keeps the hot path in the JVM at any scale.
 Cross-engine determinism note: several operators are differential-
 tested against DuckDB, so these helpers only use constructs with
 bit-identical semantics in both engines (md5 hex strings, integer
-arithmetic, IEEE double ops).
+arithmetic, IEEE double ops). Where DuckDB lacks the Spark function,
+the helper has a textual-SQL twin the oracles call: ``round_half_up``
+/ ``sql_round``, ``money_*`` / ``sql_money_*`` and ``hex_int`` /
+``sql_hex_int`` (every md5-derived pseudo-random value).
 """
 
 from __future__ import annotations
@@ -168,13 +171,29 @@ def sql_money_avg(expr: str, out_digits: int = 4, digits: int = MONEY_GRAIN_DIGI
     )
 
 
-def hex_digit_val(ch: Column) -> Column:
-    """Value 0..15 of a lowercase hex digit character.
+def hex_int(s: Column | str, digits: int, start: int | Column = 1) -> Column:
+    """Value of ``digits`` hex characters of ``s`` from 1-based ``start``.
 
-    ``conv(ch, 16, 10)`` on the Spark side; the DuckDB oracles use
-    ``strpos('0123456789abcdef', ch) - 1`` — identical results. Used to
-    derive deterministic pseudo-random values from md5 hex strings for
-    SimHash bits and LSH hyperplanes, so the differential tests can
-    reproduce them bit-for-bit in plain SQL.
+    Every pseudo-random value in the operators (sampling buckets, join
+    salts, sketch hashes, SimHash bits, LSH planes) is an md5-hex
+    prefix read this way, so the DuckDB oracle can reproduce it with
+    ``sql_hex_int``. Returns conv's string; callers cast it. ``start``
+    may be a Column: ``F.substring`` takes one where ``Column.substr``
+    rejects a Column start with an int length.
     """
-    return F.conv(ch, 16, 10).cast("int")
+    return F.conv(F.substring(s, start, digits), 16, 10)
+
+
+def sql_hex_int(expr: str, digits: int, start: int | str = 1) -> str:
+    """DuckDB-side twin of hex_int (textual SQL).
+
+    DuckDB has no conv(), so the value is expanded positionally: each
+    digit's index in '0123456789abcdef', times its power of 16. A text
+    ``start`` is a per-row SQL position.
+    """
+    terms = []
+    for k in range(digits):
+        pos = start + k if isinstance(start, int) else f"{start} + {k}" if k else start
+        weight = f" * {16 ** (digits - 1 - k)}" if k < digits - 1 else ""
+        terms.append(f"(strpos('0123456789abcdef', substr({expr}, {pos}, 1)) - 1){weight}")
+    return "(" + " + ".join(terms) + ")"

@@ -18,9 +18,11 @@ from pyspark.sql import Window as W
 
 from mit_map_reduce_spark.catalog import load_table
 from mit_map_reduce_spark.functions.columns import (
+    hex_int,
     money_grains,
     money_sum,
     round_half_up,
+    sql_hex_int,
     sql_round,
 )
 from mit_map_reduce_spark.functions.rank import distributed_prefix, ntile_from_rank
@@ -688,9 +690,7 @@ def adv_ab_experiment_readout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load_table(spark, sf_dir, "events")
     arm = F.when(
-        F.conv(F.md5(F.col("user_id").cast("string")).substr(1, 1), 16, 10).cast("int")
-        < 8,
-        "treatment",
+        hex_int(F.md5(F.col("user_id").cast("string")), 1).cast("int") < 8, "treatment"
     ).otherwise("control")
     users = ev.select("user_id").distinct().select("user_id", arm.alias("arm"))
     per_user = (
@@ -2011,11 +2011,7 @@ def adv_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders")
     counts = orders.groupBy("o_orderpriority").agg(F.count("*").alias("true_n"))
-    h = F.conv(
-        F.md5(F.concat(F.col("o_orderpriority"), F.lit("|dp"))).substr(1, 8),
-        16,
-        10,
-    ).cast("long")
+    h = hex_int(F.md5(F.concat(F.col("o_orderpriority"), F.lit("|dp"))), 8).cast("long")
     u = (h.cast("double") + 0.5) / 4294967296.0
     centered = u - 0.5
     scale = 1.0 / DP_EPSILON
@@ -2269,17 +2265,6 @@ _SESSION_INTERVALS_CTES = f"""
         FROM s GROUP BY user_id, session_seq
     )"""
 
-def _sql_hex_int(expr: str, digits: int) -> str:
-    """Integer of the first ``digits`` md5 hex chars (DuckDB has no
-    conv(); positional expansion, same trick as text._HEX_BUCKET)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({expr}, {k + 1}, 1)) - 1)"
-        f" * {16 ** (digits - 1 - k)}"
-        for k in range(digits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def _logreg_oracle_sql() -> str:
     """The unrolled gradient-descent epochs as MATERIALIZED CTEs —
     each weight update replays the driver's exact float sequence."""
@@ -2452,11 +2437,11 @@ ORACLES = {
             SELECT o_orderpriority, true_n,
                    CAST(floor(
                        -{1.0 / DP_EPSILON} * sign(
-                           (CAST({_sql_hex_int(
+                           (CAST({sql_hex_int(
                                "md5(o_orderpriority || '|dp')", 8
                            )} AS DOUBLE) + 0.5) / 4294967296.0 - 0.5)
                        * ln(1.0 - 2.0 * abs(
-                           (CAST({_sql_hex_int(
+                           (CAST({sql_hex_int(
                                "md5(o_orderpriority || '|dp')", 8
                            )} AS DOUBLE) + 0.5) / 4294967296.0 - 0.5))
                        * 1e6 + 0.5) AS BIGINT) AS noise_g
@@ -3077,11 +3062,10 @@ ORACLES = {
         JOIN singles nb ON p.event_b = nb.event_type
         CROSS JOIN total t
     """,
-    "adv_ab_experiment_readout": """
+    "adv_ab_experiment_readout": f"""
         WITH users AS (
             SELECT DISTINCT user_id,
-                   CASE WHEN strpos('0123456789abcdef',
-                             substr(md5(CAST(user_id AS VARCHAR)), 1, 1)) - 1 < 8
+                   CASE WHEN {sql_hex_int("md5(CAST(user_id AS VARCHAR))", 1)} < 8
                         THEN 'treatment' ELSE 'control' END AS arm
             FROM events
         ),

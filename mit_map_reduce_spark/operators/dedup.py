@@ -43,10 +43,14 @@ from mit_map_reduce_spark.catalog import (
     scoped_conf,
     shared_persist,
     spread,
+    table_footer_count,
+    volume_width,
 )
 from mit_map_reduce_spark.functions.columns import (
+    hex_int,
     round_half_up,
     dot_product,
+    sql_hex_int,
     sql_round,
     tokenize_letters,
     vec_norm,
@@ -105,8 +109,6 @@ def _shingle_arrays_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         df = _doc_shingle_arrays(spark, sf_dir)
-        from mit_map_reduce_spark.catalog import table_footer_count
-
         if table_footer_count(sf_dir, "documents") > MINHASH_EAGER_STATS_DOCS:
             # materialize so the FIRST consumer plan sees real stats
             # (see MINHASH_EAGER_STATS_DOCS); shared_persist adopts the
@@ -350,9 +352,7 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     def contribs(h):
         # array of 32 contributions (+-1) for one token's md5 hex
         def one(b):
-            digit = F.conv(
-                h.substr((F.floor(b / 4) + 1).cast("int"), F.lit(1)), 16, 10
-            ).cast("int")
+            digit = hex_int(h, 1, (F.floor(b / 4) + 1).cast("int")).cast("int")
             bit = (
                 F.floor(digit / F.pow(F.lit(2.0), (3 - b % 4).cast("double"))).cast("long") % 2
             )
@@ -712,12 +712,10 @@ def embedding_dup_pairs_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     # work is rows x corpus x dim flops (one BLAS matmul per batch),
     # so width follows the PAIR volume (~3M dots/task ≈ 200 Mflop) —
     # not a fixed cores-wide spread, which at audit SFs buys mostly the
-    # fixed per-task Python cost (catalog.arrow_stage_width).
-    from mit_map_reduce_spark.catalog import arrow_stage_width
-
+    # fixed per-task Python cost (catalog.volume_width).
     n_vec = len(rows)
     scorer = all_pairs_scorer(lambda: bc.value, COSINE_DUP_THRESHOLD - 1e-4)
-    pairs = emb.repartition(arrow_stage_width(n_vec * n_vec, 3_000_000)).mapInPandas(
+    pairs = emb.repartition(volume_width(n_vec * n_vec, 3_000_000)).mapInPandas(
         scorer, PAIR_SCHEMA
     )
     return pairs.select(
@@ -824,7 +822,7 @@ def emb_lsh_pair_width(n_vectors: int, rows: int, bands: int, floor: int) -> int
     size. Returns ``floor`` (one task wave — no plan change) whenever
     the estimate fits it; capped at 4096 like any sane width."""
     est_pairs = bands * n_vectors * (n_vectors / 2 ** (rows + 1))
-    return max(floor, min(4096, math.ceil(est_pairs / EMB_LSH_PAIRS_PER_TASK)))
+    return volume_width(est_pairs, EMB_LSH_PAIRS_PER_TASK, floor=floor)
 
 
 #: Distinct word-5-gram shingles per document, measured 50.1 at sf0.1
@@ -848,18 +846,10 @@ def _shingle_stream_width(spark: SparkSession, sf_dir: str) -> int:
     SHINGLE_ROWS_PER_TASK) bounds each sort task's rows at any scale;
     committed SFs floor at the session width, keeping the pinned
     broadcast plans unchanged."""
-    from mit_map_reduce_spark.catalog import table_footer_count
-
-    return max(
-        bounded_shuffle_width(spark),
-        min(
-            4096,
-            math.ceil(
-                table_footer_count(sf_dir, "documents")
-                * SHINGLE_FANOUT
-                / SHINGLE_ROWS_PER_TASK
-            ),
-        ),
+    return volume_width(
+        table_footer_count(sf_dir, "documents") * SHINGLE_FANOUT,
+        SHINGLE_ROWS_PER_TASK,
+        floor=bounded_shuffle_width(spark),
     )
 
 
@@ -880,24 +870,11 @@ def _minhash_pair_width(spark: SparkSession, sf_dir: str) -> int:
     in the 32-task band-join stage, cold AND warm (zero at <= x60 —
     the per-task hash map just fit; the classic memory cliff).
     Committed SFs floor at the session width, plans unchanged."""
-    from mit_map_reduce_spark.catalog import table_footer_count
-
-    est_pairs = table_footer_count(sf_dir, "documents") * MINHASH_CAND_FANOUT
-    return max(
-        bounded_shuffle_width(spark),
-        min(4096, math.ceil(est_pairs / EMB_LSH_PAIRS_PER_TASK)),
+    return volume_width(
+        table_footer_count(sf_dir, "documents") * MINHASH_CAND_FANOUT,
+        EMB_LSH_PAIRS_PER_TASK,
+        floor=bounded_shuffle_width(spark),
     )
-
-
-def embeddings_footer_count(sf_dir: str) -> int:
-    """Corpus size from parquet FOOTER metadata only — no Spark job,
-    no data pages read. The bounded driver decision that sizes the
-    LSH: at any scale this is a metadata read over file footers
-    (pyarrow dataset handles both a single file and a directory of
-    part files)."""
-    from mit_map_reduce_spark.catalog import table_footer_count
-
-    return table_footer_count(sf_dir, "embeddings")
 
 
 def _emb_band_keys(emb: DataFrame, rows: int, bands: int) -> DataFrame:
@@ -943,7 +920,7 @@ def embedding_lsh_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from mit_map_reduce_spark.operators.similarity import _emb_with_norm
 
-    n_vectors = embeddings_footer_count(sf_dir)
+    n_vectors = table_footer_count(sf_dir, "embeddings")
     rows, bands = emb_lsh_params(n_vectors)
     # session-shared normed corpus (same cache every ANN query probes)
     emb = _emb_with_norm(spark, sf_dir)
@@ -1195,9 +1172,7 @@ def dedup_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates combine via 1-row broadcast cross joins.
     """
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    bucket = F.conv(
-        F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10
-    ).cast("int") % 100
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string")), 4).cast("int") % 100
     split = docs.select("doc_id", (bucket < LEAK_TEST_PCT).alias("is_test"))
     counts = split.agg(
         F.count(F.when(~F.col("is_test"), 1)).alias("n_train"),
@@ -1341,9 +1316,7 @@ def bbit_minhash_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_signatures(spark, sf_dir).select(
         "doc_id",
         "h",
-        (F.conv(F.substring("minhash", 32, 1), 16, 10).cast("int") % (1 << BBIT_BITS)).alias(
-            "bb"
-        ),
+        (hex_int("minhash", 1, 32).cast("int") % (1 << BBIT_BITS)).alias("bb"),
     )
     a = sig.select(F.col("doc_id").alias("doc_a"), "h", F.col("bb").alias("ba"))
     b = sig.select(F.col("doc_id").alias("doc_b"), "h", F.col("bb").alias("bbv"))
@@ -1808,9 +1781,9 @@ def _embedding_lsh_oracle_sql() -> str:
         ),
         planes AS (
             SELECT t.h, u.j,
-                   CAST(strpos('0123456789abcdef',
-                        substr(md5(CAST(t.h AS VARCHAR) || '_' || CAST(u.j AS VARCHAR)), 1, 1)) - 1
-                        AS DOUBLE) - 7.5 AS p
+                   CAST({sql_hex_int(
+                       "md5(CAST(t.h AS VARCHAR) || '_' || CAST(u.j AS VARCHAR))", 1
+                   )} AS DOUBLE) - 7.5 AS p
             FROM range({n_planes}) t(h) CROSS JOIN range({DIM}) u(j)
         ),
         comps AS (
@@ -1859,8 +1832,7 @@ _SIMHASH_FP_CTES = f"""
     wc AS (SELECT doc_id, word, count(*) AS cnt FROM words GROUP BY doc_id, word),
     per_bit AS (
         SELECT doc_id, b,
-               sum(cnt * (2 * (((strpos('0123456789abcdef',
-                        substr(md5(word), CAST(b // 4 AS INTEGER) + 1, 1)) - 1)
+               sum(cnt * (2 * (({sql_hex_int("md5(word)", 1, "CAST(b // 4 AS INTEGER) + 1")}
                     >> (3 - CAST(b % 4 AS INTEGER))) & 1) - 1)) AS s
         FROM wc CROSS JOIN range(32) t(b)
         GROUP BY doc_id, b
@@ -1904,17 +1876,11 @@ ORACLES["dedup_simhash_band_pairs"] = f"""
 # accumulation — functions/vectorized.py), so it shares its oracle.
 ORACLES["dedup_embedding_cosine_pairs_np"] = ORACLES["dedup_embedding_cosine_pairs"]
 
-#: Engine-stable hash split (text.py's _HEX_BUCKET idiom): first 4
-#: md5 hex digits of the doc id as an integer, mod 100.
-_SPLIT_BUCKET = """( (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-               + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-               + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-               + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) )"""
-
 ORACLES["dedup_split_leakage_audit"] = f"""
     WITH {_PAIRS_CTES},
     splits AS (
-        SELECT doc_id, ({_SPLIT_BUCKET} % 100) < {LEAK_TEST_PCT} AS is_test
+        SELECT doc_id,
+               ({sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 4)} % 100) < {LEAK_TEST_PCT} AS is_test
         FROM documents
     ),
     tagged AS (
@@ -1983,8 +1949,7 @@ ORACLES["dedup_bbit_minhash_report"] = f"""
     WITH {_PAIRS_CTES},
     bb AS (
         SELECT doc_id, h,
-               (strpos('0123456789abcdef', substr(minhash, 32, 1)) - 1)
-                   % {1 << BBIT_BITS} AS bb
+               {sql_hex_int("minhash", 1, 32)} % {1 << BBIT_BITS} AS bb
         FROM sig
     ),
     matched AS (

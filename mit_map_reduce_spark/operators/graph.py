@@ -25,8 +25,6 @@ link graphs that are naturally bidirectional, like trade relations).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -36,6 +34,8 @@ from mit_map_reduce_spark.catalog import (
     load_table,
     scoped_conf,
     shared_persist,
+    table_footer_count,
+    volume_width,
 )
 from mit_map_reduce_spark.functions.columns import round_half_up
 
@@ -57,14 +57,11 @@ def _fixpoint_width(edge_count: int) -> int:
     """Scoped shuffle width for the iterative fixpoint builds, derived
     from the persisted edge count: the GRAPH_SHUFFLE_PARTITIONS floor
     until per-task volume would exceed GRAPH_EDGES_PER_TASK, then one
-    task per ~GRAPH_EDGES_PER_TASK edges, capped at 4096 — the same
-    volume-derived-width law as dedup.emb_lsh_pair_width, closing the
+    task per ~GRAPH_EDGES_PER_TASK edges, capped at 4096 — the
+    volume-derived-width law (catalog.volume_width), closing the
     docstring's 'raise GRAPH_SHUFFLE_PARTITIONS with the data' knob
     into the default path."""
-    return max(
-        GRAPH_SHUFFLE_PARTITIONS,
-        min(4096, math.ceil(max(int(edge_count), 1) / GRAPH_EDGES_PER_TASK)),
-    )
+    return volume_width(edge_count, GRAPH_EDGES_PER_TASK, floor=GRAPH_SHUFFLE_PARTITIONS)
 
 
 #: Scope-entry conf of every fixpoint build: the graph-suite width
@@ -99,11 +96,8 @@ def _edge_build_width(spark: SparkSession, sf_dir: str) -> int:
     (the join output is ~one row per lineitem) via a footer-only
     metadata read — the artifact builds lazily outside any scoped-conf
     block, so its width must be derivable before any count() job."""
-    from mit_map_reduce_spark.catalog import table_footer_count
-
-    return max(
-        _bounded_width(spark),
-        min(4096, math.ceil(table_footer_count(sf_dir, "lineitem") / GRAPH_EDGES_PER_TASK)),
+    return volume_width(
+        table_footer_count(sf_dir, "lineitem"), GRAPH_EDGES_PER_TASK, floor=_bounded_width(spark)
     )
 
 
@@ -124,18 +118,10 @@ def _pair_stream_width(spark: SparkSession, sf_dir: str) -> int:
     rows per task; zero at <= x30 where the smaller corpus still fit).
     Same footer-only derivation discipline as _edge_build_width; floors
     at the session width, so committed SFs keep their pinned plans."""
-    from mit_map_reduce_spark.catalog import table_footer_count
-
-    return max(
-        _bounded_width(spark),
-        min(
-            4096,
-            math.ceil(
-                table_footer_count(sf_dir, "lineitem")
-                * KNN_PAIR_FANOUT
-                / GRAPH_EDGES_PER_TASK
-            ),
-        ),
+    return volume_width(
+        table_footer_count(sf_dir, "lineitem") * KNN_PAIR_FANOUT,
+        GRAPH_EDGES_PER_TASK,
+        floor=_bounded_width(spark),
     )
 
 

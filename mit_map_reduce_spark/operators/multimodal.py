@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from mit_map_reduce_spark.functions.columns import round_half_up
-from mit_map_reduce_spark.catalog import arrow_stage_width, load_table, table_footer_count
+from mit_map_reduce_spark.functions.columns import hex_int, round_half_up, sql_hex_int
+from mit_map_reduce_spark.catalog import load_table, table_footer_count, volume_width
 
 DECODE_SCHEMA = "doc_id bigint, media_type string, width int, height int, n_frames int"
 
@@ -44,12 +44,12 @@ def _assets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Volume-derived width (r15, guide §2/§4): every mm_* consumer
     # feeds this frame straight into a mapInPandas decode whose
     # per-task Python cost is fixed (payload-independent, ~0.08 CPU-s
-    # per mapInPandas task; catalog.arrow_stage_width), so the width
+    # per mapInPandas task; catalog.volume_width), so the width
     # follows the asset count instead of a fixed cores-wide spread.
     # The stub decode is vectorized and cheap; a real codec deployment
     # lowers MM_ASSETS_PER_TASK to its measured decode throughput.
     docs = load_table(spark, sf_dir, "documents").repartition(
-        arrow_stage_width(table_footer_count(sf_dir, "documents"), MM_ASSETS_PER_TASK)
+        volume_width(table_footer_count(sf_dir, "documents"), MM_ASSETS_PER_TASK)
     )
     media = (
         F.when(F.col("doc_id") % 3 == 0, "image")
@@ -386,7 +386,7 @@ def mm_shot_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled-frame counts, never raw bytes.
     """
     frames = mm_frame_sample(spark, sf_dir)
-    ph = F.conv(F.substring("frame_md5", 1, 4), 16, 10).cast("long")
+    ph = hex_int("frame_md5", 4).cast("long")
     cur = frames.select("doc_id", "frame_idx", ph.alias("phash"))
     w = W.partitionBy("doc_id").orderBy("frame_idx")
     lagged = cur.withColumn("prev", F.lag("phash").over(w))
@@ -416,7 +416,7 @@ def mm_keyframe_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is the only shuffle past the map-side frame generation.
     """
     frames = mm_frame_sample(spark, sf_dir)
-    ph = F.conv(F.substring("frame_md5", 1, 4), 16, 10).cast("long")
+    ph = hex_int("frame_md5", 4).cast("long")
     cur = frames.select("doc_id", "frame_idx", ph.alias("phash"))
     w = W.partitionBy("doc_id").orderBy("frame_idx")
     d = F.bit_count(F.col("phash").bitwiseXOR(F.lag("phash").over(w)))
@@ -450,17 +450,7 @@ _MEDIA = """CASE CAST(doc_id % 3 AS INTEGER)
                 WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END"""
 
 #: value of the first 3 md5 hex digits of "doc_id:w" (t.w in scope)
-_AUDIO_HEX = """( (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(t.w AS VARCHAR)), 1, 1)) - 1) * 256
-                 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(t.w AS VARCHAR)), 2, 1)) - 1) * 16
-                 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(t.w AS VARCHAR)), 3, 1)) - 1) )"""
-
-#: Value of the first 4 hex digits of column ``m`` (a 16-bit int).
-_HEX4 = (
-    "((strpos('0123456789abcdef', substr(m, 1, 1)) - 1) * 4096"
-    " + (strpos('0123456789abcdef', substr(m, 2, 1)) - 1) * 256"
-    " + (strpos('0123456789abcdef', substr(m, 3, 1)) - 1) * 16"
-    " + (strpos('0123456789abcdef', substr(m, 4, 1)) - 1))"
-)
+_AUDIO_HEX = sql_hex_int("md5(CAST(doc_id AS VARCHAR) || ':' || CAST(t.w AS VARCHAR))", 3)
 
 #: Shared CTE chain rebuilding the sampled + 16-bit-hashed video
 #: frames (the oracle twin of mm_frame_sample + the phash projection) —
@@ -478,7 +468,7 @@ _HASHED_FRAMES_CTES = f"""v AS (
             )
         ),
         hashed AS (
-            SELECT doc_id, frame_idx, CAST({_HEX4} AS BIGINT) AS phash
+            SELECT doc_id, frame_idx, CAST({sql_hex_int("m", 4)} AS BIGINT) AS phash
             FROM frames
         )"""
 
@@ -614,8 +604,7 @@ ORACLES = {
         SELECT dec.doc_id, dec.media_type, dec.width, dec.height, dec.n_frames,
                rsz.new_width, rsz.new_height,
                array_to_string(list_transform(range(1, {N_FEATURES + 1}),
-                   i -> printf('%.4f', floor(((strpos('0123456789abcdef',
-                            substr(md5(dec.text), CAST(i AS INTEGER), 1)) - 1)
+                   i -> printf('%.4f', floor(({sql_hex_int("md5(dec.text)", 1, "CAST(i AS INTEGER)")}
                         / 15.0) * 10000.0 + 0.5) / 10000.0)), '|') AS features
         FROM dec LEFT JOIN rsz ON rsz.doc_id = dec.doc_id
     """,
@@ -647,8 +636,7 @@ ORACLES = {
     "mm_feature_extract": f"""
         SELECT doc_id,
                array_to_string(list_transform(range(1, {N_FEATURES + 1}),
-                   i -> printf('%.4f', floor(((strpos('0123456789abcdef',
-                            substr(md5(text), CAST(i AS INTEGER), 1)) - 1)
+                   i -> printf('%.4f', floor(({sql_hex_int("md5(text)", 1, "CAST(i AS INTEGER)")}
                         / 15.0) * 10000.0 + 0.5) / 10000.0)), '|') AS features
         FROM documents
     """,

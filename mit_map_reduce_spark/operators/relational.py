@@ -22,10 +22,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from mit_map_reduce_spark.functions.columns import (
+    hex_int,
     money_avg,
     money_grains,
     money_sum,
     round_half_up,
+    sql_hex_int,
     sql_money_avg,
     sql_money_grains,
     sql_money_sum,
@@ -1005,7 +1007,7 @@ def rel_salted_agg_events_per_type(spark: SparkSession, sf_dir: str) -> DataFram
     test (md5 of event_id), but any uniform value works in production.
     """
     ev = _t(spark, sf_dir, "events")
-    salt = F.conv(F.md5(F.col("event_id").cast("string")).substr(1, 2), 16, 10).cast("int") % N_SALTS
+    salt = hex_int(F.md5(F.col("event_id").cast("string")), 2).cast("int") % N_SALTS
     # Grain accumulation makes the two-stage sum recombine EXACTLY —
     # integer partials are associative, so salting cannot change the
     # answer by even an ulp (floats only promise that approximately).
@@ -1411,10 +1413,7 @@ def adv_salted_skew_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted_dim = cust.withColumn(
         "salt", F.explode(F.array(*[F.lit(i) for i in range(JOIN_SALTS)]))
     )
-    probe_salt = (
-        F.conv(F.md5(F.col("event_id").cast("string")).substr(1, 2), 16, 10).cast("int")
-        % JOIN_SALTS
-    )
+    probe_salt = hex_int(F.md5(F.col("event_id").cast("string")), 2).cast("int") % JOIN_SALTS
     joined = ev.withColumn("salt", probe_salt).join(
         salted_dim, ["user_id", "salt"]
     )
@@ -2024,9 +2023,7 @@ def rel_table_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
                 cols.append(F.unix_micros(c.cast("timestamp")).cast("string"))
             else:
                 cols.append(c.cast("string"))
-        h = F.conv(F.md5(F.concat_ws("|", *cols)).substr(1, 12), 16, 10).cast(
-            "decimal(38,0)"
-        )
+        h = hex_int(F.md5(F.concat_ws("|", *cols)), 12).cast("decimal(38,0)")
         frames.append(
             df.agg(
                 F.lit(t).alias("table_name"),
@@ -2623,17 +2620,6 @@ def _benford_oracle_sql() -> str:
     """
 
 
-def _hex_int_sql(expr: str, digits: int) -> str:
-    """Integer value of the first ``digits`` hex chars of ``expr``
-    (DuckDB has no conv(); expand positionally like _HEX_BUCKET)."""
-    terms = [
-        f"(strpos('0123456789abcdef', substr({expr}, {k + 1}, 1)) - 1)"
-        f" * {16 ** (digits - 1 - k)}"
-        for k in range(digits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 def _checksum_oracle_sql() -> str:
     selects = []
     for t, schema in CHECKSUM_SCHEMAS.items():
@@ -2651,7 +2637,7 @@ def _checksum_oracle_sql() -> str:
         selects.append(
             f"""SELECT '{t}' AS table_name,
                    CAST(count(*) AS BIGINT) AS n_rows,
-                   CAST(sum(CAST({_hex_int_sql(row, 12)} AS HUGEINT)) AS VARCHAR)
+                   CAST(sum(CAST({sql_hex_int(row, 12)} AS HUGEINT)) AS VARCHAR)
                        AS checksum
             FROM {t}"""
         )

@@ -11,9 +11,9 @@ Two paths, as a large-scale pipeline needs both:
   key — this is the plan shape that survives a 100 TB corpus, at the
   price of approximate recall.
 
-Hyperplanes are derived from md5 hex digits (see functions.columns.
-hex_digit_val) instead of an RNG so the DuckDB oracle reproduces them
-exactly.
+Hyperplanes are derived from md5 hex digits (driver-side hashlib,
+oracle twin functions.columns.sql_hex_int) instead of an RNG so the
+DuckDB oracle reproduces them exactly.
 """
 
 from __future__ import annotations
@@ -24,7 +24,6 @@ from pyspark.sql import Window as W
 
 from mit_map_reduce_spark.catalog import (
     PUBLISH_REV,
-    arrow_stage_width,
     corpus_fingerprint,
     load_table,
     publish_once,
@@ -33,8 +32,9 @@ from mit_map_reduce_spark.catalog import (
     shared_persist,
     spread,
     table_footer_count,
+    volume_width,
 )
-from mit_map_reduce_spark.functions.columns import round_half_up, dot_product, vec_norm
+from mit_map_reduce_spark.functions.columns import round_half_up, dot_product, sql_hex_int, vec_norm
 
 TOP_K = 5
 N_PLANES = 4  # 2^4 = 16 buckets
@@ -108,11 +108,11 @@ def ann_bruteforce_topk_np(spark: SparkSession, sf_dir: str) -> DataFrame:
     # volume-derived Python-stage width (r15, guide §2/§4): per-task
     # work is rows x |queries| x dim flops; ~3M candidate dots per
     # task keeps tasks ~200 Mflop, far above the fixed per-task
-    # Python cost (catalog.arrow_stage_width: ~0.08 CPU-s per
+    # Python cost (catalog.volume_width: ~0.08 CPU-s per
     # mapInPandas task). coalesce is narrow: never exceeds the
     # cached corpus's one-task-wave width.
     n_vec = table_footer_count(sf_dir, "embeddings")
-    width = arrow_stage_width(n_vec * max(1, n_vec // 100), 3_000_000)
+    width = volume_width(n_vec * max(1, n_vec // 100), 3_000_000)
     scored = emb.coalesce(width).mapInPandas(scorer, schema=SCORED_SCHEMA)
     w = W.partitionBy("query_id").orderBy(F.col("c").desc(), F.col("neighbor_id"))
     return (
@@ -265,7 +265,7 @@ TRAIN_SAMPLE_MOD = 4
 #: IVF-assignment rows per Python task: k(16) x dim(64) multiply-adds
 #: per row -> ~200 Mflop per task, far above the measured fixed
 #: per-task Python cost (~0.08 CPU-s per mapInPandas task, see
-#: catalog.arrow_stage_width).
+#: catalog.volume_width).
 ASSIGN_ROWS_PER_TASK = 200_000
 
 
@@ -300,7 +300,7 @@ def _assign_cells(
         # input must not fan one fixed-cost Python task per cached
         # corpus partition; coalesce is narrow and never exceeds the
         # cache's own width, so at scale this is a no-op.
-        embs = embs.coalesce(arrow_stage_width(n_rows, ASSIGN_ROWS_PER_TASK, floor=4))
+        embs = embs.coalesce(volume_width(n_rows, ASSIGN_ROWS_PER_TASK, floor=4))
     return embs.select("vec_id", "embedding", "nrm").mapInPandas(scorer, ASSIGN_SCHEMA)
 
 
@@ -427,7 +427,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mit_map_reduce_spark.functions.vectorized import cosine_np
 
     est_cand = (n_vec // 100 + 1) * N_PROBE * (n_vec // K_CELLS + 1)
-    cand = cand.coalesce(arrow_stage_width(est_cand, 3_000_000))
+    cand = cand.coalesce(volume_width(est_cand, 3_000_000))
     scored = cand.join(F.broadcast(queries), "query_id").select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
@@ -731,7 +731,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # candidate-volume Python-stage width, as in ann_ivf_topk (r15)
     est_cand = (n_vec // 100 + 1) * N_PROBE * (n_vec // K_CELLS + 1)
-    cand = cand.coalesce(arrow_stage_width(est_cand, 3_000_000))
+    cand = cand.coalesce(volume_width(est_cand, 3_000_000))
     scored = (
         cand.join(F.broadcast(queries), "query_id")
         .filter(F.col("label") != F.col("q_label"))
@@ -1895,9 +1895,9 @@ ORACLES = {
         WITH {_NRM_CTE},
         planes AS (
             SELECT t.h, u.j,
-                   CAST(strpos('0123456789abcdef',
-                        substr(md5(CAST(t.h AS VARCHAR) || '_' || CAST(u.j AS VARCHAR)), 1, 1)) - 1
-                        AS DOUBLE) - 7.5 AS p
+                   CAST({sql_hex_int(
+                       "md5(CAST(t.h AS VARCHAR) || '_' || CAST(u.j AS VARCHAR))", 1
+                   )} AS DOUBLE) - 7.5 AS p
             FROM range({N_PLANES}) t(h) CROSS JOIN range({DIM}) u(j)
         ),
         comps AS (

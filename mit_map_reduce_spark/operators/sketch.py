@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mit_map_reduce_spark.catalog import load_table
-from mit_map_reduce_spark.functions.columns import round_half_up, sql_round
+from mit_map_reduce_spark.functions.columns import hex_int, round_half_up, sql_hex_int, sql_round
 
 #: HLL++ relative standard deviation; the acceptance tolerance is 5
 #: sigma above it, so a correct sketch fails the boolean with
@@ -109,10 +109,7 @@ CMS_TOP = 20
 
 
 def _cms_bucket(i: int, key):
-    h = F.md5(F.concat(F.lit(f"{i}:"), key))
-    return (
-        F.conv(h.substr(1, 2), 16, 10).cast("int") % CMS_WIDTH
-    )
+    return hex_int(F.md5(F.concat(F.lit(f"{i}:"), key)), 2).cast("int") % CMS_WIDTH
 
 
 def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -274,8 +271,7 @@ BLOOM_MIN_BAL = 8000.0
 
 
 def _bloom_bit(i: int, key):
-    h = F.md5(F.concat(F.lit(f"{i}:"), key.cast("string")))
-    return F.conv(h.substr(1, 3), 16, 10).cast("int") % BLOOM_BITS
+    return hex_int(F.md5(F.concat(F.lit(f"{i}:"), key.cast("string"))), 3).cast("int") % BLOOM_BITS
 
 
 def sketch_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -428,13 +424,7 @@ def sketch_ams_second_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.struct(
                         F.lit(i).alias("i"),
                         (
-                            F.conv(
-                                F.md5(F.concat(F.lit(f"{i}:"), F.col("word"))).substr(
-                                    1, 1
-                                ),
-                                16,
-                                10,
-                            ).cast("int")
+                            hex_int(F.md5(F.concat(F.lit(f"{i}:"), F.col("word"))), 1).cast("int")
                             % 2
                             * 2
                             - 1
@@ -709,21 +699,13 @@ QUERIES = {
 }
 
 #: hex value of the first two md5 digits of "i:word", mod CMS_WIDTH
-_CMS_BUCKET_SQL = (
-    "((strpos('0123456789abcdef', substr(md5(CAST(t.i AS VARCHAR) || ':' || word), 1, 1)) - 1) * 16"
-    " + (strpos('0123456789abcdef', substr(md5(CAST(t.i AS VARCHAR) || ':' || word), 2, 1)) - 1))"
-    f" % {CMS_WIDTH}"
-)
+_CMS_BUCKET_SQL = sql_hex_int("md5(CAST(t.i AS VARCHAR) || ':' || word)", 2) + f" % {CMS_WIDTH}"
 
 def _bloom_bit_sql(key_expr: str) -> str:
     """Hex value of the first three md5 digits of "i:key", mod BLOOM_BITS
     (t.i is the hash index in scope)."""
     m = f"md5(CAST(t.i AS VARCHAR) || ':' || CAST({key_expr} AS VARCHAR))"
-    return (
-        f"((strpos('0123456789abcdef', substr({m}, 1, 1)) - 1) * 256"
-        f" + (strpos('0123456789abcdef', substr({m}, 2, 1)) - 1) * 16"
-        f" + (strpos('0123456789abcdef', substr({m}, 3, 1)) - 1)) % {BLOOM_BITS}"
-    )
+    return f"{sql_hex_int(m, 3)} % {BLOOM_BITS}"
 
 
 _QMERGE_QS_SQL = ", ".join(f"({q})" for q in QMERGE_QS)
@@ -822,9 +804,7 @@ ORACLES = {
         freqs AS (SELECT word, count(*) AS c FROM words GROUP BY word),
         signed AS (
             SELECT c, t.i,
-                   ((strpos('0123456789abcdef',
-                        substr(md5(CAST(t.i AS VARCHAR) || ':' || word), 1, 1))
-                     - 1) % 2) * 2 - 1 AS sign
+                   ({sql_hex_int("md5(CAST(t.i AS VARCHAR) || ':' || word)", 1)} % 2) * 2 - 1 AS sign
             FROM freqs CROSS JOIN range({AMS_DEPTH}) t(i)
         ),
         z AS (SELECT i, sum(sign * c) AS z FROM signed GROUP BY i),

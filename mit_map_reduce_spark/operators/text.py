@@ -13,12 +13,20 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from mit_map_reduce_spark.catalog import load_table, shared_persist, spread, table_footer_count
-from mit_map_reduce_spark.functions.columns import round_half_up, sql_round, tokenize_letters, whitespace_tokens, word_kgrams
+from mit_map_reduce_spark.functions.columns import (
+    hex_int,
+    round_half_up,
+    sql_hex_int,
+    sql_round,
+    tokenize_letters,
+    whitespace_tokens,
+    word_kgrams,
+)
 from mit_map_reduce_spark.functions.rank import distributed_prefix
 
 STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
@@ -36,6 +44,12 @@ LANG_LEXICON: dict[str, tuple[str, ...]] = {
 
 FP_SHINGLE_K = 5
 FP_KEEP = 4  # fingerprint = 4 smallest shingle hashes
+
+
+def _doc_hex() -> Column:
+    """The sampling bucket source: first 4 md5 hex digits of the
+    stringified doc_id (oracle twin: _HEX_BUCKET)."""
+    return hex_int(F.md5(F.col("doc_id").cast("string")), 4)
 
 
 def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,9 +268,7 @@ def text_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep = docs.groupBy(F.md5("text").alias("h")).agg(
         F.min("doc_id").alias("keep_doc_id")
     )
-    bucket = F.conv(F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10).cast(
-        "int"
-    ) % 100
+    bucket = _doc_hex().cast("int") % 100
     return (
         docs.join(keep, F.md5(docs.text) == keep.h)
         .filter(F.col("doc_id") == F.col("keep_doc_id"))
@@ -282,9 +294,7 @@ def text_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod 100.
     """
     docs = load_table(spark, sf_dir, "documents")
-    bucket = F.conv(F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10).cast(
-        "int"
-    ) % 100
+    bucket = _doc_hex().cast("int") % 100
     return docs.filter(bucket < SAMPLE_PCT).select(
         "doc_id", "lang", F.length("text").alias("n_chars")
     )
@@ -441,7 +451,7 @@ def text_hash_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = F.sequence(F.lit(0), F.lit(HASH_FEATURE_DIM - 1))
 
     def one_hot(tok):
-        digit = F.conv(F.md5(tok).substr(1, 1), 16, 10).cast("int")
+        digit = hex_int(F.md5(tok), 1).cast("int")
         return F.transform(buckets, lambda b: F.when(digit == b, 1).otherwise(0).cast("bigint"))
 
     zero = F.array_repeat(F.lit(0).cast("bigint"), HASH_FEATURE_DIM)
@@ -592,10 +602,7 @@ def text_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     sizes = docs.groupBy("lang").agg(F.count("*").alias("n_lang"))
-    bucket = (
-        F.conv(F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10).cast("long")
-        % 10000
-    )
+    bucket = _doc_hex().cast("long") % 10000
     return (
         docs.join(F.broadcast(sizes), "lang")
         .withColumn("bucket", bucket)
@@ -674,10 +681,7 @@ def text_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     qual = text_quality(spark, sf_dir).select("doc_id", "quality")
-    bucket = (
-        F.conv(F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10).cast("long")
-        % 10000
-    )
+    bucket = _doc_hex().cast("long") % 10000
     return (
         docs.join(qual, "doc_id")
         .withColumn("bucket", bucket)
@@ -709,9 +713,7 @@ def text_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread(load_table(spark, sf_dir, "documents"))
     w = F.size(whitespace_tokens(F.lower(F.col("text")))).cast("double")
-    h = F.conv(F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10).cast(
-        "long"
-    )
+    h = _doc_hex().cast("long")
     u = (h + 1).cast("double") / 65536.0
     scored = docs.select(
         "doc_id",
@@ -824,10 +826,7 @@ def text_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "quality")
     )
     sizes = survivors.groupBy("lang").agg(F.count("*").alias("n_lang"))
-    bucket = (
-        F.conv(F.md5(F.col("doc_id").cast("string")).substr(1, 4), 16, 10).cast("long")
-        % 10000
-    )
+    bucket = _doc_hex().cast("long") % 10000
     return (
         survivors.join(F.broadcast(sizes), "lang")
         .withColumn("bucket", bucket)
@@ -2458,12 +2457,9 @@ _LEX_VALUES = ", ".join(
 )
 _LANG_VALUES = ", ".join(f"('{lang}')" for lang in LANG_LEXICON)
 
-#: Hex-bucket SQL fragment: value of the first 4 md5 hex digits of the
-#: stringified doc_id (same arithmetic as the sampling oracles).
-_HEX_BUCKET = """( (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-                   + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-                   + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-                   + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) )"""
+#: Oracle twin of _doc_hex(): the first 4 md5 hex digits of the
+#: stringified doc_id as an integer.
+_HEX_BUCKET = sql_hex_int("md5(CAST(doc_id AS VARCHAR))", 4)
 
 def _mojibake_oracle_sql() -> str:
     per_doc_cols = ", ".join(
@@ -3052,7 +3048,7 @@ ORACLES = {
             FROM m
         ),
         b AS (
-            SELECT d.doc_id, d.lang, q.quality, {_HEX_BUCKET.replace("doc_id", "d.doc_id")} % 10000 AS bucket
+            SELECT d.doc_id, d.lang, q.quality, {sql_hex_int("md5(CAST(d.doc_id AS VARCHAR))", 4)} % 10000 AS bucket
             FROM documents d JOIN q ON q.doc_id = d.doc_id
         )
         SELECT doc_id, lang, quality, CAST(bucket AS BIGINT) AS bucket
@@ -3074,7 +3070,7 @@ ORACLES = {
         ),
         bucketed AS (
             SELECT doc_id,
-                   strpos('0123456789abcdef', substr(md5(word), 1, 1)) - 1 AS b,
+                   {sql_hex_int("md5(word)", 1)} AS b,
                    count(*) AS c
             FROM words GROUP BY doc_id, b
         ),
@@ -3217,21 +3213,12 @@ ORACLES = {
         JOIN keep ON d.doc_id = keep.keep_doc_id
         JOIN q ON q.doc_id = d.doc_id
         WHERE q.quality >= {PIPE_MIN_QUALITY}
-          AND ( (strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-              + (strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-              + (strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-              + (strpos('0123456789abcdef', substr(md5(CAST(d.doc_id AS VARCHAR)), 4, 1)) - 1)
-              ) % 100 < {PIPE_SAMPLE_PCT}
+          AND {sql_hex_int("md5(CAST(d.doc_id AS VARCHAR))", 4)} % 100 < {PIPE_SAMPLE_PCT}
     """,
     "text_deterministic_sample": f"""
         WITH b AS (
             SELECT doc_id, lang, length(text) AS n_chars,
-                   -- value of the first 4 hex digits of md5(doc_id)
-                   ( (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 4096
-                   + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 256
-                   + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 16
-                   + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1)
-                   ) % 100 AS bucket
+                   {_HEX_BUCKET} % 100 AS bucket
             FROM documents
         )
         SELECT doc_id, lang, CAST(n_chars AS INTEGER) AS n_chars
@@ -3375,7 +3362,7 @@ ORACLES["text_training_mix"] = f"""
     sizes AS (SELECT lang, count(*) AS n_lang FROM surv GROUP BY lang)
     SELECT surv.doc_id, surv.lang, surv.quality
     FROM surv JOIN sizes ON sizes.lang = surv.lang
-    WHERE ({_HEX_BUCKET.replace("doc_id", "surv.doc_id")} % 10000) * sizes.n_lang
+    WHERE ({sql_hex_int("md5(CAST(surv.doc_id AS VARCHAR))", 4)} % 10000) * sizes.n_lang
           < 10000 * {STRATA_TARGET}
 """
 

@@ -40,6 +40,7 @@ from mit_map_reduce_spark.functions.columns import (
     money_grains,
     money_sum,
     round_half_up,
+    sql_hex_int,
     sql_money_sum,
 )
 from mit_map_reduce_spark.catalog import (
@@ -237,7 +238,9 @@ def _drain(
     Scoped set/restore: the value is captured when the stream starts.
     A drain that commits nothing (a watermark that closed no window, a
     feed that yielded no batch) returns an empty frame with
-    ``out.schema``, not a read error.
+    ``out.schema``, not a read error. Every read of sink files (the
+    read-back and the upsert's snapshot) passes ``out.schema``, so none
+    pays a schema-inference job.
     """
     spark = out.sparkSession
     if run_dir is None:
@@ -253,7 +256,7 @@ def _drain(
                 snap = fh.read().strip()
         merged = batch_df
         if snap:
-            prev = spark.read.parquet(snap)
+            prev = spark.read.schema(out.schema).parquet(snap)
             keep = prev.join(batch_df.select(*keys), keys, "left_anti")
             merged = keep.unionByName(batch_df)
         # attempt-unique: see the docstring's post-swap-crash replay note
@@ -283,10 +286,10 @@ def _drain(
         if os.path.isdir(sink) and any(
             f.endswith(".parquet") for f in os.listdir(sink) if not f.startswith("_")
         ):
-            return spark.read.parquet(sink)
+            return spark.read.schema(out.schema).parquet(sink)
     elif os.path.exists(current):
         with open(current) as fh:
-            return spark.read.parquet(fh.read().strip())
+            return spark.read.schema(out.schema).parquet(fh.read().strip())
     return spark.createDataFrame([], out.schema)
 
 
@@ -444,9 +447,8 @@ def stream_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         dst = os.path.join(feed, f"batch{i}.parquet")
         _stage_single_parquet(b, dst)
         os.utime(dst, (1_000_000_000 + i * 100, 1_000_000_000 + i * 100))
-    schema = spark.read.parquet(os.path.join(feed, "batch0.parquet")).schema
     stream = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(feed)
     )
@@ -748,24 +750,12 @@ def stream_cms_user_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin of the batch sketch, with the same md5-deterministic cells the
     oracle rebuilds exactly.
     """
-    from mit_map_reduce_spark.operators.sketch import CMS_DEPTH, CMS_WIDTH
+    from mit_map_reduce_spark.operators.sketch import CMS_DEPTH, _cms_bucket
 
     ev = _events_stream(spark, sf_dir)
     structs = F.array(
         *[
-            F.struct(
-                F.lit(i).alias("i"),
-                (
-                    F.conv(
-                        F.md5(
-                            F.concat(F.lit(f"{i}:"), F.col("user_id").cast("string"))
-                        ).substr(1, 2),
-                        16,
-                        10,
-                    ).cast("int")
-                    % CMS_WIDTH
-                ).alias("b"),
-            )
+            F.struct(F.lit(i).alias("i"), _cms_bucket(i, F.col("user_id").cast("string")).alias("b"))
             for i in range(CMS_DEPTH)
         ]
     )
@@ -1206,15 +1196,12 @@ ORACLES = {
                CAST(count(*) AS BIGINT) AS n_seen
         FROM documents GROUP BY md5(text)
     """,
-    "stream_cms_user_sketch": """
+    "stream_cms_user_sketch": f"""
         WITH wm AS (SELECT max(ts) - INTERVAL 1 HOUR AS w FROM events),
         cells AS (
             SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS ws,
                    CAST(t.i AS INTEGER) AS i,
-                   CAST(((strpos('0123456789abcdef',
-                            substr(md5(CAST(t.i AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)), 1, 1)) - 1) * 16
-                       + (strpos('0123456789abcdef',
-                            substr(md5(CAST(t.i AS VARCHAR) || ':' || CAST(user_id AS VARCHAR)), 2, 1)) - 1))
+                   CAST({sql_hex_int("md5(CAST(t.i AS VARCHAR) || ':' || CAST(user_id AS VARCHAR))", 2)}
                        % 64 AS INTEGER) AS b
             FROM events CROSS JOIN range(4) t(i)
         )

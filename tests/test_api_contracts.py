@@ -247,3 +247,30 @@ def test_session_conf_is_set_only_in_catalog():
         and rel != "mit_map_reduce_spark/catalog.py"
     ]
     assert bad == [], bad
+
+
+def test_md5_hex_is_read_only_through_the_columns_twin():
+    # An md5-hex prefix read as an integer must match bit-for-bit in
+    # Spark and in the DuckDB oracles, so the rule lives in one twin
+    # pair, columns.hex_int / columns.sql_hex_int. A base-16 conv( or
+    # a positional '0123456789abcdef' expansion elsewhere is a copy.
+    import ast
+    import re
+
+    bad = []
+    for rel, node in _package_nodes("mit_map_reduce_spark"):
+        if rel == "mit_map_reduce_spark/functions/columns.py":
+            continue
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if "0123456789abcdef" in node.value:
+                bad.append(f"{rel}:{node.lineno} hex-digit literal")
+            if re.search(r"\bconv\(.*?,\s*16\s*,", node.value, re.I | re.S):
+                bad.append(f"{rel}:{node.lineno} SQL conv(..., 16, ...)")
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, (ast.Attribute, ast.Name))
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "conv"
+            and any(isinstance(a, ast.Constant) and a.value == 16 for a in node.args[1:2])
+        ):
+            bad.append(f"{rel}:{node.lineno} conv(..., 16, ...)")
+    assert bad == [], bad

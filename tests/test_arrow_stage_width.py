@@ -2,7 +2,7 @@
 
 Every Python (Arrow) task pays a fixed, payload-independent cost
 (~0.08 CPU-s for a no-op mapInPandas task under ``pyworker_daemon``;
-``catalog.arrow_stage_width`` gives its cause and measurement), so the
+``catalog.volume_width`` gives its cause and measurement), so the
 width of a mapInPandas/mapInArrow stage must follow the stage's INPUT
 VOLUME, never the parent frame's cores-wide cache layout — and must
 keep growing with volume so the law is scale-correct, not local-tuned.
@@ -10,21 +10,21 @@ keep growing with volume so the law is scale-correct, not local-tuned.
 
 from pyspark.sql import functions as F
 
-from mit_map_reduce_spark.catalog import arrow_stage_width, table_footer_count
+from mit_map_reduce_spark.catalog import table_footer_count, volume_width
 
 
 def test_width_follows_volume():
     # tiny input -> the floor, not the session's core count
-    assert arrow_stage_width(2_000, 200_000) == 1
-    assert arrow_stage_width(2_000, 200_000, floor=4) == 4
+    assert volume_width(2_000, 200_000) == 1
+    assert volume_width(2_000, 200_000, floor=4) == 4
     # linear growth with volume
-    assert arrow_stage_width(1_000_000, 200_000) == 5
-    assert arrow_stage_width(10_000_000, 200_000) == 50
+    assert volume_width(1_000_000, 200_000) == 5
+    assert volume_width(10_000_000, 200_000) == 50
     # capped (like every other volume-law width in the repo)
-    assert arrow_stage_width(10**12, 200_000) == 4096
+    assert volume_width(10**12, 200_000) == 4096
     # degenerate inputs never yield zero/negative widths
-    assert arrow_stage_width(0, 200_000) == 1
-    assert arrow_stage_width(5, 0) == 5  # rows_per_task floor of 1
+    assert volume_width(0, 200_000) == 1
+    assert volume_width(5, 0) == 5  # rows_per_task floor of 1
 
 
 def test_assign_cells_stage_width_is_volume_derived(spark, sf_dir):
@@ -41,7 +41,7 @@ def test_assign_cells_stage_width_is_volume_derived(spark, sf_dir):
     cents = _centroids_artifact(spark, sf_dir)
     n = table_footer_count(sf_dir, "embeddings")
     out = _assign_cells(emb, cents, n_rows=n)
-    expected = arrow_stage_width(n, ASSIGN_ROWS_PER_TASK, floor=4)
+    expected = volume_width(n, ASSIGN_ROWS_PER_TASK, floor=4)
     assert out.rdd.getNumPartitions() == expected
     # and the narrow width changes nothing about the assignment itself
     wide = _assign_cells(emb, cents)
@@ -56,4 +56,4 @@ def test_mm_assets_width_is_volume_derived(spark, sf_dir):
 
     n = table_footer_count(sf_dir, "documents")
     assets = _assets(spark, sf_dir)
-    assert assets.rdd.getNumPartitions() == arrow_stage_width(n, MM_ASSETS_PER_TASK)
+    assert assets.rdd.getNumPartitions() == volume_width(n, MM_ASSETS_PER_TASK)

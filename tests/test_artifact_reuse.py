@@ -96,6 +96,24 @@ def test_publish_protocol_write_once_and_marker(tmp_path):
     assert not os.path.exists(out + ".lock")  # lock released
 
 
+def test_publish_cold_call_records_one_build_event(tmp_path, monkeypatch):
+    """A publish this process writes is a cold build: exactly one build
+    event, labelled by the artifact kind (no content key, so the label
+    is the same in every session). Reusing the artifact records none."""
+    import os
+
+    from mit_map_reduce_spark import catalog
+
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_DIR", str(tmp_path))
+    out = str(tmp_path / "mmrs_kind" / "0123abcd4567" / "part")
+    catalog.drain_build_events()
+    catalog.publish_once(os.makedirs, out)
+    cold = catalog.drain_build_events()
+    catalog.publish_once(os.makedirs, out)
+    assert [label for label, _ in cold] == ["mmrs_kind/part"]
+    assert catalog.drain_build_events() == []
+
+
 def test_publish_sweeps_aged_crash_leftovers(tmp_path):
     """A writer that crashed between its rename steps leaves orphan
     .tmp*/.trash* siblings nothing else reclaims (round-8 advice): the

@@ -18,13 +18,13 @@ import math
 import pytest
 
 import mit_map_reduce_spark.operators.dedup as dd
+from mit_map_reduce_spark.catalog import table_footer_count
 from mit_map_reduce_spark.operators.dedup import (
     EMB_LSH_MIN_BANDS,
     EMB_LSH_MIN_ROWS,
     EMB_LSH_S_REF,
     EMB_LSH_TARGET_OCCUPANCY,
     emb_lsh_params,
-    embeddings_footer_count,
 )
 SF_DIRS = [f"/root/testdata/sf{sf}" for sf in ("0.001", "0.01", "0.1")]
 
@@ -53,7 +53,7 @@ def test_committed_sfs_all_derive_the_oracle_constants():
     only an exact twin if every corpus the gate runs on derives
     exactly those values. Footer counts: 500/500/2000."""
     for sf_dir in SF_DIRS:
-        n = embeddings_footer_count(sf_dir)
+        n = table_footer_count(sf_dir, "embeddings")
         assert emb_lsh_params(n) == (EMB_LSH_MIN_ROWS, EMB_LSH_MIN_BANDS), (
             f"{sf_dir} (n={n}) no longer derives the oracle tuning; "
             "_embedding_lsh_oracle_sql must be regenerated to match"
@@ -122,7 +122,7 @@ def test_pair_width_inert_at_committed_sfs_and_scales_at_volume():
     from mit_map_reduce_spark.operators.dedup import emb_lsh_pair_width
 
     for sf_dir in SF_DIRS:
-        n = embeddings_footer_count(sf_dir)
+        n = table_footer_count(sf_dir, "embeddings")
         rows, bands = emb_lsh_params(n)
         # floor 4 = the narrowest session (vanilla local[4]); even
         # there the committed corpora must not trigger the scale-out
@@ -149,9 +149,6 @@ def test_graph_fixpoint_width_inert_at_committed_sfs():
     session floor) for every committed corpus, and scale with
     measured volume past one task wave — the x30 pagerank build
     spilled 4 GB at the fixed width."""
-    import math
-
-    from mit_map_reduce_spark.catalog import table_footer_count
     from mit_map_reduce_spark.operators.graph import (
         GRAPH_EDGES_PER_TASK,
         GRAPH_SHUFFLE_PARTITIONS,

@@ -15,7 +15,9 @@ from pyspark.sql import functions as F
 
 from mit_map_reduce_spark.catalog import load_table  # noqa: F401  (fixtures import chain)
 from mit_map_reduce_spark.functions.columns import (
+    hex_int,
     round_half_up,
+    sql_hex_int,
     tokenize_letters,
     word_kgrams,
 )
@@ -37,6 +39,43 @@ def test_round_half_up_matches_python(spark, xs):
     got = [r.y for r in df.select(round_half_up(F.col("x"), 4).alias("y")).collect()]
     exp = [py_round_half_up(x, 4) for x in xs]
     assert got == exp
+
+
+def test_hex_int_twins_match_python(spark):
+    """Every md5-derived value goes through hex_int (Spark) and
+    sql_hex_int (DuckDB oracles): both must read a hex slice as
+    Python's int(h[...], 16) does, for every width the operators use,
+    at both ends of a digest and from a per-row start."""
+    import hashlib
+    import random
+
+    import duckdb
+
+    rng = random.Random(7)
+    rows = []
+    for _ in range(64):
+        k = str(rng.getrandbits(64))
+        h = hashlib.md5(k.encode()).hexdigest() + hashlib.md5((k + "!").encode()).hexdigest()
+        rows.append((h, rng.randint(1, 50)))
+    cases = [(d, s) for d in range(1, 13) for s in (1, 32)]
+    df = spark.createDataFrame(rows, "h string, p int")
+    cols = [hex_int("h", d, s).cast("long").alias(f"c{d}_{s}") for d, s in cases]
+    cols += [hex_int("h", d, F.col("p")).cast("long").alias(f"p{d}") for d in (1, 4)]
+    got = [tuple(r) for r in df.select("h", "p", *cols).orderBy("h").collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t(h VARCHAR, p INTEGER)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    sql = [f"CAST({sql_hex_int('h', d, s)} AS BIGINT)" for d, s in cases]
+    sql += [f"CAST({sql_hex_int('h', d, 'p')} AS BIGINT)" for d in (1, 4)]
+    oracle = con.execute(f"SELECT h, p, {', '.join(sql)} FROM t ORDER BY h").fetchall()
+    exp = [
+        (h, p)
+        + tuple(int(h[s - 1 : s - 1 + d], 16) for d, s in cases)
+        + tuple(int(h[p - 1 : p - 1 + d], 16) for d in (1, 4))
+        for h, p in sorted(rows)
+    ]
+    assert got == exp
+    assert oracle == exp
 
 
 @given(

@@ -166,13 +166,11 @@ Usage:
 
 from __future__ import annotations
 
-import contextlib
+import hashlib
 import json
 import os
-import shutil
 import subprocess
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -250,58 +248,28 @@ def _base_fingerprint() -> str:
     return "|".join(parts)
 
 
-@contextlib.contextmanager
-def _atomic_corpus_dir(out: str, fp: str):
-    """Temp-dir-then-rename publish (the repo's artifact protocol,
-    ADVICE r12): build into a sibling temp dir, write the marker
-    INSIDE it, rename into place — a concurrent reader never observes
-    a half-written corpus, and a concurrent builder that wins the race
-    with a matching marker is accepted."""
-    parent = os.path.dirname(out)
-    os.makedirs(parent, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f".{os.path.basename(out)}.tmp", dir=parent)
-    try:
-        yield tmp
-        with open(os.path.join(tmp, ".complete"), "w") as fh:
-            fh.write(fp)
-        # A concurrent builder may have published while we built: if a
-        # matching corpus is already in place, ADOPT it — deleting it
-        # here would yank a valid corpus out from under its readers.
-        if _corpus_is_current(out, fp):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return
-        shutil.rmtree(out, ignore_errors=True)  # stale/partial only
-        try:
-            os.rename(tmp, out)
-        except OSError:
-            # lost a publish race in the window above; accept a
-            # matching winner, surface anything else
-            if not _corpus_is_current(out, fp):
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
+def publish_corpus(root: str, name: str, fp: str, build) -> str:
+    """Publish a synthesized corpus dir through ``catalog.publish_once``
+    (lock, temp dir + marker, atomic rename) and return its path.
+    ``build(d)`` fills the existing dir ``d``. The fingerprint ``fp``
+    is part of the dir key, so a new recipe or base corpus publishes a
+    new dir and a published one is never rewritten under its readers."""
+    from mit_map_reduce_spark.catalog import publish_once
 
+    def write(d: str) -> None:
+        os.makedirs(d)
+        build(d)
 
-def _corpus_is_current(out: str, fp: str) -> bool:
-    try:
-        with open(os.path.join(out, ".complete")) as fh:
-            return fh.read() == fp
-    except OSError:
-        return False
+    tag = hashlib.md5(fp.encode()).hexdigest()[:12]
+    return publish_once(write, os.path.join(root, name, tag))
 
 
 def build_corpus(k: int) -> str:
     """Synthesize the k-x corpus dir (cached against the base corpus
     fingerprint); returns its path."""
-    final = os.path.join(CORPUS_BASE, f"x{k}")
-    fp = _base_fingerprint()
-    if _corpus_is_current(final, fp):
-        return final
-    with _atomic_corpus_dir(final, fp) as out:
-        _build_corpus_into(out, k)
-    return final
+    return publish_corpus(
+        CORPUS_BASE, f"x{k}", _base_fingerprint(), lambda d: _build_corpus_into(d, k)
+    )
 
 
 def _build_corpus_into(out: str, k: int) -> None:
@@ -382,7 +350,6 @@ def build_graph_corpus(k: int) -> str:
     with per-copy key-offset strides (copy 0 identity), every other
     table symlinked. Disjoint copies: cross-copy joins are impossible
     by construction, so graph outputs scale exactly k-fold."""
-    final = os.path.join(CORPUS_BASE, f"g{k}")
     scaled = ("customer", "supplier", "orders", "lineitem")
     # gsynthv1: version component so a future synthesis-SQL edit can
     # never silently reuse a corpus built under the old recipe (the
@@ -391,12 +358,9 @@ def build_graph_corpus(k: int) -> str:
     for t in scaled:
         st = os.stat(os.path.join(BASE_SF, f"{t}.parquet"))
         parts_fp.append(f"{t}:{st.st_size}:{int(st.st_mtime)}")
-    fp = "|".join(parts_fp)
-    if _corpus_is_current(final, fp):
-        return final
-    with _atomic_corpus_dir(final, fp) as out:
-        _build_graph_corpus_into(out, k, scaled)
-    return final
+    return publish_corpus(
+        CORPUS_BASE, f"g{k}", "|".join(parts_fp), lambda d: _build_graph_corpus_into(d, k, scaled)
+    )
 
 
 def _build_graph_corpus_into(out: str, k: int, scaled: tuple) -> None:

@@ -538,22 +538,21 @@ def build_skew_corpus(k: int) -> str:
     only be MEASURED against data that actually skews.
 
     Base corpus honors SPARK_GRAFT_SF_DIR; output lives under
-    catalog.scratch_base() and publishes via scaling_curve's shared
-    temp-dir + atomic-rename helpers, so concurrent runs (or a shared
-    scratch dir) never observe a half-written events.parquet."""
+    catalog.scratch_base() and publishes via scaling_curve's
+    publish_corpus (catalog.publish_once, keyed by the fingerprint), so
+    concurrent runs (or a shared scratch dir) never observe a
+    half-written events.parquet."""
     from mit_map_reduce_spark.catalog import scratch_base
-    from tools.scaling_curve import _atomic_corpus_dir, _corpus_is_current
+    from tools.scaling_curve import publish_corpus
 
     base = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out = os.path.join(scratch_base(), "mmrs_skew_corpus", f"x{k}")
     st = os.stat(os.path.join(base, "events.parquet"))
     # skewv2: synthesis-version component — a future recipe edit must
     # invalidate cached corpora (same rule as scaling_curve's tags);
     # the base path is part of the fingerprint because SF_DIR can move.
     fp = f"skewv2|{k}:{base}:{st.st_size}:{int(st.st_mtime)}"
-    if _corpus_is_current(out, fp):
-        return out
-    with _atomic_corpus_dir(out, fp) as tmp:
+
+    def build(tmp: str) -> None:
         for t in (
             "region nation customer supplier part orders lineitem documents embeddings".split()
         ):
@@ -577,7 +576,8 @@ def build_skew_corpus(k: int) -> str:
             f"COPY ({' UNION ALL '.join(parts)}) TO '{tmp}/events.parquet' (FORMAT parquet)"
         )
         con.close()
-    return out
+
+    return publish_corpus(os.path.join(scratch_base(), "mmrs_skew_corpus"), f"x{k}", fp, build)
 
 
 def skew_worker(sf_dir: str) -> None:

@@ -6,12 +6,16 @@ letting Spark own the physical plan:
 - whole-file scan  → ``spark.read.option("wholetext", ...)`` /
   ``sc.wholeTextFiles`` (reference ``src/mr/worker.go:243-254``);
 - map UDTF         → ``rdd.flatMap`` (reference ``src/mr/worker.go:138``);
-- hash shuffle     → ``groupByKey(numPartitions=n_reduce)``. Spark's
-  Murmur3-based partitioner replaces the reference's FNV-1a
-  (``src/mr/worker.go:32-38``); bucket *assignment* differs but the
-  grouping invariant — all values for a key meet exactly one reduce
-  call — is identical, and the reference's own tests are
-  bucket-layout-insensitive (``src/main/test-mr.sh:103``);
+- hash shuffle     → ``groupByKey(numPartitions=n_reduce)``, the job's
+  only shuffle: ``save_text_output`` writes a ``run_job`` frame's
+  reduce partitions as they are, one ``mr-out-R`` per partition, as
+  the reference's reduce task writes its own file
+  (``src/mr/worker.go:195-219``). Buckets come from PySpark's
+  ``portable_hash`` (the RDD default partitioner), not the
+  reference's FNV-1a (``src/mr/worker.go:32-38``); bucket *assignment*
+  differs but the grouping invariant — all values for a key meet
+  exactly one reduce call — is identical, and the reference's own
+  tests are bucket-layout-insensitive (``src/main/test-mr.sh:103``);
 - reduce UDAF      → per-key call with the materialized value list;
 - fault tolerance  → Spark task retry + lineage replaces the
   coordinator's 10 s-timeout re-queue (``src/mr/coordinator.go:15``).
@@ -30,8 +34,9 @@ import re
 from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from mit_map_reduce_spark.sources.io import write_text_kv
 
 MapFn = Callable[[str, str], Iterable[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]
@@ -85,7 +90,13 @@ def run_job(
             lambda kv: (kv[0], reduce_fn(kv[0], list(kv[1])))
         )
     )
-    return spark.createDataFrame(reduced, schema=_OUT_SCHEMA)
+    df = spark.createDataFrame(reduced, schema=_OUT_SCHEMA)
+    # createDataFrame keeps the RDD's partitions one to one, so
+    # partition i of df is reduce bucket i; save_text_output reads this
+    # record to skip a second shuffle. Any derived frame (filter,
+    # select, ...) is a new object without it.
+    df._mr_n_reduce = n_reduce
+    return df
 
 
 def save_text_output(df: DataFrame, out_dir: str, n_reduce: int = 10) -> None:
@@ -101,24 +112,36 @@ def save_text_output(df: DataFrame, out_dir: str, n_reduce: int = 10) -> None:
     the post-commit rename below goes through the Hadoop FileSystem
     API so it works on any cluster filesystem, not just local paths.
 
+    A job is one shuffle: the frame ``run_job`` returned, saved with
+    the ``n_reduce`` it ran with, is written as it is — its partition
+    R already holds reduce bucket R, so the reduce tasks write their
+    own ``mr-out-R``. Every other frame (one derived from it by
+    ``filter``/``select``/..., or saved with another ``n_reduce``) is
+    first hash-repartitioned on ``key`` into ``n_reduce`` partitions.
+    With ``n_reduce <= 0`` the job has no reduce task: ``out_dir`` is
+    left empty, with no ``mr-out-*`` file.
+
     Partition ASSIGNMENT parity (which key lands in which R) is
     intentionally out of scope: the reference hashes with FNV
-    (``src/mr/worker.go:32-38``), Spark with Murmur3, and the
-    reference's own harness sorts ALL output files together before
-    comparing (``src/main/test-mr.sh:103``), so file membership is not
-    part of the observable contract — see SURVEY §2a#3.
+    (``src/mr/worker.go:32-38``), a ``run_job`` frame's buckets come
+    from PySpark's ``portable_hash`` and a repartitioned frame's from
+    Spark SQL's Murmur3, and the reference's own harness sorts ALL
+    output files together before comparing
+    (``src/main/test-mr.sh:103``), so file membership is not part of
+    the observable contract — see SURVEY §2a#3.
     """
-    (
-        df.repartition(n_reduce, "key")
-        .select(F.format_string("%s %s", F.col("key"), F.col("value")).alias("line"))
-        .write.mode("overwrite")
-        .text(out_dir)
-    )
     spark = df.sparkSession
     jvm = spark._jvm
     hadoop_path = jvm.org.apache.hadoop.fs.Path
     root = hadoop_path(out_dir)
     fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if n_reduce <= 0:
+        fs.delete(root, True)
+        fs.mkdirs(root)
+        return
+    if getattr(df, "_mr_n_reduce", None) != n_reduce:
+        df = df.repartition(n_reduce, "key")
+    write_text_kv(df, out_dir)
     renamed = set()
     for status in fs.listStatus(root):
         name = status.getPath().getName()

@@ -7,8 +7,11 @@ mrsequential's golden file (reference src/main/test-mr.sh:81-83,103).
 """
 
 import os
+import uuid
 
 import pytest
+from pyspark.rdd import portable_hash
+from pyspark.sql import functions as F
 
 from mit_map_reduce_spark.mapreduce import run_job, run_sequential, save_text_output
 from mit_map_reduce_spark.mapreduce.apps import (
@@ -169,6 +172,91 @@ def test_text_sink_file_naming_parity(spark, corpus_dir, tmp_path):
         lines.extend(p.read_text().splitlines())
     golden = run_sequential(wc_map, wc_reduce, inputs)
     assert sorted(lines) == sorted(f"{k} {v}" for k, v in golden)
+
+
+def _spark_jobs(spark, action) -> int:
+    """Spark jobs ``action()`` submits, counted by a job-group delta."""
+    sc = spark.sparkContext
+    group = f"mr-save-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store on the listener-bus thread
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_saving_a_run_job_frame_is_one_spark_job(spark, corpus_dir, tmp_path):
+    """A job is one shuffle, as in the reference: the reduce tasks write
+    their own mr-out-R (worker.go:195-219), so saving the run_job frame
+    runs the groupByKey shuffle and the write in ONE Spark job, with no
+    second repartition of the reduced output."""
+    inputs = [os.path.join(corpus_dir, "pg-*.txt")]
+    df = run_job(spark, wc_map, wc_reduce, inputs, n_reduce=3)
+    assert _spark_jobs(spark, lambda: save_text_output(df, str(tmp_path / "out"), n_reduce=3)) == 1
+
+
+@pytest.mark.parametrize("frame", ["filtered", "other_n_reduce"])
+def test_frames_not_bucketed_by_run_job_are_repartitioned(spark, corpus_dir, tmp_path, frame):
+    """Only the frame run_job returned, saved with its own n_reduce,
+    skips the repartition; a derived frame or a different n_reduce
+    still yields exactly mr-out-0..n-1 with the full job output."""
+    inputs = [os.path.join(corpus_dir, "pg-*.txt")]
+    n_reduce = 5
+    if frame == "filtered":
+        df = run_job(spark, wc_map, wc_reduce, inputs, n_reduce=n_reduce)
+        df = df.filter(F.col("key") != "fox")
+    else:
+        df = run_job(spark, wc_map, wc_reduce, inputs, n_reduce=2)
+    out = tmp_path / "job_out"
+    save_text_output(df, str(out), n_reduce=n_reduce)
+    data_files = [p.name for p in out.iterdir() if not p.name.startswith(("_", "."))]
+    assert sorted(data_files) == sorted(f"mr-out-{r}" for r in range(n_reduce))
+    lines = [line for p in out.glob("mr-out-*") for line in p.read_text().splitlines()]
+    golden = run_sequential(wc_map, wc_reduce, inputs)
+    if frame == "filtered":
+        golden = [(k, v) for k, v in golden if k != "fox"]
+    assert sorted(lines) == sorted(f"{k} {v}" for k, v in golden)
+
+
+def test_run_job_output_files_hold_their_reduce_buckets(spark, corpus_dir, tmp_path):
+    """Every key in a run_job frame's mr-out-R hashes to bucket R under
+    groupByKey's partitioner, PySpark's portable_hash: the reduce
+    partitions are written as they are, not re-hashed. The hash runs in
+    a Spark task because executors may use another PYTHONHASHSEED than
+    the driver."""
+    inputs = [os.path.join(corpus_dir, "pg-*.txt")]
+    n_reduce = 4
+    out = tmp_path / "job_out"
+    save_text_output(run_job(spark, wc_map, wc_reduce, inputs, n_reduce=n_reduce), str(out), n_reduce)
+    placed = [
+        (line.split(" ", 1)[0], r)
+        for r in range(n_reduce)
+        for line in (out / f"mr-out-{r}").read_text().splitlines()
+    ]
+    misplaced = (
+        spark.sparkContext.parallelize(placed, 2)
+        .filter(lambda kr: portable_hash(kr[0]) % n_reduce != kr[1])
+        .collect()
+    )
+    assert len(placed) == len(run_sequential(wc_map, wc_reduce, inputs))
+    assert misplaced == []
+
+
+def test_zero_reduce_tasks_write_no_output_file(spark, corpus_dir, tmp_path):
+    """n_reduce <= 0: run_job returns an empty frame, and saving it
+    leaves the output dir empty of mr-out-* files (a stale one from an
+    earlier run is overwritten away), as a job with no reduce task."""
+    inputs = [os.path.join(corpus_dir, "pg-*.txt")]
+    out = tmp_path / "job_out"
+    out.mkdir()
+    (out / "mr-out-0").write_text("stale 1\n")
+    df = run_job(spark, wc_map, wc_reduce, inputs, n_reduce=0)
+    save_text_output(df, str(out), n_reduce=0)
+    assert out.is_dir()
+    assert list(out.glob("mr-out-*")) == []
 
 
 def test_early_exit_output_stable_under_stragglers(spark, corpus_dir, tmp_path):

@@ -322,4 +322,10 @@ def streaming_plan_report(query) -> dict:
             )
         ),
         "state_stores": s.count("StateStoreSave"),
+        # the width the stateful operators run at: every operator's
+        # state info records it, fixed by the checkpoint's first start
+        "state_partitions": max(
+            (int(n) for n in re.findall(r"state info \[[^\]]*numPartitions = (\d+)", s)),
+            default=0,
+        ),
     }

@@ -360,22 +360,89 @@ def test_keyed_drain_without_batches_is_empty(spark, landing):
     assert out.schema == counts.schema
 
 
-def test_drain_scopes_shuffle_partitions_to_start(spark, landing, tmp_path):
-    # the stream runs with 8 shuffle partitions (recorded in the first
-    # offset log entry's conf), and the session gets its own value back
+def _offsets_conf(run_dir, key="spark.sql.shuffle.partitions"):
+    # each offset log entry records the session conf the stream runs
+    # under on its second line; returns {batch_id: value of key}
     import json
+    import os
 
-    from mit_map_reduce_spark.streaming.queries import _drain
+    offsets = os.path.join(run_dir, "ckpt", "offsets")
+    out = {}
+    for name in os.listdir(offsets):
+        if name.isdigit():
+            with open(os.path.join(offsets, name)) as fh:
+                out[int(name)] = json.loads(fh.read().splitlines()[1])["conf"][key]
+    return out
+
+
+def test_drain_scopes_shuffle_partitions_to_start(spark, landing, tmp_path):
+    # the stream runs at the width derived from its input rows
+    # (recorded in the first offset log entry's conf), and the session
+    # gets its own value back
+    from mit_map_reduce_spark.streaming.queries import _drain, state_width
 
     _write_batch(spark, landing, [Row(ts=None, user_id=1)])
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
-    spark.conf.set(key, "3")
+    spark.conf.set(key, "7")
     try:
-        _drain(_windowed_counts(spark, landing), run_dir=str(tmp_path / "run"))
-        assert spark.conf.get(key) == "3"
+        _drain(_windowed_counts(spark, landing), run_dir=str(tmp_path / "run"), rows=120_000)
+        assert spark.conf.get(key) == "7"
     finally:
         spark.conf.set(key, before)
-    with open(tmp_path / "run" / "ckpt" / "offsets" / "0") as fh:
-        lines = fh.read().splitlines()
-    assert json.loads(lines[1])["conf"][key] == "8"
+    assert state_width(120_000) == 3
+    assert _offsets_conf(str(tmp_path / "run"))[0] == "3"
+
+
+def test_state_width_follows_input_rows():
+    # events at sf0.001 / sf0.01 / sf0.1 / sf1, then the one-wave floor
+    # of the Python-state streams
+    from mit_map_reduce_spark.streaming.queries import STREAM_MIN_WIDTH, state_width
+
+    assert [state_width(n) for n in (1_000, 10_000, 100_000, 1_000_000)] == [2, 2, 2, 20]
+    assert state_width(0) == STREAM_MIN_WIDTH == 2
+    assert [state_width(n, wave=4) for n in (1_000, 100_000, 1_000_000)] == [4, 4, 20]
+    assert state_width(1, wave=1) == 2
+
+
+def test_restart_second_drain_keeps_first_width(spark, sf_dir, monkeypatch):
+    # stream_incremental_restart drains twice on one checkpoint; the
+    # second drain asks for another width, and must still run at the
+    # width its first start recorded
+    from mit_map_reduce_spark.streaming import queries as sq
+
+    asked, run_dirs = iter([3, 5]), []
+    real_drain = sq._drain
+
+    def drain(out, **kw):
+        run_dirs.append(kw["run_dir"])
+        return real_drain(out, **kw)
+
+    monkeypatch.setattr(sq, "state_width", lambda rows, wave=0: next(asked))
+    monkeypatch.setattr(sq, "_drain", drain)
+    sq.LAST_STREAM_PLAN = {}
+    assert sq.stream_incremental_restart(spark, sf_dir).count() > 0
+    assert len(run_dirs) == 2 and run_dirs[0] == run_dirs[1]
+    assert next(asked, None) is None  # both drains asked
+    assert sq.LAST_STREAM_PLAN["state_partitions"] == 3
+    recorded = _offsets_conf(run_dirs[0])
+    assert len(recorded) >= 2 and set(recorded.values()) == {"3"}
+
+
+def test_raw_schema_read_once_per_file_version(spark, tmp_path):
+    # the stream source's schema is memoized per file version: a second
+    # call reuses it, a rewritten file is read again
+    import os
+
+    from mit_map_reduce_spark.streaming import queries as sq
+
+    path = str(tmp_path / "t.parquet")
+    spark.createDataFrame([(1,)], "a int").coalesce(1).write.parquet(path)
+    first = sq._raw_schema(spark, path)
+    n = len(sq._RAW_SCHEMAS)
+    assert sq._raw_schema(spark, path) is first and len(sq._RAW_SCHEMAS) == n
+    spark.createDataFrame([(1, "x")], "a int, b string").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    os.utime(path, ns=(0, 0))  # a distinct mtime even on a coarse clock
+    assert sq._raw_schema(spark, path).fieldNames() == ["a", "b"]

@@ -226,20 +226,12 @@ HEADLINE = (
 )
 
 
-#: The wc corpus recipe: seed and MB per file of 8 seeded files
-#: (~3.3 MB in total, the reference's corpus size).
-_WC_CORPUS_SEED = 6824
-_WC_CORPUS_MB_PER_FILE = 0.41
-
-
 def bench_mr_facade_wc(spark, work: _WorkCounters) -> tuple[float, int, dict]:
     """Reference-surface benchmark: the MapReduce facade running wc
-    over an 8-file ~3.3 MB text corpus — the reference's own flagship
+    over an 8-file ~3 MB text corpus — the reference's own flagship
     workload and scale (8 pg-*.txt files, 3.3 MB, bound <= 45 s with 3
-    workers; reference src/main/test-mr.sh:51,87-99). The corpus is
-    perfbench's seeded Zipf text (``perfbench.workloads.write_corpus``,
-    a 20k-word vocabulary), so the reduce side and the sink see tens of
-    thousands of keys, as with the reference's books.
+    workers; reference src/main/test-mr.sh:51,87-99). Corpus text comes
+    from the documents table, doubled to match the reference's bytes.
 
     Each repeat times the whole reference job: ``run_job`` plus
     ``save_text_output`` into a fresh dir, so the ``mr-out-*`` files the
@@ -249,24 +241,41 @@ def bench_mr_facade_wc(spark, work: _WorkCounters) -> tuple[float, int, dict]:
     Returns (median seconds, row count, median work counters).
     """
     import hashlib
-    import inspect
     import tempfile
 
-    from mit_map_reduce_spark.catalog import publish_once
     from mit_map_reduce_spark.mapreduce import run_job, save_text_output
     from mit_map_reduce_spark.mapreduce.apps import wc_map, wc_reduce
-    from perfbench.workloads import write_corpus
 
-    # The dir is keyed by the generator's source and arguments, so a
-    # corpus from another generator or recipe is never reused.
-    args = (_WC_CORPUS_SEED, 8, _WC_CORPUS_MB_PER_FILE)
-    tag = hashlib.md5((inspect.getsource(write_corpus) + repr(args)).encode()).hexdigest()[:12]
-    corpus = publish_once(
-        lambda d: write_corpus(d, *args),
-        os.path.join(tempfile.gettempdir(), "mmrs_bench_wc_corpus", tag),
-    )
-    drain_build_events()  # the corpus build is not the workload
-    work.read()
+    import shutil
+    import uuid
+
+    tag = hashlib.md5(SF_DIR.encode()).hexdigest()[:8]
+    corpus = os.path.join(tempfile.gettempdir(), f"mmrs_bench_corpus_{tag}")
+    expected = [os.path.join(corpus, f"pg-{i}.txt") for i in range(8)]
+    # regenerate unless complete; build in a temp dir + atomic rename so
+    # a crashed writer can't leave a partial corpus later runs reuse
+    if not all(os.path.exists(p) for p in expected):
+        tmp = corpus + "." + uuid.uuid4().hex[:8]
+        os.makedirs(tmp, exist_ok=True)
+        texts = [
+            r[0]
+            for r in spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+            .select("text")
+            .collect()
+        ]
+        parts: list[list[str]] = [[] for _ in range(8)]
+        for i, t in enumerate(texts):
+            parts[i % 8].append(t)
+            parts[i % 8].append(t)  # double: ~3 MB total, ref corpus scale
+        for i, chunk in enumerate(parts):
+            with open(os.path.join(tmp, f"pg-{i}.txt"), "w") as f:
+                f.write("\n".join(chunk))
+        shutil.rmtree(corpus, ignore_errors=True)
+        try:
+            os.rename(tmp, corpus)
+        except OSError:
+            shutil.rmtree(tmp, ignore_errors=True)
+    work.read()  # the corpus build is not the workload
     runs, counted = [], []
     for _ in range(REPEATS):
         with tempfile.TemporaryDirectory(prefix="mmrs_bench_mr_out_") as out:

@@ -49,9 +49,7 @@ from mit_map_reduce_spark.catalog import (
     load_table,
     scoped_conf,
     scratch_base,
-    table_footer_count,
     table_path,
-    volume_width,
 )
 
 #: Free space /dev/shm must have before stream scratch goes there.
@@ -133,33 +131,31 @@ def _capture_stream_plan(q) -> None:
         LAST_STREAM_PLAN = {}
 
 
-#: Input rows per stateful shuffle partition. Every micro-batch commits
-#: one state store per partition per stateful store, a fixed cost that
-#: does not shrink with the rows, so the width follows input volume
-#: like the graph and dedup shuffle widths (``catalog.volume_width``).
-#: events runs at 2 partitions at sf0.001-sf0.1 (1k-100k rows) and at
-#: 20 at sf1. Measured on 4 cores, width 8 -> 2, perfbench
-#: ``batch_driver_bound`` traced (seed 7, three sf0.1 attribution-join
-#: drains): summed state ``commitTimeMs`` 15.3 s -> 2.3 s, ``addBatch``
-#: 9.9 s -> 5.7 s, the same 6 batches and 237 state rows.
-STREAM_ROWS_PER_TASK = 50_000
-#: Fewest state partitions a stateful stream runs at.
+#: State partitions a stateful stream runs at. Every micro-batch
+#: commits one state store per partition per stateful store, a fixed
+#: cost that does not shrink with the rows. Measured on 4 cores, width
+#: 8 -> 2, perfbench ``batch_driver_bound`` traced (seed 7, three sf0.1
+#: attribution-join drains): summed state ``commitTimeMs`` 15.3 s ->
+#: 2.3 s, ``addBatch`` 9.9 s -> 5.7 s, the same 6 batches and 237 state
+#: rows. It is not scaled with input volume: no stream above sf0.1
+#: (100k events) has been timed, and each added partition adds store
+#: commits to every batch.
 STREAM_MIN_WIDTH = 2
 
 
-def state_width(rows: int, wave: int = 0) -> int:
-    """State-store partition count for a stateful stream over ``rows``
-    input rows: one partition per ``STREAM_ROWS_PER_TASK`` rows, at
-    least ``STREAM_MIN_WIDTH`` and at least ``wave``.
-
-    ``wave`` is the session's one-task-wave width for streams whose
-    state operator runs Python per key (``applyInPandasWithState``):
-    their per-batch cost is the Python work, not the store commits, so
-    fewer tasks than cores leaves cores idle (sf0.1, 4 cores: the user
-    profile took 6.6 s at width 2 against 2.5 s at 8 in OPTIMIZATION_r15;
-    at one wave, 4, it took a median 2.54 s against 2.84 s at 8 over 4
-    interleaved process pairs)."""
-    return volume_width(rows, STREAM_ROWS_PER_TASK, floor=max(STREAM_MIN_WIDTH, wave))
+def state_width(out: DataFrame) -> int:
+    """State-store partition count for the stateful stream ``out``:
+    ``STREAM_MIN_WIDTH``, or one task wave (the session's
+    ``defaultParallelism``) when its plan runs Python per key through
+    ``applyInPandasWithState``. Those streams pay for the Python work,
+    not the store commits, so fewer tasks than cores leaves cores idle
+    (sf0.1, 4 cores: the user profile took 6.6 s at width 2 against
+    2.5 s at 8 in OPTIMIZATION_r15; at one wave, 4, it took a median
+    2.54 s against 2.84 s at 8 over 4 interleaved process pairs)."""
+    plan = out._jdf.queryExecution().logical().toString()
+    if "FlatMapGroupsInPandasWithState" in plan:
+        return max(STREAM_MIN_WIDTH, out.sparkSession.sparkContext.defaultParallelism)
+    return STREAM_MIN_WIDTH
 
 
 #: Raw parquet schema per (path, mtime_ns, size, nanosAsLong flag): a
@@ -220,8 +216,6 @@ def _drain(
     out: DataFrame,
     keys: list[str] | None = None,
     run_dir: str | None = None,
-    rows: int = 0,
-    python_state: bool = False,
     pre_commit_hook=None,
     post_commit_hook=None,
 ) -> DataFrame:
@@ -282,15 +276,11 @@ def _drain(
     batch, which would skew an interrupted/clean comparison.
 
     Stateful operators commit one state store PER shuffle partition PER
-    micro-batch, so the drain runs at :func:`state_width` of ``rows``,
-    the input row count the caller passes (registry queries pass their
-    source table's parquet footer count; a caller that passes none gets
-    ``STREAM_MIN_WIDTH``). ``python_state`` marks a stream whose state
-    operator runs Python per key, which keeps at least one task wave.
-    The width is set in a scoped set/restore: the value is captured
-    when the stream starts, and the checkpoint then fixes it, so a
-    restart on ``run_dir`` keeps its first start's width whatever it
-    passes.
+    micro-batch, so the drain runs at :func:`state_width` of ``out``:
+    ``STREAM_MIN_WIDTH``, or one task wave when ``out`` runs Python
+    state per key. The width is set in a scoped set/restore: the value
+    is captured when the stream starts, and the checkpoint then fixes
+    it, so a restart on ``run_dir`` keeps its first start's width.
     A drain that commits nothing (a watermark that closed no window, a
     feed that yielded no batch) returns an empty frame with
     ``out.schema``, not a read error. Every read of sink files (the
@@ -330,8 +320,7 @@ def _drain(
         writer = out.writeStream.outputMode("append").format("parquet").option("path", sink)
     else:
         writer = out.writeStream.outputMode("update").foreachBatch(upsert)
-    wave = spark.sparkContext.defaultParallelism if python_state else 0
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_width(rows, wave)}):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_width(out)}):
         q = writer.option("checkpointLocation", os.path.join(run_dir, "ckpt")).start()
     try:
         q.processAllAvailable()
@@ -366,7 +355,7 @@ def stream_append_tumbling_file_sink(spark: SparkSession, sf_dir: str) -> DataFr
     """
     ev = _events_stream(spark, sf_dir)
     agg = _day_type_counts(ev.withWatermark("ts", "1 hour"), money=True)
-    return _drain(agg, rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg)
 
 
 def stream_outer_join_unattributed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -394,8 +383,7 @@ def stream_outer_join_unattributed(spark: SparkSession, sf_dir: str) -> DataFram
             "purchase_ts",
             "click_id",
             F.col("click_id").isNotNull().alias("attributed"),
-        ),
-        rows=table_footer_count(sf_dir, "events"),
+        )
     )
 
 
@@ -418,9 +406,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     exactly-once file sink.
     """
     stream = _table_stream(spark, sf_dir, "events", tags=("_a", "_b"))
-    return _drain(
-        _dedup_within_watermark_agg(stream), rows=table_footer_count(sf_dir, "events")
-    )
+    return _drain(_dedup_within_watermark_agg(stream))
 
 
 def _dedup_within_watermark_agg(stream: DataFrame) -> DataFrame:
@@ -525,7 +511,7 @@ def stream_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    return _drain(agg, rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg)
 
 
 def stream_incremental_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -566,7 +552,7 @@ def stream_incremental_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reading it off a file would cost a schema-inference job.
         stream = spark.readStream.schema(ev.schema).parquet(feed)
         agg = _day_type_counts(stream.withWatermark("ts", "1 hour"))
-        out = _drain(agg, run_dir=run_dir, rows=table_footer_count(sf_dir, "events"))
+        out = _drain(agg, run_dir=run_dir)
     return out
 
 
@@ -597,7 +583,7 @@ def stream_static_enrich_by_segment(spark: SparkSession, sf_dir: str) -> DataFra
             money_sum("value", 2).alias("total_value"),
         )
     )
-    return _drain(agg, keys=["c_mktsegment"], rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg, keys=["c_mktsegment"])
 
 
 ATTRIBUTION_WINDOW = "1 hour"
@@ -616,8 +602,7 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     batch theta-join the oracle computes.
     """
     return _drain(
-        _attribution_join(lambda: _events_stream(spark, sf_dir)),
-        rows=table_footer_count(sf_dir, "events"),
+        _attribution_join(lambda: _events_stream(spark, sf_dir))
     )
 
 
@@ -683,7 +668,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = _events_stream(spark, sf_dir)
     agg = _day_type_counts(ev.withWatermark("ts", "1 hour"), money=True)
-    return _drain(agg, keys=["ws", "event_type"], rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg, keys=["ws", "event_type"])
 
 
 def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -713,7 +698,7 @@ def stream_windowed_distinct_users(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(F.count("*").alias("n_users"))
         .select(F.col("w.start").alias("ws"), "event_type", "n_users")
     )
-    return _drain(agg, rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg)
 
 
 #: Alert rule: a window alerts when its error share crosses this.
@@ -754,7 +739,7 @@ def stream_error_rate_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("alert"),
         )
     )
-    return _drain(agg, rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg)
 
 
 #: Trending readout: top users per closed day window.
@@ -784,7 +769,7 @@ def stream_topk_trending_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_events"))
         .select(F.col("w.start").alias("ws"), "user_id", "n_events")
     )
-    sink = _drain(agg, rows=table_footer_count(sf_dir, "events"))
+    sink = _drain(agg)
     rk = F.row_number().over(
         W.partitionBy("ws").orderBy(F.col("n_events").desc(), "user_id")
     )
@@ -826,7 +811,7 @@ def stream_cms_user_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.col("w.start").alias("ws"), "i", "b", "n")
     )
-    return _drain(agg, rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg)
 
 
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -848,7 +833,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("w.start").alias("ws"), "n", "avg_value")
     )
-    return _drain(agg, keys=["ws"], rows=table_footer_count(sf_dir, "events"))
+    return _drain(agg, keys=["ws"])
 
 
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,10 +848,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle reproduces it with the classic gaps-and-islands SQL
     bounded by the same watermark cutoff.
     """
-    return _drain(
-        _session_windows_agg(_events_stream(spark, sf_dir)),
-        rows=table_footer_count(sf_dir, "events"),
-    )
+    return _drain(_session_windows_agg(_events_stream(spark, sf_dir)))
 
 
 def _session_windows_agg(ev: DataFrame) -> DataFrame:
@@ -909,12 +891,7 @@ def stream_stateful_user_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, which is what the SQL oracle checks.
     """
     ev = _events_stream(spark, sf_dir)
-    return _drain(
-        _profile_update_out(ev),
-        keys=["user_id"],
-        rows=table_footer_count(sf_dir, "events"),
-        python_state=True,
-    )
+    return _drain(_profile_update_out(ev), keys=["user_id"])
 
 
 def _profile_update_out(ev: DataFrame) -> DataFrame:
@@ -1003,12 +980,7 @@ def stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = docs.groupBy("text_md5").applyInPandasWithState(
         update, _DEDUP_OUT, _DEDUP_STATE, "update", GroupStateTimeout.NoTimeout
     )
-    return _drain(
-        out,
-        keys=["text_md5"],
-        rows=table_footer_count(sf_dir, "documents"),
-        python_state=True,
-    )
+    return _drain(out, keys=["text_md5"])
 
 
 def stream_multi_grain_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1030,7 +1002,7 @@ def stream_multi_grain_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = _events_stream(spark, sf_dir)
     agg = _day_type_counts(ev.withWatermark("ts", "1 hour"), money=True)
-    snap = _drain(agg, keys=["ws", "event_type"], rows=table_footer_count(sf_dir, "events"))
+    snap = _drain(agg, keys=["ws", "event_type"])
     base = snap.select(
         F.to_date("ws").alias("day"), "event_type", "n", "total_value"
     )

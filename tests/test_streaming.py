@@ -376,33 +376,42 @@ def _offsets_conf(run_dir, key="spark.sql.shuffle.partitions"):
 
 
 def test_drain_scopes_shuffle_partitions_to_start(spark, landing, tmp_path):
-    # the stream runs at the width derived from its input rows
-    # (recorded in the first offset log entry's conf), and the session
-    # gets its own value back
-    from mit_map_reduce_spark.streaming.queries import _drain, state_width
+    # the stream runs at STREAM_MIN_WIDTH (recorded in the first offset
+    # log entry's conf), and the session gets its own value back
+    from mit_map_reduce_spark.streaming.queries import STREAM_MIN_WIDTH, _drain
 
     _write_batch(spark, landing, [Row(ts=None, user_id=1)])
     key = "spark.sql.shuffle.partitions"
     before = spark.conf.get(key)
     spark.conf.set(key, "7")
     try:
-        _drain(_windowed_counts(spark, landing), run_dir=str(tmp_path / "run"), rows=120_000)
+        _drain(_windowed_counts(spark, landing), run_dir=str(tmp_path / "run"))
         assert spark.conf.get(key) == "7"
     finally:
         spark.conf.set(key, before)
-    assert state_width(120_000) == 3
-    assert _offsets_conf(str(tmp_path / "run"))[0] == "3"
+    assert _offsets_conf(str(tmp_path / "run"))[0] == str(STREAM_MIN_WIDTH) == "2"
 
 
-def test_state_width_follows_input_rows():
-    # events at sf0.001 / sf0.01 / sf0.1 / sf1, then the one-wave floor
-    # of the Python-state streams
+def test_state_width_keeps_a_wave_for_python_state(spark, landing):
+    # a plain stateful stream runs at STREAM_MIN_WIDTH; one whose plan
+    # runs Python state per key (applyInPandasWithState) keeps at least
+    # one task wave, read off the plan, with no flag from the caller
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
     from mit_map_reduce_spark.streaming.queries import STREAM_MIN_WIDTH, state_width
 
-    assert [state_width(n) for n in (1_000, 10_000, 100_000, 1_000_000)] == [2, 2, 2, 20]
-    assert state_width(0) == STREAM_MIN_WIDTH == 2
-    assert [state_width(n, wave=4) for n in (1_000, 100_000, 1_000_000)] == [4, 4, 20]
-    assert state_width(1, wave=1) == 2
+    def count(key, pdfs, state):
+        yield pd.DataFrame({"user_id": [key[0]], "n": [sum(len(p) for p in pdfs)]})
+
+    _write_batch(spark, landing, [Row(ts=None, user_id=1)])
+    stream = spark.readStream.schema("ts timestamp, user_id int").parquet(landing)
+    python_state = stream.groupBy("user_id").applyInPandasWithState(
+        count, "user_id int, n long", "n long", "update", GroupStateTimeout.NoTimeout
+    )
+    wave = spark.sparkContext.defaultParallelism
+    assert state_width(_windowed_counts(spark, landing)) == STREAM_MIN_WIDTH
+    assert state_width(python_state) == max(STREAM_MIN_WIDTH, wave)
 
 
 def test_restart_second_drain_keeps_first_width(spark, sf_dir, monkeypatch):
@@ -418,7 +427,7 @@ def test_restart_second_drain_keeps_first_width(spark, sf_dir, monkeypatch):
         run_dirs.append(kw["run_dir"])
         return real_drain(out, **kw)
 
-    monkeypatch.setattr(sq, "state_width", lambda rows, wave=0: next(asked))
+    monkeypatch.setattr(sq, "state_width", lambda out: next(asked))
     monkeypatch.setattr(sq, "_drain", drain)
     sq.LAST_STREAM_PLAN = {}
     assert sq.stream_incremental_restart(spark, sf_dir).count() > 0

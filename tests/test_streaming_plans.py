@@ -68,8 +68,11 @@ def test_streaming_micro_batch_plan(spark, sf_dir, qname):
     report = sq.LAST_STREAM_PLAN
     assert report, f"{qname}: no micro-batch plan captured"
     assert report["unpartitioned_windows"] == []
-    assert report["state_partitions"] >= sq.STREAM_MIN_WIDTH, report["plan"][:1500]
     exp = _EXPECT[qname]
+    width = sq.STREAM_MIN_WIDTH
+    if exp.get("contains") == "FlatMapGroupsInPandasWithState":
+        width = max(width, spark.sparkContext.defaultParallelism)
+    assert report["state_partitions"] == width, report["plan"][:1500]
     if exp.get("state_stores"):
         assert report["state_stores"] >= 1, report["plan"][:1500]
     if exp.get("broadcast"):
@@ -77,13 +80,3 @@ def test_streaming_micro_batch_plan(spark, sf_dir, qname):
     if "contains" in exp:
         assert exp["contains"] in report["plan"], report["plan"][:1500]
 
-
-def test_plan_records_state_width(spark, sf_dir):
-    # the captured report carries the width the drain's state stores
-    # ran at: the attribution join at its events volume
-    from mit_map_reduce_spark.catalog import table_footer_count
-
-    sq.LAST_STREAM_PLAN = {}
-    sq.stream_stream_join_attribution(spark, sf_dir)
-    want = sq.state_width(table_footer_count(sf_dir, "events"))
-    assert sq.LAST_STREAM_PLAN["state_partitions"] == want

@@ -243,20 +243,11 @@ def bench_mr_facade_wc(spark, work: _WorkCounters) -> tuple[float, int, dict]:
     import hashlib
     import tempfile
 
+    from mit_map_reduce_spark.catalog import corpus_fingerprint, publish_once, scratch_base
     from mit_map_reduce_spark.mapreduce import run_job, save_text_output
     from mit_map_reduce_spark.mapreduce.apps import wc_map, wc_reduce
 
-    import shutil
-    import uuid
-
-    tag = hashlib.md5(SF_DIR.encode()).hexdigest()[:8]
-    corpus = os.path.join(tempfile.gettempdir(), f"mmrs_bench_corpus_{tag}")
-    expected = [os.path.join(corpus, f"pg-{i}.txt") for i in range(8)]
-    # regenerate unless complete; build in a temp dir + atomic rename so
-    # a crashed writer can't leave a partial corpus later runs reuse
-    if not all(os.path.exists(p) for p in expected):
-        tmp = corpus + "." + uuid.uuid4().hex[:8]
-        os.makedirs(tmp, exist_ok=True)
+    def write(d: str) -> None:
         texts = [
             r[0]
             for r in spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
@@ -267,14 +258,16 @@ def bench_mr_facade_wc(spark, work: _WorkCounters) -> tuple[float, int, dict]:
         for i, t in enumerate(texts):
             parts[i % 8].append(t)
             parts[i % 8].append(t)  # double: ~3 MB total, ref corpus scale
+        os.makedirs(d)
         for i, chunk in enumerate(parts):
-            with open(os.path.join(tmp, f"pg-{i}.txt"), "w") as f:
+            with open(os.path.join(d, f"pg-{i}.txt"), "w") as f:
                 f.write("\n".join(chunk))
-        shutil.rmtree(corpus, ignore_errors=True)
-        try:
-            os.rename(tmp, corpus)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
+
+    # keyed by the documents file's identity, so a regenerated corpus
+    # publishes a new dir and a published one is never rewritten
+    key = f"{os.path.abspath(SF_DIR)}|{corpus_fingerprint(SF_DIR, 'documents')}"
+    tag = hashlib.md5(key.encode()).hexdigest()[:12]
+    corpus = publish_once(write, os.path.join(scratch_base(), "mmrs_bench_corpus", tag))
     work.read()  # the corpus build is not the workload
     runs, counted = [], []
     for _ in range(REPEATS):

@@ -630,6 +630,35 @@ def shared_persist(
     return df
 
 
+def iterate(seed: DataFrame, step, rounds: int) -> DataFrame:
+    """The one fixed-round loop: ``rounds`` applications of
+    ``step(cur) -> DataFrame``, starting from ``seed`` — one MapReduce
+    round per application, separated by a barrier as in the reference
+    coordinator (``src/mr/coordinator.go:155-158``).
+
+    Each round's frame is persisted and materialized with ``count()``
+    (one Spark job) BEFORE its predecessor is released, so a round
+    reads its input from the cache, lineage never nests ``rounds``
+    plans deep, and at most two rounds are resident at once. A
+    predecessor is released only if ``is_cached`` is set: a lazy seed
+    is never touched, a persisted seed is released after round 1. The
+    last round comes back persisted and materialized (``shared_persist``
+    adopts it as is). ``step`` may run its own driver decisions (BPE's
+    per-round winning pair) before building the next frame.
+
+    Loops that truncate lineage per round (``localCheckpoint``: BFS,
+    MMR), carry two frames (HITS) or materialize through their own
+    convergence count (dedup CC) stay hand-written."""
+    cur = seed
+    for _ in range(rounds):
+        nxt = step(cur).persist()
+        nxt.count()
+        if cur.is_cached:
+            cur.unpersist()
+        cur = nxt
+    return cur
+
+
 def clear_shared_caches() -> None:
     """Unpersist and forget every registry entry (tests / shutdown)."""
     for df in _SHARED_CACHE.values():

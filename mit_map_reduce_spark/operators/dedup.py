@@ -884,16 +884,10 @@ def _emb_band_keys(emb: DataFrame, rows: int, bands: int) -> DataFrame:
     the similarity module uses — map-side folds, zero shuffle; stack
     pivots the wide band columns into rows for the equi-join.
     """
-    from mit_map_reduce_spark.operators.similarity import _plane
+    from mit_map_reduce_spark.operators.similarity import _plane_dot
 
     def sign(h: int):
-        plane = F.array(*[F.lit(p) for p in _plane(h)])
-        dot = F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, p: x.cast("double") * p),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
+        return F.when(_plane_dot(h) >= 0, F.lit("1")).otherwise(F.lit("0"))
 
     band_cols = [
         F.concat(*[sign(b * rows + r) for r in range(rows)]).alias(f"b{b}")

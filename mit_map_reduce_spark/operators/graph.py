@@ -31,6 +31,7 @@ from pyspark.sql import Window as W
 
 from mit_map_reduce_spark.catalog import (
     bounded_shuffle_width,
+    iterate,
     load_table,
     scoped_conf,
     shared_persist,
@@ -211,6 +212,41 @@ def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_persist(spark, "trade_edges", sf_dir, build)
 
 
+def _fixpoint(spark: SparkSession, sf_dir: str, name: str, rounds: int, plan) -> DataFrame:
+    """The shared-persisted ``rounds``-deep fixed-round build over the
+    trade graph, registered as ``name`` once per (session, corpus).
+
+    Inside one ``scoped_conf``: the graph-suite floor width, the
+    shared edge list, then the volume-derived width from its persisted
+    count (``_fixpoint_conf``: the 32 floor at committed SFs, so plans
+    are unchanged). ``plan(edges)`` returns ``(seed, step)``; the
+    rounds run through ``catalog.iterate`` INSIDE the scope, because a
+    scoped width only holds for what materializes there. The last
+    round comes back persisted and ``shared_persist`` adopts it."""
+
+    def build():
+        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
+            edges = _trade_edges(spark, sf_dir)
+            set_conf(_fixpoint_conf(edges.count()))
+            seed, step = plan(edges)
+            return iterate(seed, step, rounds)
+
+    return shared_persist(spark, name, sf_dir, build)
+
+
+def _pr_mass(edges: DataFrame, deg: DataFrame, pr: DataFrame) -> DataFrame:
+    """(dst, mass): the rank each node receives in one PageRank round,
+    sum over in-edges u->v of rank(u) / outdeg(u) — one edge/rank
+    equi-join plus a destination aggregate (global and personalized
+    PageRank alike)."""
+    return (
+        edges.join(pr, edges.src == pr.node)
+        .join(deg, "src")
+        .groupBy("dst")
+        .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
+    )
+
+
 def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (damping 0.85, PR_ITERS fixed iterations) over the
     trade graph; returns every node's rank plus its side of the graph.
@@ -220,61 +256,42 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     see module docstring). The edge list is persisted once and reused
     by all iterations; N and the degree table derive from it.
 
-    Each iteration materializes eagerly (persist + count — the CC-loop
-    pattern) under a scoped shuffle-partition setting sized to the
-    node count, not the session default: an iterative job on a small
-    graph otherwise runs hundreds of near-empty reduce tasks per round
-    on a stock session, and eager materialization is also what keeps
-    the lineage from nesting 3 iterations deep. On a 10^9-edge graph,
-    raise GRAPH_SHUFFLE_PARTITIONS with the data (or drop the override
-    and let AQE coalesce).
+    Each iteration is one ``catalog.iterate`` round under the scoped
+    fixpoint width (``_fixpoint``): sized to the edge count, not the
+    session default, so an iterative job on a small graph does not run
+    hundreds of near-empty reduce tasks per round on a stock session,
+    and eager materialization keeps the lineage from nesting
+    PR_ITERS iterations deep.
     """
-    def build():
-        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
-            edges = _trade_edges(spark, sf_dir)
-            # volume-derived width: 32-floor at committed SFs (plans
-            # unchanged), scales with the persisted edge count past it
-            set_conf(_fixpoint_conf(edges.count()))
-            deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-            nodes = edges.select(F.col("src").alias("node")).distinct()
-            n_total = nodes.agg(F.count("*").alias("n"))
-            # rank_0 = 1/N for every node (N rides along via a broadcast
-            # 1-row crossJoin — no driver-side collect)
-            pr = nodes.crossJoin(F.broadcast(n_total)).select(
-                "node", round_half_up(F.lit(1.0) / F.col("n"), RANK_DIGITS).alias("rank")
-            )
-            superseded = None
-            for _ in range(PR_ITERS):
-                contrib = (
-                    edges.join(pr, edges.src == pr.node)
-                    .join(deg, "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
-                )
-                new_pr = (
-                    nodes.crossJoin(F.broadcast(n_total))
-                    .join(contrib, nodes.node == contrib.dst, "left")
-                    .select(
-                        "node",
-                        round_half_up(
-                            (1.0 - DAMPING) / F.col("n")
-                            + DAMPING * F.coalesce("mass", F.lit(0.0)),
-                            RANK_DIGITS,
-                        ).alias("rank"),
-                    )
-                    .persist()
-                )
-                new_pr.count()
-                # The superseded iteration's cache is dead the moment
-                # its successor materializes — release it (round-3
-                # leak: 3 cached frames per invocation, kept forever).
-                if superseded is not None:
-                    superseded.unpersist()
-                superseded = new_pr
-                pr = new_pr
-            return pr  # persisted + materialized; registry adopts it
 
-    ranks = shared_persist(spark, "graph_pagerank_ranks", sf_dir, build)
+    def plan(edges):
+        deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        n_total = nodes.agg(F.count("*").alias("n"))
+        # rank_0 = 1/N for every node (N rides along via a broadcast
+        # 1-row crossJoin — no driver-side collect)
+        seed = nodes.crossJoin(F.broadcast(n_total)).select(
+            "node", round_half_up(F.lit(1.0) / F.col("n"), RANK_DIGITS).alias("rank")
+        )
+
+        def step(pr):
+            contrib = _pr_mass(edges, deg, pr)
+            return (
+                nodes.crossJoin(F.broadcast(n_total))
+                .join(contrib, nodes.node == contrib.dst, "left")
+                .select(
+                    "node",
+                    round_half_up(
+                        (1.0 - DAMPING) / F.col("n")
+                        + DAMPING * F.coalesce("mass", F.lit(0.0)),
+                        RANK_DIGITS,
+                    ).alias("rank"),
+                )
+            )
+
+        return seed, step
+
+    ranks = _fixpoint(spark, sf_dir, "graph_pagerank_ranks", PR_ITERS, plan)
     return ranks.select(
         "node",
         F.when(F.col("node") >= NODE_OFFSET, "customer").otherwise("supplier").alias("side"),
@@ -285,16 +302,7 @@ def graph_pagerank_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pagerank_oracle_sql() -> str:
     """DuckDB twin: the same iterations unrolled as chained CTEs."""
     rf = float(10**RANK_DIGITS)
-    sql = f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        edges AS (
-            SELECT cust_node AS src, supp_node AS dst FROM pairs
-            UNION ALL
-            SELECT supp_node, cust_node FROM pairs
-        ),
+    sql = _TRADE_EDGES_CTE + f""",
         deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
         nodes AS (SELECT DISTINCT src AS node FROM edges),
         n_total AS (SELECT count(*) AS n FROM nodes),
@@ -340,8 +348,8 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rank_{i+1}(v) = (1-d)*1[v in S]/|S| + d*mass(v)).
 
     Same iteration engine as the global PageRank — one edge/rank
-    equi-join plus a destination aggregate per round, eager persist
-    with superseded-cache release, ranks rounded each round so the
+    equi-join plus a destination aggregate (``_pr_mass``) per
+    ``_fixpoint`` round, ranks rounded each round so the
     unrolled DuckDB oracle matches bit-for-bit — and the same scoped
     shuffle sizing. The seed table is node-sized and broadcasts; at
     100 TB only the edge joins shuffle, exactly as in the global
@@ -349,62 +357,39 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank 0, which is the semantics (no uniform floor here).
     """
 
-    def build():
-        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
-            edges = _trade_edges(spark, sf_dir)
-            set_conf(_fixpoint_conf(edges.count()))
-            deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-            nodes = edges.select(F.col("src").alias("node")).distinct()
-            supp = load_table(spark, sf_dir, "supplier").filter(
-                F.col("s_nationkey") < PPR_SEED_NATIONS
-            )
-            seeds = nodes.join(
-                F.broadcast(supp.select(F.col("s_suppkey").alias("node"))), "node"
-            )
-            n_seeds = seeds.agg(F.count("*").alias("ns"))
-            seed_share = (
-                seeds.crossJoin(F.broadcast(n_seeds))
-                .select(
-                    "node",
-                    round_half_up(F.lit(1.0) / F.col("ns"), RANK_DIGITS).alias(
-                        "teleport"
-                    ),
-                )
-            )
-            pr = nodes.join(F.broadcast(seed_share), "node", "left").select(
-                "node", F.coalesce("teleport", F.lit(0.0)).alias("rank")
-            )
-            base = nodes.join(F.broadcast(seed_share), "node", "left").select(
-                "node",
-                ((1.0 - DAMPING) * F.coalesce("teleport", F.lit(0.0))).alias("b"),
-            )
-            superseded = None
-            for _ in range(PR_ITERS):
-                contrib = (
-                    edges.join(pr, edges.src == pr.node)
-                    .join(deg, "src")
-                    .groupBy("dst")
-                    .agg(F.sum(F.col("rank") / F.col("outdeg")).alias("mass"))
-                )
-                new_pr = (
-                    base.join(contrib, base.node == contrib.dst, "left")
-                    .select(
-                        "node",
-                        round_half_up(
-                            F.col("b") + DAMPING * F.coalesce("mass", F.lit(0.0)),
-                            RANK_DIGITS,
-                        ).alias("rank"),
-                    )
-                    .persist()
-                )
-                new_pr.count()
-                if superseded is not None:
-                    superseded.unpersist()
-                superseded = new_pr
-                pr = new_pr
-            return pr
+    def plan(edges):
+        deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
+        nodes = edges.select(F.col("src").alias("node")).distinct()
+        supp = load_table(spark, sf_dir, "supplier").filter(
+            F.col("s_nationkey") < PPR_SEED_NATIONS
+        )
+        seeds = nodes.join(F.broadcast(supp.select(F.col("s_suppkey").alias("node"))), "node")
+        n_seeds = seeds.agg(F.count("*").alias("ns"))
+        seed_share = seeds.crossJoin(F.broadcast(n_seeds)).select(
+            "node",
+            round_half_up(F.lit(1.0) / F.col("ns"), RANK_DIGITS).alias("teleport"),
+        )
+        pr = nodes.join(F.broadcast(seed_share), "node", "left").select(
+            "node", F.coalesce("teleport", F.lit(0.0)).alias("rank")
+        )
+        base = nodes.join(F.broadcast(seed_share), "node", "left").select(
+            "node",
+            ((1.0 - DAMPING) * F.coalesce("teleport", F.lit(0.0))).alias("b"),
+        )
 
-    ranks = shared_persist(spark, "graph_ppr_ranks", sf_dir, build)
+        def step(pr):
+            contrib = _pr_mass(edges, deg, pr)
+            return base.join(contrib, base.node == contrib.dst, "left").select(
+                "node",
+                round_half_up(
+                    F.col("b") + DAMPING * F.coalesce("mass", F.lit(0.0)),
+                    RANK_DIGITS,
+                ).alias("rank"),
+            )
+
+        return pr, step
+
+    ranks = _fixpoint(spark, sf_dir, "graph_ppr_ranks", PR_ITERS, plan)
     return ranks.filter(F.col("rank") > 0).select(
         "node",
         F.when(F.col("node") >= NODE_OFFSET, "customer")
@@ -417,16 +402,7 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ppr_oracle_sql() -> str:
     """DuckDB twin of the personalized iterations, unrolled."""
     rf = float(10**RANK_DIGITS)
-    sql = f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        edges AS (
-            SELECT cust_node AS src, supp_node AS dst FROM pairs
-            UNION ALL
-            SELECT supp_node, cust_node FROM pairs
-        ),
+    sql = _TRADE_EDGES_CTE + f""",
         deg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
         nodes AS (SELECT DISTINCT src AS node FROM edges),
         seeds AS (
@@ -492,32 +468,18 @@ def graph_kcore_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes on BOTH endpoints, one degree aggregation — linear per
     round, shuffles scoped to the graph's partition count.
     """
-    def build():
-        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
-            edges = _trade_edges(spark, sf_dir)
-            set_conf(_fixpoint_conf(edges.count()))
-            alive = edges.select(F.col("src").alias("node")).distinct()
-            superseded = None
-            for _ in range(KCORE_ROUNDS):
-                a_src = alive.select(F.col("node").alias("src"))
-                a_dst = alive.select(F.col("node").alias("dst"))
-                live_edges = edges.join(a_src, "src", "left_semi").join(
-                    a_dst, "dst", "left_semi"
-                )
-                deg = live_edges.groupBy("src").agg(F.count("*").alias("degree"))
-                new_alive = (
-                    deg.filter(F.col("degree") >= KCORE_K)
-                    .select(F.col("src").alias("node"))
-                    .persist()
-                )
-                new_alive.count()
-                if superseded is not None:
-                    superseded.unpersist()  # round-3 leak: one per round
-                superseded = new_alive
-                alive = new_alive
-            return alive  # persisted + materialized; registry adopts it
 
-    alive = shared_persist(spark, "graph_kcore_alive", sf_dir, build)
+    def plan(edges):
+        def step(alive):
+            a_src = alive.select(F.col("node").alias("src"))
+            a_dst = alive.select(F.col("node").alias("dst"))
+            live_edges = edges.join(a_src, "src", "left_semi").join(a_dst, "dst", "left_semi")
+            deg = live_edges.groupBy("src").agg(F.count("*").alias("degree"))
+            return deg.filter(F.col("degree") >= KCORE_K).select(F.col("src").alias("node"))
+
+        return edges.select(F.col("src").alias("node")).distinct(), step
+
+    alive = _fixpoint(spark, sf_dir, "graph_kcore_alive", KCORE_ROUNDS, plan)
     edges = _trade_edges(spark, sf_dir)
     a_src = alive.select(F.col("node").alias("src"))
     a_dst = alive.select(F.col("node").alias("dst"))
@@ -673,50 +635,41 @@ def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the community rollup AND the modularity report probe one cached
     copy per (session, corpus)."""
 
-    def build():
-        with scoped_conf(spark, _FLOOR_CONF) as set_conf:
-            edges = _trade_edges(spark, sf_dir)
-            set_conf(_fixpoint_conf(edges.count()))
-            # The encoded argmax silently corrupts once ids reach
-            # LPA_ENC (negative tie-break term) — fail loudly instead.
-            max_node = edges.agg(F.max("src")).first()[0]
-            if max_node is not None and max_node >= LPA_ENC:
-                raise ValueError(
-                    f"node id {max_node} >= LPA_ENC ({LPA_ENC}); raise LPA_ENC "
-                    "with the id domain or the label argmax encoding corrupts"
-                )
-            labels = edges.select(F.col("src").alias("node")).distinct().select(
-                "node", F.col("node").alias("label")
+    def plan(edges):
+        # The encoded argmax silently corrupts once ids reach LPA_ENC
+        # (negative tie-break term) — fail loudly instead.
+        max_node = edges.agg(F.max("src")).first()[0]
+        if max_node is not None and max_node >= LPA_ENC:
+            raise ValueError(
+                f"node id {max_node} >= LPA_ENC ({LPA_ENC}); raise LPA_ENC "
+                "with the id domain or the label argmax encoding corrupts"
             )
-            superseded = None
-            for _ in range(LPA_ROUNDS):
-                cnt = (
-                    edges.join(labels, edges.src == labels.node)
-                    .groupBy("dst", "label")
-                    .agg(F.count("*").alias("c"))
-                )
-                best = (
-                    cnt.select(
-                        "dst",
-                        (
-                            F.col("c") * LPA_ENC + (F.lit(LPA_ENC - 1) - F.col("label"))
-                        ).alias("s"),
-                    )
-                    .groupBy("dst")
-                    .agg(F.max("s").alias("s"))
-                )
-                new_labels = best.select(
-                    F.col("dst").alias("node"),
-                    (F.lit(LPA_ENC - 1) - F.col("s") % LPA_ENC).alias("label"),
-                ).persist()
-                new_labels.count()
-                if superseded is not None:
-                    superseded.unpersist()
-                superseded = new_labels
-                labels = new_labels
-            return labels
 
-    return shared_persist(spark, "graph_lpa_labels", sf_dir, build)
+        def step(labels):
+            cnt = (
+                edges.join(labels, edges.src == labels.node)
+                .groupBy("dst", "label")
+                .agg(F.count("*").alias("c"))
+            )
+            best = (
+                cnt.select(
+                    "dst",
+                    (F.col("c") * LPA_ENC + (F.lit(LPA_ENC - 1) - F.col("label"))).alias("s"),
+                )
+                .groupBy("dst")
+                .agg(F.max("s").alias("s"))
+            )
+            return best.select(
+                F.col("dst").alias("node"),
+                (F.lit(LPA_ENC - 1) - F.col("s") % LPA_ENC).alias("label"),
+            )
+
+        seed = edges.select(F.col("src").alias("node")).distinct().select(
+            "node", F.col("node").alias("label")
+        )
+        return seed, step
+
+    return _fixpoint(spark, sf_dir, "graph_lpa_labels", LPA_ROUNDS, plan)
 
 
 def graph_modularity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -770,16 +723,7 @@ def _lpa_labels_cte_sql() -> str:
     """Shared CTE chain rebuilding the LPA label vector (rounds
     unrolled), ending in ``lp{LPA_ROUNDS}`` — used by the community
     rollup oracle AND the modularity oracle."""
-    sql = f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        edges AS (
-            SELECT cust_node AS src, supp_node AS dst FROM pairs
-            UNION ALL
-            SELECT supp_node, cust_node FROM pairs
-        ),
+    sql = _TRADE_EDGES_CTE + """,
         lp0 AS (SELECT DISTINCT src AS node, src AS label FROM edges)"""
     prev = "lp0"
     for i in range(1, LPA_ROUNDS + 1):
@@ -848,16 +792,7 @@ def _modularity_oracle_sql() -> str:
 def _kcore_oracle_sql() -> str:
     """DuckDB twin of the fixed-round k-core pruning, rounds unrolled
     as chained CTEs (same contract as the PageRank oracle)."""
-    sql = f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        edges AS (
-            SELECT cust_node AS src, supp_node AS dst FROM pairs
-            UNION ALL
-            SELECT supp_node, cust_node FROM pairs
-        ),
+    sql = _TRADE_EDGES_CTE + """,
         alive0 AS (SELECT DISTINCT src AS node FROM edges)"""
     prev = "alive0"
     for i in range(1, KCORE_ROUNDS + 1):
@@ -997,6 +932,21 @@ def _knn_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return shared_persist(spark, "graph_knn_edges", sf_dir, build)
 
+
+#: Shared SQL prefix rebuilding the trade graph's distinct (customer,
+#: supplier) pairs in DuckDB — the oracle twin of ``_trade_edges``'
+#: dedup. ``_TRADE_EDGES_CTE`` adds the edges in both directions.
+_TRADE_PAIRS_CTE = f"""
+    WITH pairs AS (
+        SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
+        FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+    )"""
+_TRADE_EDGES_CTE = _TRADE_PAIRS_CTE + """,
+    edges AS (
+        SELECT cust_node AS src, supp_node AS dst FROM pairs
+        UNION ALL
+        SELECT supp_node, cust_node FROM pairs
+    )"""
 
 #: Shared SQL prefix rebuilding the mutual-kNN edge list in DuckDB —
 #: the oracle twin of ``_knn_copurchase_edges``.
@@ -1216,8 +1166,8 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Pregel-shaped loop: each round joins ONLY the current frontier
     (not the whole visited set) against the edge list, anti-joins away
     already-visited nodes, and tags survivors with the round number.
-    Per-round frames persist and the superseded visited set unpersists
-    once its successor materializes (the graph-loop cache discipline);
+    Each round's visited set is eagerly localCheckpointed, which is
+    why this loop stays outside ``catalog.iterate`` (see below);
     the whole fixpoint runs once per (session, corpus) via the shared
     registry, and the edge list is the same cached artifact the
     triangle/assortativity/link-prediction queries probe.
@@ -1453,11 +1403,7 @@ def _hits_oracle_sql() -> str:
     """Round-unrolled HITS twin: grained neighbor sums + one division
     per step, same customer->supplier direction."""
     grain = 10**RANK_DIGITS
-    sql = f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
+    sql = _TRADE_PAIRS_CTE + """,
         edges AS (
             SELECT cust_node AS src, supp_node AS dst FROM pairs
         ),
@@ -1517,17 +1463,8 @@ QUERIES = {
 ORACLES = {
     "graph_hits_scores": _hits_oracle_sql(),
     "graph_bfs_reach": _bfs_oracle_sql(),
-    "graph_degree_assortativity": f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node,
-                   l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
-        edges AS (
-            SELECT cust_node AS src, supp_node AS dst FROM pairs
-            UNION ALL
-            SELECT supp_node, cust_node FROM pairs
-        ),
+    "graph_degree_assortativity": _TRADE_EDGES_CTE
+    + """,
         deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
         ep AS (
             SELECT CAST(ds.d AS HUGEINT) AS x, CAST(dd.d AS HUGEINT) AS y
@@ -1613,11 +1550,8 @@ ORACLES = {
     "graph_pagerank_trade": _pagerank_oracle_sql(),
     "graph_personalized_pagerank": _ppr_oracle_sql(),
     "graph_kcore_prune": _kcore_oracle_sql(),
-    "graph_degree_distribution": f"""
-        WITH pairs AS (
-            SELECT DISTINCT o_custkey + {NODE_OFFSET} AS cust_node, l_suppkey AS supp_node
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        ),
+    "graph_degree_distribution": _TRADE_PAIRS_CTE
+    + f""",
         edges AS (
             SELECT cust_node AS src FROM pairs
             UNION ALL

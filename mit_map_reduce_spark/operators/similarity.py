@@ -18,7 +18,7 @@ DuckDB oracle reproduces them exactly.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
@@ -168,7 +168,20 @@ def _plane(h: int) -> list[float]:
     ]
 
 
-def _signatures(emb: DataFrame, spark: SparkSession) -> DataFrame:
+def _plane_dot(h: int) -> Column:
+    """embedding . plane h: a left-to-right fold of the ``embedding``
+    column against plane h's md5-derived constants embedded as
+    literals — map-side, zero shuffle, whole-stage codegen. The LSH
+    signs, the random projection and dedup's band keys all use it."""
+    plane = F.array(*[F.lit(p) for p in _plane(h)])
+    return F.aggregate(
+        F.zip_with(F.col("embedding"), plane, lambda x, p: x.cast("double") * p),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def _signatures(emb: DataFrame) -> DataFrame:
     """(vec_id, bucket): bucket = concat of hyperplane signs.
 
     Pure map-side projection: each sign is a fold of the embedding
@@ -177,16 +190,9 @@ def _signatures(emb: DataFrame, spark: SparkSession) -> DataFrame:
     (vec_id, h, partial-dot) stream; hyperplanes being constants, no
     shuffle is needed at all.
     """
-    del spark  # kept for signature compatibility
 
     def sign(h: int):
-        plane = F.array(*[F.lit(p) for p in _plane(h)])
-        dot = F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, p: x.cast("double") * p),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        return F.when(dot >= 0, F.lit("1")).otherwise(F.lit("0"))
+        return F.when(_plane_dot(h) >= 0, F.lit("1")).otherwise(F.lit("0"))
 
     bucket = F.concat(*[sign(h) for h in range(N_PLANES)])
     return emb.select("vec_id", bucket.alias("bucket"))
@@ -204,7 +210,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     across one hyperplane — the dominant LSH miss mode — are recovered.
     """
     emb = _emb_with_norm(spark, sf_dir)
-    sig = _signatures(emb, spark)
+    sig = _signatures(emb)
     embs = emb.join(sig, "vec_id")
     queries = embs.filter(F.expr(QUERY_FILTER)).select(
         F.col("vec_id").alias("query_id"),
@@ -461,18 +467,9 @@ def embedding_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries) — arrays don't survive the differential harness's hash.
     """
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-
-    def proj(h: int):
-        plane = F.array(*[F.lit(p) for p in _plane(h)])
-        return F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda x, p: x.cast("double") * p),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     return emb.select(
         "vec_id",
-        *[round_half_up(proj(h), 4).alias(f"p{h:02d}") for h in range(RP_DIM)],
+        *[round_half_up(_plane_dot(h), 4).alias(f"p{h:02d}") for h in range(RP_DIM)],
     )
 
 

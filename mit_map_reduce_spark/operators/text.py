@@ -17,7 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from mit_map_reduce_spark.catalog import load_table, shared_persist, spread, table_footer_count
+from mit_map_reduce_spark.catalog import iterate, load_table, shared_persist, spread, table_footer_count
 from mit_map_reduce_spark.functions.columns import (
     hex_int,
     round_half_up,
@@ -1937,8 +1937,6 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
     a side effect of the same build) in the plain memo — the memo
     strictly outlives the registry entry, so a registry clear simply
     retrains both."""
-    from mit_map_reduce_spark.catalog import shared_persist
-
     key = (id(spark), sf_dir)
 
     def build():
@@ -1958,7 +1956,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             "word", "c", F.concat(F.lit(" "), chars, F.lit(" ")).alias("s")
         ).persist()
         merges = []
-        for rank in range(BPE_TRAIN_MERGES):
+
+        def step(syms):
             arr = F.split(F.trim("s"), " ")
             pair_arr = F.when(F.size(arr) < 2, F.array()).otherwise(
                 F.transform(
@@ -1977,8 +1976,8 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
                 .collect()[0]
             )
             a, b = best.pair.split(" ")
-            merges.append((rank, a, b, a + b, best.n))
-            merged = syms.withColumn(
+            merges.append((len(merges), a, b, a + b, best.n))
+            return syms.withColumn(
                 "s",
                 F.replace(
                     F.replace(
@@ -1987,10 +1986,9 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
                     F.lit(f" {a} {b} "),
                     F.lit(f" {a}{b} "),
                 ),
-            ).persist()
-            merged.count()
-            syms.unpersist()
-            syms = merged
+            )
+
+        syms = iterate(syms, step, BPE_TRAIN_MERGES)
         _BPE_MERGES[key] = merges
         return syms
 

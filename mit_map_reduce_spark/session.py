@@ -95,11 +95,9 @@ def get_spark(
         # read each table on ONE core. 2 MB restores scan parallelism
         # locally; at 100 TB files exceed 128 MB and the production
         # default (the invariant: scan partitions >= cores) is correct,
-        # so a cluster deployment should drop this override.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(2 * 1024 * 1024)),
-        )
+        # so a cluster deployment should drop this override
+        # (``extra_conf`` wins over it).
+        .config("spark.sql.files.maxPartitionBytes", str(2 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

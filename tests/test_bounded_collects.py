@@ -43,12 +43,12 @@ ALLOWED: dict[tuple[str, str, str], tuple[int, str]] = {
         "labeled audit-scale baseline: broadcast build of the full "
         "embedding table; the banded-LSH query is the scale path",
     ),
-    ("operators/text.py", "build", "collect"): (
+    ("operators/text.py", "step", "collect"): (
         1,
         "BPE trainer: limit(1) best-pair row per merge, bounded by "
         "BPE_MERGES",
     ),
-    ("operators/graph.py", "build", "first"): (
+    ("operators/graph.py", "plan", "first"): (
         1,
         "1-row agg: max node id guard before the LPA label encoding",
     ),

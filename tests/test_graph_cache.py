@@ -7,7 +7,7 @@ superseded per-round frame; and a second invocation of an iterative
 query is a pure registry hit (zero new cached RDDs).
 """
 
-from pyspark.sql import functions as F  # noqa: F401
+from pyspark.sql import functions as F
 
 from mit_map_reduce_spark.catalog import _CHECKPOINT_RDDS, _SHARED_CACHE
 from mit_map_reduce_spark.operators.graph import (
@@ -16,6 +16,7 @@ from mit_map_reduce_spark.operators.graph import (
     graph_kcore_prune,
     graph_pagerank_trade,
 )
+from tests.util import spark_jobs
 
 
 def _cached_rdd_ids(spark):
@@ -143,3 +144,67 @@ def test_scoped_conf_nests_and_unsets_keys_the_caller_never_set(spark):
         assert spark.conf.get(width_key) == "7"
         assert spark.conf.get(key, None) is None
     assert spark.conf.get(width_key) == width_before
+
+
+def test_iterate_materializes_each_round_and_releases_its_predecessor(spark, monkeypatch):
+    """catalog.iterate, the one fixed-round loop: each round's frame is
+    persisted and counted BEFORE its predecessor is released; a lazy
+    seed is never unpersisted, a persisted seed is released after
+    round 1, and only the last round stays cached. The Spark jobs are
+    exactly ``rounds`` materializing counts: under AQE one count of a
+    newly persisted frame is itself several jobs, so the unit is
+    measured, not assumed."""
+    from mit_map_reduce_spark.catalog import iterate
+
+    rounds = 3
+    probe = spark.range(8).select((F.col("id") + 1).alias("id")).persist()
+    per_round = spark_jobs(spark, probe.count)
+    probe.unpersist()
+    cls = type(spark.range(1))
+    log = []
+    for op in ("persist", "unpersist", "count"):
+        orig = getattr(cls, op)
+
+        def spy(self, *a, _op=op, _orig=orig, **kw):
+            log.append((_op, id(self)))
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(cls, op, spy)
+
+    def run(seed):
+        frames = [seed]
+
+        def step(cur):
+            assert cur is frames[-1]
+            # the input round is still cached while its successor builds
+            assert cur is seed or cur.storageLevel.useMemory
+            frames.append(cur.select((F.col("id") + 1).alias("id")))
+            return frames[-1]
+
+        log.clear()
+        box = []
+        jobs = spark_jobs(spark, lambda: box.append(iterate(seed, step, rounds)))
+        assert box[0] is frames[-1] and jobs == rounds * per_round
+        assert sorted(r.id for r in box[0].collect()) == list(range(rounds, rounds + 8))
+        ids = [id(f) for f in frames]
+        return frames, [(op, ids.index(i)) for op, i in log]
+
+    def expected(release_seed):
+        out = []
+        for r in range(1, rounds + 1):
+            out += [("persist", r), ("count", r)]
+            if r > 1 or release_seed:
+                out.append(("unpersist", r - 1))
+        return out
+
+    frames, events = run(spark.range(8))  # lazy seed: never touched
+    assert events == expected(release_seed=False)
+    assert [f.storageLevel.useMemory for f in frames] == [False] * rounds + [True]
+    frames[-1].unpersist()
+
+    seed = spark.range(8).persist()  # persisted seed: released after round 1
+    seed.count()
+    frames, events = run(seed)
+    assert events == expected(release_seed=True)
+    assert [f.storageLevel.useMemory for f in frames] == [False] * rounds + [True]
+    frames[-1].unpersist()

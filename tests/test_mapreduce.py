@@ -7,7 +7,6 @@ mrsequential's golden file (reference src/main/test-mr.sh:81-83,103).
 """
 
 import os
-import uuid
 
 import pytest
 from pyspark.rdd import portable_hash
@@ -24,6 +23,7 @@ from mit_map_reduce_spark.mapreduce.apps import (
     wc_map,
     wc_reduce,
 )
+from tests.util import spark_jobs
 
 CORPUS = {
     "pg-alpha.txt": "The quick brown fox\njumps over the lazy dog.\nThe dog sleeps.",
@@ -174,20 +174,6 @@ def test_text_sink_file_naming_parity(spark, corpus_dir, tmp_path):
     assert sorted(lines) == sorted(f"{k} {v}" for k, v in golden)
 
 
-def _spark_jobs(spark, action) -> int:
-    """Spark jobs ``action()`` submits, counted by a job-group delta."""
-    sc = spark.sparkContext
-    group = f"mr-save-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "counted")
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store on the listener-bus thread
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_saving_a_run_job_frame_is_one_spark_job(spark, corpus_dir, tmp_path):
     """A job is one shuffle, as in the reference: the reduce tasks write
     their own mr-out-R (worker.go:195-219), so saving the run_job frame
@@ -195,7 +181,7 @@ def test_saving_a_run_job_frame_is_one_spark_job(spark, corpus_dir, tmp_path):
     second repartition of the reduced output."""
     inputs = [os.path.join(corpus_dir, "pg-*.txt")]
     df = run_job(spark, wc_map, wc_reduce, inputs, n_reduce=3)
-    assert _spark_jobs(spark, lambda: save_text_output(df, str(tmp_path / "out"), n_reduce=3)) == 1
+    assert spark_jobs(spark, lambda: save_text_output(df, str(tmp_path / "out"), n_reduce=3)) == 1
 
 
 @pytest.mark.parametrize("frame", ["filtered", "other_n_reduce"])

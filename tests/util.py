@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import math
+import uuid
 from collections import Counter
 from datetime import date, datetime
 
@@ -43,3 +44,17 @@ def assert_df_matches_oracle(sdf, duck_con, sql):
         f"value mismatch; spark-only={list((sn - dn).items())[:3]} "
         f"duckdb-only={list((dn - sn).items())[:3]}"
     )
+
+
+def spark_jobs(spark, action) -> int:
+    """Spark jobs ``action()`` submits, counted by a job-group delta."""
+    sc = spark.sparkContext
+    group = f"counted-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "counted")
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # job-start events reach the status store on the listener-bus thread
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

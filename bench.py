@@ -37,6 +37,7 @@ from py4j.protocol import Py4JError
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from mit_map_reduce_spark import cds
 from mit_map_reduce_spark.catalog import drain_build_events
 from mit_map_reduce_spark.session import get_spark
 
@@ -565,9 +566,14 @@ def main() -> None:
         "cores": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
         "spark_version": spark.version,
+        "java_version": spark._jvm.System.getProperty("java.version"),
+        # the driver JVM's class-data-sharing archive key, or why it has none
+        "driver_cds": cds.STATUS.get("driver_cds"),
         "sf": sf_val,
         "stream_scratch_root": os.path.dirname(stream_queries._SCRATCH_BASE),
     }
+    if "build_s" in cds.STATUS:
+        env["driver_cds_build_s"] = cds.STATUS["build_s"]
     full = {
         "metric": "headline_queries_total_wall_clock",
         "value": round(sum(timings.values()), 3),

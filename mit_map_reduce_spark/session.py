@@ -15,6 +15,17 @@ Scale notes (100 TB mindset):
   serialization.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB correctness oracle and are cluster-invariant.
+
+Driver start: a new driver JVM maps a class-data-sharing archive of
+Spark's classes (``cds.py``): ``get_spark`` ~6.4 -> ~2.9 s and the
+first job ~3.5 -> ~1.7 s on 4 cores. The archive lives in
+``$XDG_CACHE_HOME/mit_map_reduce_spark/cds/`` (``~/.cache`` when unset),
+keyed on stat data of the JDK and of ``$SPARK_HOME/jars``; the first
+session on a machine builds it (~43 s, ~180 MB, once). Delete that dir
+to drop it. A session whose conf dir holds a real file, a call that
+reuses the JVM this process already runs, and the grading driver's
+vanilla session start without it; on a cluster only the driver JVM
+gains.
 """
 
 from __future__ import annotations
@@ -22,7 +33,10 @@ from __future__ import annotations
 import os
 import sys
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from mit_map_reduce_spark import cds
 
 
 def default_parallelism() -> int:
@@ -114,8 +128,19 @@ def get_spark(
             .config("spark.executorEnv.PYTHONPATH", repo_root)
             .config("spark.pyspark.python", sys.executable)
         )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    conf_dir = None
+    # Only a process with no driver JVM yet launches one; a later
+    # session (even after stop()) reuses that JVM and its start flags.
+    if SparkContext._gateway is None:
+        opts, conf_dir = cds.driver_options(extra.get(cds.JAVA_OPTS))
+        if opts:
+            extra[cds.JAVA_OPTS] = opts
+    elif not cds.STATUS:
+        cds.STATUS["driver_cds"] = "reused_session"
+    for k, v in extra.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with cds.conf_dir_env(conf_dir):
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -117,7 +117,11 @@ def test_bench_records_counters_and_environment(bench_baseline):
         assert c["jobs"] >= 1 and c["stages"] >= 1
     assert side["counters"][QUERY]["shuffle_write_bytes"] > 0
     env = side["environment"]
-    assert set(env) == {"cores", "master", "spark_version", "sf", "stream_scratch_root"}
+    assert set(env) - {"driver_cds_build_s"} == {
+        "cores", "master", "spark_version", "java_version", "driver_cds", "sf",
+        "stream_scratch_root",
+    }
+    assert env["java_version"] and env["driver_cds"]
     assert env["sf"] == 0.001 and env["cores"] >= 1
     # the baseline had no counters-bearing stamp to diff against
     assert side["unexplained_regressions"] == []

@@ -82,6 +82,12 @@ ALLOWED: dict[tuple[str, str, str], tuple[int, str]] = {
         1,
         "1-row agg: total vector count folded back as a literal",
     ),
+    ("cds.py", "_exercise", "toPandas"): (
+        1,
+        "driver class-data-sharing archive build: a fixed 2000-row "
+        "spark.range frame, collected once so the Arrow collect path's "
+        "classes are in the archive",
+    ),
 }
 
 

@@ -38,7 +38,7 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 from mit_map_reduce_spark import cds
-from mit_map_reduce_spark.catalog import drain_build_events
+from mit_map_reduce_spark.catalog import RUN_SCRATCH, drain_build_events
 from mit_map_reduce_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -496,8 +496,6 @@ def _median_excluding_builds(
 def main() -> None:
     import __spark_entry__ as entrymod
 
-    from mit_map_reduce_spark.streaming import queries as stream_queries
-
     queries = entrymod.queries()
     spark = get_spark("mmrs_bench")
 
@@ -570,7 +568,7 @@ def main() -> None:
         # the driver JVM's class-data-sharing archive key, or why it has none
         "driver_cds": cds.STATUS.get("driver_cds"),
         "sf": sf_val,
-        "stream_scratch_root": os.path.dirname(stream_queries._SCRATCH_BASE),
+        "stream_scratch_root": os.path.dirname(RUN_SCRATCH),
     }
     if "build_s" in cds.STATUS:
         env["driver_cds_build_s"] = cds.STATUS["build_s"]

@@ -10,9 +10,12 @@ whole file — ``src/mr/worker.go:137``).
 
 from __future__ import annotations
 
+import atexit
 import contextlib
 import os
+import shutil
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -84,6 +87,69 @@ def scratch_base() -> str:
     return os.environ.get("SPARK_GRAFT_SCRATCH_DIR", tempfile.gettempdir())
 
 
+#: Free space /dev/shm must have before run scratch goes there.
+#: Scratch is swept only at interpreter exit, so it grows with every
+#: drain a process runs: the 12 headline stream queries at sf0.1, three
+#: runs each in one process (one bench pass), peaked at 81 MB of
+#: allocated tmpfs blocks (61 MB of file bytes; 4 cores, Spark 4.1.2).
+#: 1 GiB is ~13x that peak; Docker's default 64 MB /dev/shm would not
+#: even hold one bench pass.
+_SHM_MIN_FREE_BYTES = 1 << 30
+
+
+def run_scratch_root() -> str:
+    """Base dir for the per-process run scratch (``RUN_SCRATCH``).
+    Everything under it is process-unique and swept at interpreter
+    exit, so DURABILITY has no value here — LATENCY does: the
+    state-store commit protocol writes + renames one delta file per
+    store per micro-batch (a stream-stream join runs 4 stores x
+    ``state_width`` partitions), and the r16 re-measure (at 4 x 8) of
+    the r8 "checkpoint I/O is not the cost" claim found the environment
+    had shifted under it — on that host the tempdir write path costs
+    stream_stream_join_attribution ~7.5 s of its 10 s drain
+    (commitTimeMs 9+16 s summed across stores; the SAME drain on
+    /dev/shm: 2.6 s warm, the r11-r14 band). Honors
+    SPARK_GRAFT_SCRATCH_DIR first — a multi-node cluster MUST route
+    scratch through shared storage (scratch_base contract) and a
+    deployment that wants disk-backed checkpoints sets it explicitly;
+    the fast default only applies single-machine, and only while
+    /dev/shm has ``_SHM_MIN_FREE_BYTES`` free."""
+    explicit = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
+    if explicit:
+        return explicit
+    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+        st = os.statvfs("/dev/shm")
+        if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
+            return "/dev/shm"
+    return scratch_base()
+
+
+#: The one per-process scratch dir: stream-source symlink dirs,
+#: file-sink output, stream checkpoints, upsert snapshots and, on
+#: cluster masters, the Spark checkpoint dir of ``truncate_lineage``.
+#: Swept at interpreter exit — repeated bench/correctness runs do not
+#: accumulate parquet + state files — and not per query, which keeps
+#: returned DataFrames readable: they are lazy over these files until
+#: the caller finishes collecting. Process-unique and exit-swept ON
+#: PURPOSE: a cross-run store keyed on the testdata would be result
+#: caching across runs (the bench/oracle must compute from the parquet
+#: inputs every invocation). pid alone is NOT unique once the base can
+#: point at SHARED storage (pids are per-host; two drivers on different
+#: nodes can share one) — and the exit sweep would then rmtree another
+#: live run's checkpoints. The uuid component makes the dir
+#: process-unique on any filesystem.
+RUN_SCRATCH = os.path.join(
+    run_scratch_root(), f"mmrs_stream_scratch_{os.getpid()}_{uuid.uuid4().hex[:8]}"
+)
+atexit.register(shutil.rmtree, RUN_SCRATCH, ignore_errors=True)
+
+
+def run_scratch_dir(*parts: str) -> str:
+    d = os.path.join(RUN_SCRATCH, *parts)
+    os.makedirs(d, exist_ok=True)
+    return d
+
+
 #: Revision of the publish protocol, folded into the keys of artifacts
 #: that were once published under another signal (the bucketed tables
 #: used Spark's ``_SUCCESS``, the IVF centroids a bare rename), so a
@@ -119,9 +185,7 @@ def _write_and_publish(write_fn, out_dir: str) -> None:
     """Run ``write_fn`` into a unique ``.tmp*`` sibling, drop the marker
     inside it and rename it into place — the reference's temp file +
     atomic rename commit (``src/mr/worker.go:219-224``) for a dir."""
-    import shutil
     import threading
-    import uuid
 
     tmp = out_dir + ".tmp" + uuid.uuid4().hex[:8]
     # Keep the temp dir AND the lock visibly fresh while the write runs:
@@ -178,8 +242,6 @@ def _take_lock(lock: str, out_dir: str) -> bool:
     retaken: renamed to a unique tombstone first, so only one expirer
     can win (a plain rmdir could instead delete a FRESH lock re-created
     by a faster expirer — the two-winners race)."""
-    import uuid
-
     try:
         os.mkdir(lock)
         return True
@@ -242,7 +304,6 @@ def publish_once(write_fn, out_dir: str) -> str:
     reused artifact records none.
     """
     import glob
-    import shutil
 
     if _is_published(out_dir):
         return out_dir
@@ -451,23 +512,24 @@ def normalize_nanos_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 #: once at 100 TB.
 _SHARED_CACHE: dict[tuple, DataFrame] = {}
 
-#: checkpoint-RDD id -> the PRE-truncation build frame. The r15 lineage
-#: truncation (see shared_persist) re-stores a materialized artifact
-#: behind a LogicalRDD leaf, which blinded every plan-introspection
-#: probe (plans.inspect.unpartitioned_corpus_windows, the repo-wide
-#: window audit) to the artifact's internals — the r15 ADVICE flagged
-#: that as silently weakening the structural safety net. The probes
-#: resolve an RDDScanExec leaf back to its build frame through this map
-#: and keep descending, so structural pins cover artifact internals
-#: again. Query paths never touch it; only probes pay the build frame's
-#: (re-)analysis cost.
+#: checkpoint-RDD id -> the PRE-truncation build frame. shared_persist
+#: re-stores a materialized artifact behind ``truncate_lineage``'s
+#: LogicalRDD leaf (local or reliable checkpoint, by master), which
+#: would blind every plan-introspection probe
+#: (plans.inspect.unpartitioned_corpus_windows, the repo-wide window
+#: audit) to the artifact's internals. The probes resolve an
+#: RDDScanExec leaf back to its build frame through this map and keep
+#: descending, so structural pins cover artifact internals on every
+#: master. Query paths never touch it; only probes pay the build
+#: frame's (re-)analysis cost.
 _SHARED_BUILD_FRAMES: dict[int, DataFrame] = {}
 
-#: registry key -> the checkpointed JVM RDD. localCheckpoint blocks are
-#: NOT managed by the CacheManager, so DataFrame.unpersist() on the
+#: registry key -> the checkpointed JVM RDD. Checkpoint data is NOT
+#: managed by the CacheManager, so DataFrame.unpersist() on the
 #: truncated frame is a no-op and repeated build/clear cycles (tests,
-#: long sessions) would accumulate orphaned checkpoint blocks (r15
-#: ADVICE); clear_shared_caches unpersists these explicitly.
+#: long sessions) would accumulate orphaned local-checkpoint blocks;
+#: clear_shared_caches unpersists these explicitly. Reliable-checkpoint
+#: files live under RUN_SCRATCH until the exit sweep.
 _CHECKPOINT_RDDS: dict[tuple, object] = {}
 
 
@@ -488,63 +550,27 @@ def drain_build_events() -> list[tuple[str, float]]:
     return out
 
 
-#: session id -> this process's artifact scratch dir (cluster masters).
-_ARTIFACT_SCRATCH: dict[int, str] = {}
+def truncate_lineage(df: DataFrame) -> DataFrame:
+    """The one lineage-truncation primitive: materialize ``df`` now and
+    return it behind a leaf LogicalRDD, so later plans analyze O(1)
+    instead of re-analyzing the whole build (true stats and column
+    nullability carry over, so broadcasts still fire).
 
-
-def _session_artifact_dir(spark: SparkSession) -> str:
-    """Process-unique scratch dir for cluster-master artifact
-    materialization, swept at interpreter exit. Process-unique and
-    exit-swept ON PURPOSE: a cross-run artifact store keyed on the
-    testdata would be result caching across runs (the bench/oracle
-    must compute from the parquet inputs every invocation); this dir
-    only ever serves the session that wrote it."""
-    import atexit
-    import shutil
-    import tempfile
-    import uuid
-
-    base = _ARTIFACT_SCRATCH.get(id(spark))
-    if base is None:
-        base = os.path.join(
-            scratch_base(),
-            f"mmrs_session_artifacts_{os.getpid()}_{uuid.uuid4().hex[:8]}",
-        )
-        os.makedirs(base, exist_ok=True)
-        atexit.register(shutil.rmtree, base, ignore_errors=True)
-        _ARTIFACT_SCRATCH[id(spark)] = base
-    return base
-
-
-def _materialize_artifact(
-    spark: SparkSession, df: DataFrame, name: str
-) -> DataFrame | None:
-    """Cluster-master twin of the local localCheckpoint truncation
-    (r15 verdict #3): write the already-computed artifact to session
-    scratch parquet and re-read it, so every consumer's plan is a leaf
-    file scan — O(1) analysis instead of re-analyzing the unrolled
-    fixpoint build, and (unlike checkpoint blocks) re-readable after
-    executor loss. Requires ``SPARK_GRAFT_SCRATCH_DIR`` on storage all
-    executors share (the standing scratch_base contract). Read back
-    with the frame's own schema so nullability survives the parquet
-    round-trip (bare parquet marks every column nullable, which would
-    ripple into consumer output schemas the oracle checks). Returns
-    None if materialization fails (caller keeps the persisted form —
-    correctness never depends on the truncation)."""
-    import hashlib
-    import uuid
-
-    try:
-        path = os.path.join(
-            _session_artifact_dir(spark),
-            hashlib.md5(name.encode()).hexdigest()[:16]
-            + "_"
-            + uuid.uuid4().hex[:8],
-        )
-        df.write.parquet(path)
-        return spark.read.schema(df.schema).parquet(path)
-    except Exception:
-        return None
+    On ``local[...]`` masters a local checkpoint keeps the rows in the
+    block manager — not recomputable after executor loss, which is free
+    under one JVM (block loss == session loss). Any other master takes
+    Spark's reliable checkpoint: the rows are written to files that
+    outlive the executor that wrote them, as the reference's ``mr-X-Y``
+    files outlive their worker (``src/mr/coordinator.go:160-181``).
+    Its checkpoint dir is set on first use under ``RUN_SCRATCH`` (shared
+    storage on a multi-node cluster, the scratch_base contract) unless
+    the caller already set one."""
+    sc = df.sparkSession.sparkContext
+    if sc.master.startswith("local"):
+        return df.localCheckpoint(eager=True)
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(run_scratch_dir("checkpoints"))
+    return df.checkpoint(eager=True)
 
 
 def shared_persist(
@@ -584,49 +610,28 @@ def shared_persist(
         # already persisted+materialized; re-persisting would emit the
         # very CacheManager duplicate-cache warning this registry kills.
         if df.storageLevel.useMemory or df.storageLevel.useDisk:
-            if spark.sparkContext.master.startswith("local"):
-                # Truncate the unrolled-loop lineage (guide §3.3/§5,
-                # r15): a fixpoint artifact's cached frame still
-                # CARRIES its whole iterative build plan, and every
-                # consumer invocation re-analyzes that tree — measured
-                # 0.3-0.7 s of driver time PER CALL on the CC-label /
-                # graph-rank consumers (dedup_cluster_size_report's
-                # plan rendered 3136 Exchange nodes). The eager local
-                # checkpoint re-stores the already-materialized rows
-                # behind a leaf LogicalRDD — true cached stats carry
-                # over (verified: broadcasts still fire), analysis
-                # becomes O(1). local-master only: checkpoint blocks
-                # are not recomputable after executor loss, which is
-                # free under one JVM (block loss == session loss) but
-                # would break cluster fault-tolerance — cluster
-                # masters take the else branch below and materialize
-                # to shared-scratch parquet instead (r16; same leaf-
-                # scan benefit, executor-loss-safe).
-                ck = df.localCheckpoint(eager=True)
-                try:
-                    # LogicalRDD exposes the checkpoint RDD: key it for
-                    # the probe pass-through and the explicit cleanup
-                    # (both documented on the registries above).
-                    jrdd = ck._jdf.queryExecution().analyzed().rdd()
-                    _SHARED_BUILD_FRAMES[jrdd.id()] = df
-                    _CHECKPOINT_RDDS[key] = jrdd
-                except Exception:
-                    pass
-                df.unpersist()
-                df = ck
-            else:
-                # Cluster master: the consumer-side O(1)-analysis win
-                # must exist off local[...] too (r15 verdict #3) — the
-                # 100 TB doctrine form materializes the artifact to
-                # shared-scratch parquet; consumers scan a leaf.
-                out = _materialize_artifact(spark, df, name)
-                if out is not None:
-                    df.unpersist()
-                    df = out
-            _SHARED_CACHE[key] = df
+            # Truncate the unrolled-loop lineage (guide §3.3/§5): a
+            # fixpoint artifact's cached frame still CARRIES its whole
+            # iterative build plan, and every consumer invocation
+            # re-analyzes that tree — measured 0.3-0.7 s of driver time
+            # PER CALL on the CC-label / graph-rank consumers
+            # (dedup_cluster_size_report's plan rendered 3136 Exchange
+            # nodes). The checkpoint re-stores the already-materialized
+            # rows behind a leaf; the build frame is registered for the
+            # probe pass-through and the explicit cleanup (both
+            # documented on the registries above).
+            ck = truncate_lineage(df)
+            try:
+                jrdd = ck._jdf.queryExecution().analyzed().rdd()
+                _SHARED_BUILD_FRAMES[jrdd.id()] = df
+                _CHECKPOINT_RDDS[key] = jrdd
+            except Exception:
+                pass
+            df.unpersist()
+            df = ck
         else:
             df = df.persist()
-            _SHARED_CACHE[key] = df
+        _SHARED_CACHE[key] = df
     return df
 
 
@@ -646,7 +651,7 @@ def iterate(seed: DataFrame, step, rounds: int) -> DataFrame:
     adopts it as is). ``step`` may run its own driver decisions (BPE's
     per-round winning pair) before building the next frame.
 
-    Loops that truncate lineage per round (``localCheckpoint``: BFS,
+    Loops that truncate lineage per round (``truncate_lineage``: BFS,
     MMR), carry two frames (HITS) or materialize through their own
     convergence count (dedup CC) stay hand-written."""
     cur = seed

@@ -36,6 +36,7 @@ from mit_map_reduce_spark.catalog import (
     scoped_conf,
     shared_persist,
     table_footer_count,
+    truncate_lineage,
     volume_width,
 )
 from mit_map_reduce_spark.functions.columns import round_half_up
@@ -1166,8 +1167,8 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Pregel-shaped loop: each round joins ONLY the current frontier
     (not the whole visited set) against the edge list, anti-joins away
     already-visited nodes, and tags survivors with the round number.
-    Each round's visited set is eagerly localCheckpointed, which is
-    why this loop stays outside ``catalog.iterate`` (see below);
+    Each round's visited set goes through ``catalog.truncate_lineage``,
+    which is why this loop stays outside ``catalog.iterate`` (see below);
     the whole fixpoint runs once per (session, corpus) via the shared
     registry, and the edge list is the same cached artifact the
     triangle/assortativity/link-prediction queries probe.
@@ -1183,17 +1184,15 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .persist()
             )
             nodes = und.select(F.col("src").alias("node")).distinct()
-            # Eager localCheckpoint per round (the MMR-loop discipline,
-            # similarity.py:569): truncating lineage keeps re-planning
-            # flat AND keeps the final frame's cached blocks valid —
+            # Eager lineage truncation per round (the MMR-loop
+            # discipline, similarity._mmr_build): it keeps re-planning
+            # flat AND keeps the final frame's rows valid —
             # persist+unpersist chains here left the registry holding a
             # frame whose every count re-ran the whole loop (~5 s).
-            # Superseded checkpoint RDDs are released by the
+            # Superseded local-checkpoint RDDs are released by the
             # ContextCleaner when the Python reference drops.
-            visited = (
-                nodes.filter(F.col("node") % BFS_SEED_MOD == 0)
-                .withColumn("dist", F.lit(0))
-                .localCheckpoint()
+            visited = truncate_lineage(
+                nodes.filter(F.col("node") % BFS_SEED_MOD == 0).withColumn("dist", F.lit(0))
             )
             for r in range(1, BFS_ROUNDS + 1):
                 frontier = visited.filter(F.col("dist") == r - 1)
@@ -1202,11 +1201,13 @@ def graph_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .select(F.col("dst").alias("node"))
                     .distinct()
                 )
-                visited = visited.unionByName(
-                    reached.join(visited, "node", "left_anti").withColumn(
-                        "dist", F.lit(r)
+                visited = truncate_lineage(
+                    visited.unionByName(
+                        reached.join(visited, "node", "left_anti").withColumn(
+                            "dist", F.lit(r)
+                        )
                     )
-                ).localCheckpoint()
+                )
             und.unpersist()
             return visited
 

@@ -32,6 +32,7 @@ from mit_map_reduce_spark.catalog import (
     shared_persist,
     spread,
     table_footer_count,
+    truncate_lineage,
     volume_width,
 )
 from mit_map_reduce_spark.functions.columns import round_half_up, dot_product, sql_hex_int, vec_norm
@@ -590,12 +591,12 @@ def _mmr_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") == 1)
         .select("query_id", "neighbor_id", F.lit(1).alias("pick_rank"), "rel")
     )
-    # Eager localCheckpoint throughout the loop (not persist):
-    # truncating lineage is the point (see below), and unpersist() is
-    # a no-op on checkpointed frames anyway — superseded checkpoint
-    # RDDs are released by the ContextCleaner once the Python
-    # reference drops at reassignment.
-    sel = first.localCheckpoint()
+    # Eager lineage truncation throughout the loop (not persist):
+    # truncating is the point (see below), and unpersist() is a no-op
+    # on checkpointed frames anyway — superseded local-checkpoint RDDs
+    # are released by the ContextCleaner once the Python reference
+    # drops at reassignment.
+    sel = truncate_lineage(first)
     for t in range(2, MMR_K + 1):
         rem = pool.join(sel, ["query_id", "neighbor_id"], "left_anti").alias("r")
         pr = pairs.alias("p")
@@ -626,9 +627,9 @@ def _mmr_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         # caching would short-circuit EXECUTION, Catalyst still
         # re-analyzes the whole deepening tree every round — measured
         # 1.3s -> 7.8s of pure driver planning by round 5.
-        # Checkpointing truncates the lineage so every round plans
-        # against a flat scan.
-        sel = sel.unionAll(pick).localCheckpoint()
+        # Truncating the lineage makes every round plan against a
+        # flat scan.
+        sel = truncate_lineage(sel.unionAll(pick))
     pool.unpersist()
     pairs.unpersist()
     return sel

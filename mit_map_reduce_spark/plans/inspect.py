@@ -190,12 +190,13 @@ def _inner_plans(node):
         except Exception:
             pass
     elif name == "RDDScanExec":
-        # A shared_persist artifact truncated behind a localCheckpoint
-        # leaf (catalog, r15): resolve the RDD id back to the stashed
-        # PRE-truncation build frame and keep descending, so structural
-        # pins still cover artifact internals (r15 ADVICE: the bare
-        # leaf silently blinded this probe repo-wide). Probe-only cost:
-        # the build frame re-plans here, never on query paths.
+        # A shared_persist artifact truncated behind a checkpoint leaf
+        # (catalog.truncate_lineage: local or reliable, by master):
+        # resolve the RDD id back to the stashed PRE-truncation build
+        # frame and keep descending, so structural pins still cover
+        # artifact internals on every master (the bare leaf would blind
+        # this probe repo-wide). Probe-only cost: the build frame
+        # re-plans here, never on query paths.
         try:
             from mit_map_reduce_spark.catalog import _SHARED_BUILD_FRAMES
 

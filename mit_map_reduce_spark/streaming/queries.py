@@ -27,7 +27,6 @@ test-only memory sink is gone entirely), driven by the one runner
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import os
 import shutil
@@ -44,73 +43,18 @@ from mit_map_reduce_spark.functions.columns import (
     sql_hex_int,
     sql_money_sum,
 )
-from mit_map_reduce_spark.catalog import (
+# Stream feeds, sinks, checkpoints and snapshots live in the catalog's
+# one per-process run scratch dir; the underscore aliases stay for the
+# harnesses that read or sweep it.
+from mit_map_reduce_spark.catalog import (  # noqa: F401
+    RUN_SCRATCH as _SCRATCH_BASE,
     ensure_nanos_flag,
     load_table,
+    run_scratch_dir as _scratch_dir,
+    run_scratch_root as _stream_scratch_root,
     scoped_conf,
-    scratch_base,
     table_path,
 )
-
-#: Free space /dev/shm must have before stream scratch goes there.
-#: Scratch is swept only at interpreter exit, so it grows with every
-#: drain a process runs: the 12 headline stream queries at sf0.1, three
-#: runs each in one process (one bench pass), peaked at 81 MB of
-#: allocated tmpfs blocks (61 MB of file bytes; 4 cores, Spark 4.1.2).
-#: 1 GiB is ~13x that peak; Docker's default 64 MB /dev/shm would not
-#: even hold one bench pass.
-_SHM_MIN_FREE_BYTES = 1 << 30
-
-
-def _stream_scratch_root() -> str:
-    """Base dir for the per-run streaming scratch. Everything under it
-    is process-unique and swept at interpreter exit, so DURABILITY has
-    no value here — LATENCY does: the state-store commit protocol
-    writes + renames one delta file per store per micro-batch (a
-    stream-stream join runs 4 stores x :func:`state_width` partitions),
-    and the r16 re-measure (at 4 x 8) of the r8 "checkpoint I/O is not
-    the cost" claim found the environment had shifted under it — on that
-    host the tempdir write path costs stream_stream_join_attribution ~7.5 s of
-    its 10 s drain (commitTimeMs 9+16 s summed across stores; the SAME
-    drain on /dev/shm: 2.6 s warm, the r11-r14 band). Honors
-    SPARK_GRAFT_SCRATCH_DIR first — a multi-node cluster MUST route
-    scratch through shared storage (catalog.scratch_base contract) and
-    a deployment that wants disk-backed checkpoints sets it explicitly;
-    the fast default only applies single-machine, and only while
-    /dev/shm has ``_SHM_MIN_FREE_BYTES`` free."""
-    explicit = os.environ.get("SPARK_GRAFT_SCRATCH_DIR")
-    if explicit:
-        return explicit
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        st = os.statvfs("/dev/shm")
-        if st.f_bavail * st.f_frsize >= _SHM_MIN_FREE_BYTES:
-            return "/dev/shm"
-    return scratch_base()
-
-
-#: All per-run scratch (stream-source symlink dirs, file-sink output,
-#: checkpoints, upsert snapshots) lives under this one base dir, swept
-#: at interpreter exit — repeated bench/correctness runs no longer
-#: accumulate unbounded parquet + state files in tempdir. Sweeping at
-#: exit (not per query) keeps returned DataFrames readable: they are
-#: lazy over the sink files until the caller finishes collecting.
-#: pid alone is NOT unique once the base can point at SHARED
-#: storage (pids are per-host; two drivers on different nodes can
-#: share one) — and the atexit sweep below would then rmtree another
-#: live run's checkpoints. The uuid component makes the dir
-#: process-unique on any filesystem.
-_SCRATCH_BASE = os.path.join(
-    _stream_scratch_root(),
-    f"mmrs_stream_scratch_{os.getpid()}_{uuid.uuid4().hex[:8]}",
-)
-atexit.register(shutil.rmtree, _SCRATCH_BASE, ignore_errors=True)
-
-
-def _scratch_dir(*parts: str) -> str:
-    d = os.path.join(_SCRATCH_BASE, *parts)
-    os.makedirs(d, exist_ok=True)
-    return d
-
 
 #: Executed-plan report of the most recently driven stream's last
 #: micro-batch (plans.streaming_plan_report). :func:`_drain` refreshes

@@ -249,6 +249,24 @@ def test_session_conf_is_set_only_in_catalog():
     assert bad == [], bad
 
 
+def test_lineage_is_truncated_only_in_catalog():
+    # Where truncated lineage lives (block manager on local masters,
+    # reliable checkpoint files elsewhere) is decided in one place,
+    # catalog.truncate_lineage; a direct checkpoint call elsewhere
+    # would bypass that choice on one kind of master.
+    import ast
+
+    bad = [
+        f"{rel}:{node.lineno}"
+        for rel, node in _package_nodes("mit_map_reduce_spark")
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("localCheckpoint", "checkpoint")
+        and rel != "mit_map_reduce_spark/catalog.py"
+    ]
+    assert bad == [], bad
+
+
 def test_md5_hex_is_read_only_through_the_columns_twin():
     # An md5-hex prefix read as an integer must match bit-for-bit in
     # Spark and in the DuckDB oracles, so the rule lives in one twin

@@ -351,18 +351,26 @@ def test_ivf_centroids_publish_once_and_reuse(spark, sf_dir, tmp_path, monkeypat
     assert os.path.exists(root / tag / _PUBLISH_MARKER)
 
 
-def test_truncated_artifact_probe_passthrough_and_cleanup(spark):
-    """The r15 localCheckpoint lineage truncation must not blind the
-    plan probes (r15 ADVICE): shared_persist stashes the PRE-truncation
-    build frame keyed by the checkpoint RDD id, and
-    unpartitioned_corpus_windows descends through the RDDScanExec leaf
-    into it. clear_shared_caches must also free the checkpoint blocks
-    themselves (they live outside the CacheManager, so plain
-    DataFrame.unpersist() is a no-op on them)."""
+@pytest.mark.parametrize("master", ["local", "cluster"])
+def test_truncated_artifact_probe_passthrough_and_cleanup(spark, monkeypatch, master):
+    """shared_persist truncates an artifact's lineage through
+    catalog.truncate_lineage on every master: a local checkpoint on
+    ``local[...]``, a reliable checkpoint under the run scratch dir
+    elsewhere. Either way the leaf must not blind the plan probes:
+    shared_persist stashes the PRE-truncation build frame keyed by the
+    checkpoint RDD id, and unpartitioned_corpus_windows descends through
+    the RDDScanExec leaf into it. clear_shared_caches must also free
+    the checkpoint blocks themselves (they live outside the
+    CacheManager, so plain DataFrame.unpersist() is a no-op on them)."""
     from pyspark.sql import Window, functions as F
 
     from mit_map_reduce_spark import catalog
     from mit_map_reduce_spark.plans import unpartitioned_corpus_windows
+
+    if master == "cluster":
+        # SparkContext.master is a plain Python attribute: the local JVM
+        # runs the reliable checkpoint a cluster master would get
+        monkeypatch.setattr(spark.sparkContext, "master", "spark://probe:7077")
 
     # a build frame with an unpartitioned scan-rooted window inside —
     # the exact shape the probe exists to flag
@@ -386,13 +394,20 @@ def test_truncated_artifact_probe_passthrough_and_cleanup(spark):
         # truncated: the artifact frame itself is a checkpoint leaf ...
         leaf = art._jdf.queryExecution().executedPlan().toString()
         assert "ExistingRDD" in leaf and "row_number" not in leaf
+        key = (id(spark), "test_probe_passthrough", d)
+        jrdd = catalog._CHECKPOINT_RDDS.get(key)
+        assert jrdd is not None and jrdd.isCheckpointed()
+        # ... held by the block manager locally, in files under the run
+        # scratch dir on a cluster master
+        ck_file = jrdd.getCheckpointFile()
+        if master == "local":
+            assert not ck_file.isDefined()
+        else:
+            assert ck_file.get().startswith(f"file:{catalog.RUN_SCRATCH}/checkpoints/")
         # ... but the probe still sees the window inside the build frame
         consumer = art.groupBy("k").agg(F.max("rn").alias("m"))
         assert len(unpartitioned_corpus_windows(consumer)) == 1
         # checkpoint blocks are tracked and freed on clear
-        key = (id(spark), "test_probe_passthrough", d)
-        jrdd = catalog._CHECKPOINT_RDDS.get(key)
-        assert jrdd is not None
         assert jrdd.id() in catalog._SHARED_BUILD_FRAMES
         catalog.clear_shared_caches()
         assert catalog._CHECKPOINT_RDDS == {}

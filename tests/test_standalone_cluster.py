@@ -34,7 +34,9 @@ pytestmark = pytest.mark.skipif(
 # process separation bites: pickled facade closures (mr_*), shared
 # bucketed/centroid artifacts (rel_bucketed/sim_ann_ivf), streaming
 # checkpoints on shared scratch (stream_*), python-worker Arrow
-# batches (dedup/mm), plain shuffle SQL (rel_q1/graph).
+# batches (dedup/mm), plain shuffle SQL (rel_q1/graph), and the
+# per-round reliable checkpoints a cluster master gives the BFS and
+# MMR loops (graph_bfs_reach/sim_ann_mmr_topk).
 FAMILY_SAMPLE = [
     "mr_udtf_wordcount",
     "rel_q1_pricing_summary",
@@ -47,6 +49,8 @@ FAMILY_SAMPLE = [
     "mm_decode_assets",
     "sketch_hll_union_merge",
     "graph_pagerank_trade",
+    "graph_bfs_reach",
+    "sim_ann_mmr_topk",
     "stream_error_rate_alerts",
     "src_csv_roundtrip_orders",
 ]

@@ -297,13 +297,13 @@ def test_multi_grain_cube_labels_null_data_rows_as_data(spark):
 
 @pytest.mark.parametrize("free_mb, expect_shm", [(64, False), (16 * 1024, True)])
 def test_stream_scratch_needs_free_dev_shm(monkeypatch, free_mb, expect_shm):
-    """Stream scratch goes to /dev/shm only when it has room: with
-    Docker's default 64 MB free it falls back to scratch_base(), where a
-    small tmpfs would otherwise fail writes mid-query."""
+    """Run scratch (stream state, cluster checkpoints) goes to /dev/shm
+    only when it has room: with Docker's default 64 MB free it falls
+    back to scratch_base(), where a small tmpfs would otherwise fail
+    writes mid-query."""
     import os
 
-    from mit_map_reduce_spark.catalog import scratch_base
-    from mit_map_reduce_spark.streaming import queries as sq
+    from mit_map_reduce_spark.catalog import run_scratch_root, scratch_base
 
     if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
         pytest.skip("no writable /dev/shm")
@@ -311,7 +311,7 @@ def test_stream_scratch_needs_free_dev_shm(monkeypatch, free_mb, expect_shm):
     # (bsize, frsize, blocks, bfree, bavail, files, ffree, favail, flag, namemax)
     fake = os.statvfs_result((4096, 4096, 0, 0, free_mb * 256, 0, 0, 0, 0, 255))
     monkeypatch.setattr(os, "statvfs", lambda path: fake)
-    assert sq._stream_scratch_root() == ("/dev/shm" if expect_shm else scratch_base())
+    assert run_scratch_root() == ("/dev/shm" if expect_shm else scratch_base())
 
 
 def _windowed_counts(spark, landing):

@@ -11,7 +11,7 @@ rewrite is a stable re-sort, not a reshuffle.
 Usage:
     python tools/rotate_priority.py          # rewrite __spark_entry__.py
     python tools/rotate_priority.py --check  # exit 1 if a rotation is due
-    python tools/rotate_priority.py --pin-file plans/r16/touched.txt
+    python tools/rotate_priority.py --pin-file touched.txt  # one query per line
 
 Run once at the START of each round, after reading the new
 CORRECTNESS_r{N}.json (the standing rule in SURVEY section 8 and the
